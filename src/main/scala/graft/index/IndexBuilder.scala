@@ -5,6 +5,7 @@ import graft.core.Types._
 import graft.corpus.Corpus
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import scala.collection.mutable.ArrayBuffer
 
 /** Inverted-index build — the engine's `index!` (reference build driver
@@ -55,6 +56,38 @@ object IndexBuilder {
     def hints(snap: Long) = s"$root/hints/snap=$snap"
     def manifest = s"$root/manifest"
     def metrics = s"$root/metrics"
+  }
+
+  /** The schema each sidecar's writer lays down. Every sidecar read
+    * passes it, so no read starts a Parquet schema-inference job
+    * (`shard` is the partition column of postings and norms). Parquet
+    * reads a declared column the files lack as nulls, without error,
+    * so WandSpec checks each against the schema Parquet infers from a
+    * freshly built index.
+    */
+  object Schemas {
+    val postings: StructType = StructType.fromDDL(
+      "shard INT, term STRING, df_local BIGINT, cf_local BIGINT, " +
+        "docs_enc BINARY, tfs_enc BINARY, block_last_doc ARRAY<BIGINT>, " +
+        "block_max_tfn ARRAY<DOUBLE>, block_doc_off ARRAY<INT>, block_tf_off ARRAY<INT>")
+    val norms: StructType = StructType.fromDDL(
+      "shard INT, n_docs BIGINT, docs_enc BINARY, dls_enc BINARY")
+    val termstats: StructType = StructType.fromDDL(
+      "term STRING, df BIGINT, cf BIGINT, idf DOUBLE")
+    val stats: StructType = StructType.fromDDL(
+      "snapshot_id BIGINT, n_docs BIGINT, sum_dl BIGINT, avgdl DOUBLE, " +
+        "num_shards INT, max_doc BIGINT")
+    val hints: StructType = StructType.fromDDL(
+      "term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT")
+  }
+
+  /** Driver-side existence probe through the path's own Hadoop
+    * FileSystem (a local-FS check is always false on hdfs:// or s3a://);
+    * it starts no Spark job.
+    */
+  private[graft] def pathExists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
   /** Hint fan-in per term (see the hints write in [[build]]). */
@@ -554,9 +587,7 @@ object IndexBuilder {
     */
   private def rawManifest(spark: SparkSession, paths: IndexPaths): Seq[ManifestRow] = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(paths.manifest)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
+    if (!pathExists(spark, paths.manifest)) Seq.empty
     else try {
       // manifests persisted before the append-only commit protocol lack
       // commit_seq/full_commit; under the old Overwrite protocol the
@@ -718,22 +749,22 @@ object IndexBuilder {
 
   def loadPostings(spark: SparkSession, indexDir: String, snaps: Seq[Long]): Dataset[PostingList] = {
     import spark.implicits._
-    snaps.map(s => spark.read.parquet(IndexPaths(indexDir).postings(s))
-        .withColumn("shard", col("shard").cast("int")).as[PostingList])
+    snaps.map(s => spark.read.schema(Schemas.postings)
+        .parquet(IndexPaths(indexDir).postings(s)).as[PostingList])
       .reduce(_ union _)
   }
 
   def loadNorms(spark: SparkSession, indexDir: String, snaps: Seq[Long]): Dataset[DocNorms] = {
     import spark.implicits._
-    snaps.map(s => spark.read.parquet(IndexPaths(indexDir).norms(s))
-        .withColumn("shard", col("shard").cast("int")).as[DocNorms])
+    snaps.map(s => spark.read.schema(Schemas.norms)
+        .parquet(IndexPaths(indexDir).norms(s)).as[DocNorms])
       .reduce(_ union _)
   }
 
   def loadStats(spark: SparkSession, indexDir: String, snaps: Seq[Long]): Seq[SnapStats] = {
     import spark.implicits._
-    snaps.flatMap(s =>
-      spark.read.parquet(IndexPaths(indexDir).stats(s)).as[SnapStats].collect())
+    snaps.map(s => spark.read.schema(Schemas.stats).parquet(IndexPaths(indexDir).stats(s)))
+      .reduce(_ union _).as[SnapStats].collect().toSeq
   }
 
   /** The reference's log-growth callbacks scheduler transferred
@@ -859,7 +890,8 @@ object IndexBuilder {
       .partitionBy("shard").parquet(paths.norms(outSnap))
 
     // merged term stats: df/cf add exactly; idf from merged n
-    val ts = inSnaps.map(s => spark.read.parquet(paths.termstats(s)))
+    val ts = inSnaps
+      .map(s => spark.read.schema(Schemas.termstats).parquet(paths.termstats(s)))
       .reduce(_ union _)
       .groupBy("term").agg(sum("df").as("df"), sum("cf").as("cf"))
       .select(col("term"), col("df"), col("cf"),
@@ -873,20 +905,12 @@ object IndexBuilder {
     // merged hints: union the inputs' H-per-term rows, re-top under the
     // merged avgdl (any subset of docs is a sound θ0 witness set — the
     // union just keeps the strongest H). Pre-hints input snapshots have
-    // no sidecar (the query path treats that as "no warm start"); merge
-    // whatever subset exists rather than failing after the postings
-    // were already written.
-    val hintInputs = inSnaps.flatMap { s =>
-      // only "no sidecar" means pre-hints; a corrupt/mis-schemaed
-      // sidecar must fail the merge, not be misread as absent
-      try Some(spark.read.parquet(paths.hints(s)))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if Option(e.getCondition).exists(c =>
-              c.startsWith("PATH_NOT_FOUND") ||
-              c.startsWith("UNABLE_TO_INFER_SCHEMA")) => None
-      }
-    }
+    // no sidecar dir (the query path treats that as "no warm start");
+    // merge whatever subset exists rather than failing after the
+    // postings were already written. A sidecar dir that exists is
+    // read, so a corrupt one fails the merge instead of passing as absent.
+    val hintInputs = inSnaps.map(paths.hints).filter(pathExists(spark, _))
+      .map(spark.read.schema(Schemas.hints).parquet(_))
     if (hintInputs.nonEmpty)
       topHintsPerTerm(hintInputs.reduce(_ union _), avgdl, hintStrategy)
         .write.mode(SaveMode.Overwrite).parquet(paths.hints(outSnap))

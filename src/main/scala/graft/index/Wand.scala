@@ -4,7 +4,7 @@ import graft.core.Types._
 import graft.functions.BM25
 import graft.operators.TopK
 import graft.queries.QuerySet
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
@@ -21,12 +21,17 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Distribution model (the reference's `ParallelExhaustiveSearch`
   * partial/merge, /root/reference/src/parallel-exhaustive.jl:44-62):
-  * segments are sharded by doc range; every shard evaluates WAND for
-  * all queries over its local postings (queries + idf map broadcast),
-  * emits its local top-k, and a final tiny groupBy(query) merge of
-  * bounded heaps produces the global top-k. Scales horizontally in
-  * docs (shards) with no per-query shuffle of scored rows at all —
-  * only k rows per (shard, query) cross the wire.
+  * a call runs in three layers. (1) The driver resolves corpus stats,
+  * per-term df and hint rows from memos; a miss costs one single-stage
+  * scan of the small term sidecars. (2) Segments are sharded by doc
+  * range; one cogroup of postings with norms evaluates WAND for all
+  * queries on every shard (queries + idf map broadcast) and emits each
+  * (shard, query)'s bounded top-k heap with its pruning counters.
+  * (3) The driver collects those heaps — at most shards × queries × k
+  * hits — and merges them per query with [[TopK]], the reference's
+  * caller-side queue merge. Scales horizontally in docs (shards) with
+  * no per-query shuffle of scored rows at all, and the only Spark jobs
+  * a warm call runs are the shard eval's.
   *
   * Rounding discipline: heap order and final ranking use ROUNDED
   * scores ((round(s,4) DESC, doc_id ASC) — identical to the exact path
@@ -53,8 +58,13 @@ object Wand {
     var blocksSkipped = 0L
   }
 
-  /** One shard-local hit before the final per-query merge. */
-  final case class PartialHit(query_id: Int, doc_id: Long, score: Double)
+  /** One shard's answer to one query before the driver-side merge: its
+    * local top-k heap (unordered) and its pruning counters. One row per
+    * (shard, query) that had a cursor in the shard.
+    */
+  final case class ShardHits(query_id: Int, doc_ids: Array[Long],
+      scores: Array[Double], docs_scored: Long, blocks_decoded: Long,
+      blocks_skipped: Long)
 
   /** Posting-list cursor with block-skip seek.
     *
@@ -198,11 +208,10 @@ object Wand {
     }
   }
 
-  /** All queries over one shard: local top-k hits per query. The
-    * pruning counters are reported through `onCost` (once per query
-    * that had any cursor in this shard) — in production that is a Spark
-    * accumulator add, so hits and metrics come out of ONE shard-eval
-    * pass instead of the former lazy-two-views/two-passes shape.
+  /** All queries over one shard: one [[ShardHits]] per query that had
+    * any cursor in this shard, so hits and counters come out of ONE
+    * shard-eval pass. The counters travel in the task's result rows,
+    * not an accumulator, so a retried task cannot double-count them.
     */
   /** @param snapScale per-snapshot Block-Max bound scale
     *   (max(1, merged avgdl / snapshot avgdl) — see [[Cursor]]); keyed
@@ -212,8 +221,7 @@ object Wand {
       norms: Iterator[DocNorms],
       queries: Seq[TermQuery], idfMap: Map[String, Double],
       avgdl: Double, theta0: Map[Int, Double] = Map.empty,
-      onCost: (Int, Costs) => Unit = (_, _) => (),
-      snapScale: Map[Long, Double] = Map.empty): Iterator[PartialHit] = {
+      snapScale: Map[Long, Double] = Map.empty): Iterator[ShardHits] = {
     val byTerm = scala.collection.mutable.HashMap.empty[String, ArrayBuffer[(Long, PostingList)]]
     postings.foreach(sp => byTerm.getOrElseUpdate(sp._2.term, new ArrayBuffer) += sp)
     if (byTerm.isEmpty) return Iterator.empty
@@ -238,25 +246,27 @@ object Wand {
         byTerm.getOrElse(t, ArrayBuffer.empty).map { case (snap, pl) =>
           new Cursor(pl, idfMap(t), cost, snapScale.getOrElse(snap, 1.0))
         }).toArray
-      if (cursors.isEmpty) Iterator.empty
+      if (cursors.isEmpty) None
       else {
         val heap = TopK.empty(q.k)
         wandQuery(cursors, heap, dlAt, avgdl, cost,
           theta0.getOrElse(q.query_id, Double.NegativeInfinity))
-        onCost(q.query_id, cost)
-        TopK.result(heap).iterator.map(h =>
-          PartialHit(q.query_id, h.doc_id, h.score))
+        Some(ShardHits(q.query_id, heap.ids.take(heap.size),
+          heap.scores.take(heap.size), cost.docsScored, cost.blocksDecoded,
+          cost.blocksSkipped))
       }
     }
   }
 
   /** Batch top-k over a built index (possibly several unmerged
     * snapshots — cursors per segment, doc ranges disjoint per term).
-    * Lazy, hits only — no cost machinery in the plan at all.
+    * Eager: runs the shard eval, merges on the driver, and returns a
+    * local frame of `(query_id, rnk, doc_id, score)` rows in
+    * (query_id, rnk) order — at most queries × k rows.
     */
   def topK(spark: SparkSession, indexDir: String, snaps: Seq[Long],
       queries: Seq[TermQuery] = QuerySet.queries): DataFrame =
-    hitsPlan(spark, indexDir, snaps, queries, useHints = true, costAcc = None)
+    topKWithMetrics(spark, indexDir, snaps, queries)._1
 
   /** θ warm-start from the hints sidecar (the reference's hints role,
     * /root/reference/src/searchgraph/hints.jl:42-264): sum each hint
@@ -264,125 +274,16 @@ object Wand {
     * avgdl), round onto the score grid, and take the k-th largest —
     * a certified lower bound on the k-th best final score, since every
     * true score only ADDS non-negative contributions to the partial.
-    * O(H·|terms|) driver work per query; empty map for pre-hints
-    * indexes (backward compatible).
+    * O(H·|terms|) driver work per query; −∞ (no warm start) for a query
+    * with fewer than k hint docs, always so on a pre-hints index.
     */
-  /** Per-(index, snapshot set, term) hint-row memo: hints are immutable
-    * per snapshot, so each term's rows are fetched from parquet AT MOST
-    * once per JVM — repeated single-query calls (the p50/p99 path) pay
-    * ZERO extra jobs after their terms are warm. Terms with no hints
-    * memoize an empty array so absent terms don't re-trigger reads.
-    * Memory is bounded by (distinct queried terms) × H, not vocabulary.
-    */
-  private val hintsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), Array[(Long, Long, Long)]]
-  /** (indexDir, snaps) whose hints sidecar is absent (pre-hints index). */
-  private val noHints = scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
-
-  /** Snapshot stats and per-term global df, memoized with the same
-    * immutable-per-snapshot argument as the hints: a sealed snapshot's
-    * stats/termstats never change, so the repeated-single-query path
-    * (latency p50/p99) runs ZERO driver-side parquet jobs once its
-    * terms are warm — only the shard-eval cogroup itself.
-    */
-  private val statsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Seq[IndexBuilder.SnapStats]]
-  private val dfMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), Option[Long]]
-
-  /** Drop every memo entry for `indexDir`. The memos assume a sealed
-    * snapshot never changes at its path; [[IndexBuilder.build]] /
-    * [[IndexBuilder.mergeSnapshots]] CAN overwrite one in place
-    * (SaveMode.Overwrite, resume, re-merge), so they call this at
-    * commit time — otherwise a same-JVM rebuild would silently serve
-    * stale avgdl/idf/hints and score wrong with no error.
-    */
-  def invalidate(indexDir: String): Unit = {
-    hintsMemo.keys.filter(_._1 == indexDir).foreach(hintsMemo.remove)
-    noHints.keys.filter(_._1 == indexDir).foreach(noHints.remove)
-    statsMemo.keys.filter(_._1 == indexDir).foreach(statsMemo.remove)
-    dfMemo.keys.filter(_._1 == indexDir).foreach(dfMemo.remove)
-  }
-
-  private def cachedStats(spark: SparkSession, indexDir: String,
-      snaps: Seq[Long]): Seq[IndexBuilder.SnapStats] = {
-    val sk = snaps.sorted.mkString(",")
-    statsMemo.getOrElseUpdate((indexDir, sk),
-      IndexBuilder.loadStats(spark, indexDir, snaps))
-  }
-
-  /** Global df for the given terms (summed across snapshots); None =
-    * the term occurs nowhere (kept out of the idf map, as before).
-    */
-  private def cachedDf(spark: SparkSession, indexDir: String, snaps: Seq[Long],
-      terms: Seq[String]): Map[String, Long] = {
-    val sk = snaps.sorted.mkString(",")
-    val missing = terms.filter(t => !dfMemo.contains((indexDir, sk, t)))
-    if (missing.nonEmpty) {
-      val found = snaps
-        .map(s => spark.read.parquet(IndexBuilder.IndexPaths(indexDir).termstats(s)))
-        .reduce(_ union _)
-        .filter(col("term").isin(missing: _*))
-        .groupBy("term").agg(sum("df").as("df"))
-        .collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-        .toMap
-      missing.foreach(t => dfMemo.put((indexDir, sk, t), found.get(t)))
-    }
-    terms.flatMap(t => dfMemo.get((indexDir, sk, t)).flatten.map(t -> _)).toMap
-  }
-
-  private def hintRows(spark: SparkSession, indexDir: String, snaps: Seq[Long],
-      terms: Seq[String]): Map[String, Array[(Long, Long, Long)]] = {
-    val sk = snaps.sorted.mkString(",")
-    if (noHints.contains((indexDir, sk))) return Map.empty
-    val missing = terms.filter(t => !hintsMemo.contains((indexDir, sk, t)))
-    if (missing.nonEmpty) {
-      try {
-        val fetched = snaps.map(s =>
-            spark.read.parquet(IndexBuilder.IndexPaths(indexDir).hints(s)))
-          .reduce(_ union _)
-          .filter(col("term").isin(missing: _*))
-          .select("term", "doc_id", "tf", "dl").distinct()
-          .collect()
-          .map(r => (r.getString(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
-          .groupBy(_._1)
-        missing.foreach { t =>
-          hintsMemo.put((indexDir, sk, t), fetched.getOrElse(t, Array.empty).map(_._2))
-        }
-      } catch {
-        // ONLY the expected missing-sidecar case (pre-hints index) may
-        // latch noHints; any OTHER analysis failure — schema drift, a
-        // corrupt footer — must propagate, not silently disable the θ
-        // warm-start for the rest of the JVM (same narrowing as
-        // IndexBuilder.rawManifest)
-        case e: org.apache.spark.sql.AnalysisException
-            if Option(e.getCondition).exists(c =>
-              c.startsWith("PATH_NOT_FOUND") ||
-              c.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
-          System.err.println(s"[graft] no hints sidecar for $indexDir " +
-            s"snaps=$sk (${e.getCondition}) — θ warm-start disabled")
-          noHints.put((indexDir, sk), ()); return Map.empty
-        case e: java.io.FileNotFoundException =>
-          System.err.println(s"[graft] no hints sidecar for $indexDir " +
-            s"snaps=$sk (FileNotFoundException) — θ warm-start disabled")
-          noHints.put((indexDir, sk), ()); return Map.empty
-      }
-    }
-    terms.flatMap(t => hintsMemo.get((indexDir, sk, t)).map(t -> _)).toMap
-  }
-
-  private def hintThetas(spark: SparkSession, indexDir: String, snaps: Seq[Long],
-      queries: Seq[TermQuery], idfMap: Map[String, Double],
-      avgdl: Double): Map[Int, Double] = {
-    val qTerms = queries.flatMap(_.terms).distinct
-    val byTerm = hintRows(spark, indexDir, snaps, qTerms)
-    if (byTerm.isEmpty) return Map.empty
+  private def hintThetas(queries: Seq[TermQuery], info: Map[String, TermInfo],
+      idfMap: Map[String, Double], avgdl: Double): Map[Int, Double] =
     queries.map { q =>
       val perDoc = scala.collection.mutable.HashMap.empty[Long, Double]
       q.terms.distinct.foreach { t =>
-        (idfMap.get(t), byTerm.get(t)) match {
-          case (Some(idf), Some(hs)) => hs.foreach { case (doc, tf, dl) =>
+        (idfMap.get(t), info.get(t)) match {
+          case (Some(idf), Some(ti)) => ti.hints.foreach { case (doc, tf, dl) =>
             perDoc(doc) = perDoc.getOrElse(doc, 0.0) + idf * BM25.tfNorm(tf, dl, avgdl)
           }
           case _ =>
@@ -392,57 +293,152 @@ object Wand {
       val t0 = if (lower.length >= q.k) lower(q.k - 1) else Double.NegativeInfinity
       q.query_id -> t0
     }.toMap
+
+  /** What the termstats and hints sidecars of a snapshot set say about
+    * one term: its global df summed over the snapshots (None = the term
+    * occurs nowhere, so it stays out of the idf map) and its distinct
+    * hint rows `(doc_id, tf, dl)` (empty on a pre-hints index).
+    */
+  private final case class TermInfo(df: Option[Long], hints: Array[(Long, Long, Long)])
+
+  /** Per-(index, snapshot set, term) memo of [[TermInfo]]: a sealed
+    * snapshot's termstats and hints never change, so each term is read
+    * from parquet AT MOST once per JVM — a call whose terms are warm
+    * (the repeated-single-query path) runs no driver-side Spark job.
+    * Terms absent from the index memoize too, so they don't re-trigger
+    * reads. Memory is bounded by (distinct queried terms) × H, not by
+    * the vocabulary.
+    */
+  private val termMemo =
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), TermInfo]
+  /** (indexDir, snaps) whose hints sidecar is absent (pre-hints index). */
+  private val noHints = scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
+
+  /** Snapshot stats, memoized per (index, snapshot set) with the same
+    * immutable-per-snapshot argument as [[termMemo]].
+    */
+  private val statsMemo =
+    scala.collection.concurrent.TrieMap.empty[(String, String), Seq[IndexBuilder.SnapStats]]
+
+  /** Drop every memo entry for `indexDir`. The memos assume a sealed
+    * snapshot never changes at its path; [[IndexBuilder.build]] /
+    * [[IndexBuilder.mergeSnapshots]] CAN overwrite one in place
+    * (SaveMode.Overwrite, resume, re-merge), so they call this at
+    * commit time — otherwise a same-JVM rebuild would silently serve
+    * stale avgdl/idf/hints and score wrong with no error.
+    */
+  def invalidate(indexDir: String): Unit = {
+    termMemo.keys.filter(_._1 == indexDir).foreach(termMemo.remove)
+    noHints.keys.filter(_._1 == indexDir).foreach(noHints.remove)
+    statsMemo.keys.filter(_._1 == indexDir).foreach(statsMemo.remove)
+  }
+
+  /** Has the θ warm-start been latched off for this snapshot set? */
+  private[graft] def hintsDisabled(indexDir: String, snaps: Seq[Long]): Boolean =
+    noHints.contains((indexDir, snaps.sorted.mkString(",")))
+
+  private def cachedStats(spark: SparkSession, indexDir: String,
+      snaps: Seq[Long]): Seq[IndexBuilder.SnapStats] = {
+    val sk = snaps.sorted.mkString(",")
+    statsMemo.getOrElseUpdate((indexDir, sk),
+      IndexBuilder.loadStats(spark, indexDir, snaps))
+  }
+
+  /** [[TermInfo]] for the given terms. The terms the memo lacks are
+    * fetched by ONE single-stage scan: a union of every snapshot's
+    * termstats and hints sidecars under the term filter (pushed to
+    * parquet row groups), with no shuffle. The driver sums df and
+    * de-duplicates the hint rows. A snapshot set with a hints dir
+    * missing is latched in [[noHints]] by a driver-side file-system
+    * check before the scan is built, and its scans read termstats only.
+    */
+  private def termInfo(spark: SparkSession, indexDir: String, snaps: Seq[Long],
+      terms: Seq[String]): Map[String, TermInfo] = {
+    val sk = snaps.sorted.mkString(",")
+    val missing = terms.filter(t => !termMemo.contains((indexDir, sk, t)))
+    if (missing.nonEmpty) {
+      import IndexBuilder.Schemas
+      val paths = IndexBuilder.IndexPaths(indexDir)
+      if (!noHints.contains((indexDir, sk)) &&
+          !snaps.forall(s => IndexBuilder.pathExists(spark, paths.hints(s)))) {
+        System.err.println(s"[graft] no hints sidecar for $indexDir " +
+          s"snaps=$sk — θ warm-start disabled")
+        noHints.put((indexDir, sk), ())
+      }
+      val none = lit(null).cast("long")
+      val dfRows = snaps.map(s =>
+        spark.read.schema(Schemas.termstats).parquet(paths.termstats(s))
+          .select(col("term"), col("df"), none.as("doc_id"), none.as("tf"), none.as("dl")))
+      val hintRows =
+        if (noHints.contains((indexDir, sk))) Nil
+        else snaps.map(s => spark.read.schema(Schemas.hints).parquet(paths.hints(s))
+          .select(col("term"), none.as("df"), col("doc_id"), col("tf"), col("dl")))
+      val byTerm = (dfRows ++ hintRows).reduce(_ union _)
+        .filter(col("term").isin(missing: _*))
+        .collect()
+        .groupBy(_.getString(0))
+      missing.foreach { t =>
+        val rs = byTerm.getOrElse(t, Array.empty[Row])
+        val dfs = rs.filter(!_.isNullAt(1)).map(_.getLong(1))
+        val hints = rs.filter(!_.isNullAt(2))
+          .map(r => (r.getLong(2), r.getLong(3), r.getLong(4))).distinct
+        termMemo.put((indexDir, sk, t),
+          TermInfo(if (dfs.isEmpty) None else Some(dfs.sum), hints))
+      }
+    }
+    terms.flatMap(t => termMemo.get((indexDir, sk, t)).map(t -> _)).toMap
   }
 
   /** [[topK]] plus the per-query cost metrics
     * `(query_id, docs_scored, blocks_decoded, blocks_skipped)` summed
     * over shards — the production observable for WAND pruning (the
-    * reference's `costdist`/`costblk`). Counters flow through a
-    * CollectionAccumulator filled by the SAME shard-eval tasks that
-    * produce the hits, so ONE action drives both: the hits are
-    * collected eagerly here (they are ≤ queries×k rows by construction)
-    * and both returned frames are small local DataFrames. Accumulator
-    * caveat: a retried shard task could double-add its counter row —
-    * acceptable for an observability channel (the hits stay exactly
-    * correct), and impossible to observe under local[n].
+    * reference's `costdist`/`costblk`). Both come from ONE collect of
+    * the [[shardEval]] rows (≤ shards × queries rows of ≤ k hits); the
+    * driver merges each query's shard heaps with [[TopK]] and sums its
+    * counters. Both returned frames are small local DataFrames, hits
+    * in (query_id, rnk) order and metrics in query_id order.
     */
   def topKWithMetrics(spark: SparkSession, indexDir: String, snaps: Seq[Long],
       queries: Seq[TermQuery] = QuerySet.queries,
       useHints: Boolean = true): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val acc = spark.sparkContext
-      .collectionAccumulator[(Int, Long, Long, Long)]("graft.wand.cost")
-    val hits = hitsPlan(spark, indexDir, snaps, queries, useHints, Some(acc))
-    val hitRows = hits.collect() // the ONE action — fills acc as it runs
-    val hitsDf = spark.createDataFrame(
-      java.util.Arrays.asList(hitRows: _*), hits.schema)
-    import scala.jdk.CollectionConverters._
-    val metricsDf = acc.value.asScala.toSeq
-      .groupBy(_._1).toSeq
-      .map { case (q, rs) =>
-        (q, rs.map(_._2).sum, rs.map(_._3).sum, rs.map(_._4).sum)
-      }
-      .sortBy(_._1)
-      .toDF("query_id", "docs_scored", "blocks_decoded", "blocks_skipped")
-    (hitsDf, metricsDf)
+    val kById = queries.groupMapReduce(_.query_id)(_.k)((first, _) => first)
+    val byQuery = shardEval(spark, indexDir, snaps, queries, useHints).collect()
+      .groupBy(_.query_id).toSeq.sortBy(_._1)
+    val hits = byQuery.flatMap { case (qid, parts) =>
+      val heap = TopK.empty(kById(qid))
+      parts.foreach(p => p.doc_ids.indices.foreach(i =>
+        TopK.insert(heap, p.doc_ids(i), p.scores(i))))
+      TopK.result(heap).zipWithIndex.map { case (h, i) => QueryHit(qid, i + 1, h.doc_id, h.score) }
+    }
+    val metrics = byQuery.map { case (qid, parts) =>
+      (qid, parts.map(_.docs_scored).sum, parts.map(_.blocks_decoded).sum,
+        parts.map(_.blocks_skipped).sum)
+    }
+    (hits.toDF(),
+      metrics.toDF("query_id", "docs_scored", "blocks_decoded", "blocks_skipped"))
   }
 
-  private def hitsPlan(spark: SparkSession, indexDir: String, snaps: Seq[Long],
-      queries: Seq[TermQuery], useHints: Boolean,
-      costAcc: Option[org.apache.spark.util.CollectionAccumulator[(Int, Long, Long, Long)]])
-      : DataFrame = {
+  /** The shard-eval plan (lazy): the driver-side stats/df/hints
+    * resolution runs here, then one cogroup of the term-filtered
+    * postings with the norms evaluates every query on every shard. It
+    * is the only distributed part of a call.
+    */
+  private[graft] def shardEval(spark: SparkSession, indexDir: String,
+      snaps: Seq[Long], queries: Seq[TermQuery] = QuerySet.queries,
+      useHints: Boolean = true): Dataset[ShardHits] = {
     import spark.implicits._
     val stats = cachedStats(spark, indexDir, snaps)
     val nDocs = stats.map(_.n_docs).sum
     val avgdl = stats.map(_.sum_dl).sum.toDouble / nDocs
     val qTerms = queries.flatMap(_.terms).distinct
-    // global idf for the query terms only: tiny agg + driver map +
-    // broadcast, memoized per (index, snaps, term)
+    // global idf for the query terms only: memoized df + driver map +
+    // broadcast
+    val info = termInfo(spark, indexDir, snaps, qTerms)
     val idfMap: Map[String, Double] =
-      cachedDf(spark, indexDir, snaps, qTerms)
-        .map { case (t, df) => t -> BM25.idf(nDocs, df) }
+      info.flatMap { case (t, ti) => ti.df.map(df => t -> BM25.idf(nDocs, df)) }
     val theta0 =
-      if (useHints) hintThetas(spark, indexDir, snaps, queries, idfMap, avgdl)
+      if (useHints) hintThetas(queries, info, idfMap, avgdl)
       else Map.empty[Int, Double]
     // per-snapshot Block-Max bound scale (see Cursor): sealed maxima
     // are tight under their own avgdl; a merged avgdl above it needs
@@ -454,47 +450,34 @@ object Wand {
     // postings tagged with their source snapshot (per-snapshot read so
     // the term filter still pushes down to parquet row groups)
     val posts = snaps.map { s =>
-      spark.read.parquet(IndexBuilder.IndexPaths(indexDir).postings(s))
-        .withColumn("shard", col("shard").cast("int"))
+      spark.read.schema(IndexBuilder.Schemas.postings)
+        .parquet(IndexBuilder.IndexPaths(indexDir).postings(s))
         .filter(col("term").isin(qTerms: _*)) // pushed to parquet row groups
         .as[PostingList]
         .map(pl => (s, pl))
     }.reduce(_ union _)
     val norms = IndexBuilder.loadNorms(spark, indexDir, snaps)
 
-    val partial = posts.groupByKey(_._2.shard)
+    posts.groupByKey(_._2.shard)
       .cogroup(norms.groupByKey(_.shard)) { (_, pIt, nIt) =>
         val (qs, idf, ad, t0, sc) = bc.value
-        evalShard(pIt, nIt, qs, idf, ad, t0,
-          (qid, c) => costAcc.foreach(
-            _.add((qid, c.docsScored, c.blocksDecoded, c.blocksSkipped))),
-          sc)
+        evalShard(pIt, nIt, qs, idf, ad, t0, sc)
       }
-    val merged = partial
-      .groupByKey(_.query_id).flatMapGroups { (qid, hits) =>
-        val k = bc.value._1.find(_.query_id == qid).map(_.k).getOrElse(QuerySet.K)
-        val heap = hits.foldLeft(TopK.empty(k)) { (h, r) => TopK.insert(h, r.doc_id, r.score) }
-        TopK.result(heap).zipWithIndex.map { case (h, i) => QueryHit(qid, i + 1, h.doc_id, h.score) }
-      }
-    merged.toDF()
-      .select(col("query_id").cast("int"), col("rnk").cast("int"),
-        col("doc_id").cast("long"), col("score").cast("double"))
-      .orderBy("query_id", "rnk")
   }
 
-  /** Temp-index scope for the registry entries: `f` must end in
-    * [[localizedResult]] (which owns success-path cleanup); this wrapper
-    * covers the FAILURE path — a build that throws before
-    * localizedResult is reached must not strand a partially written
-    * index in /tmp (a bench loop retrying the op would fill the disk).
+  /** Temp-index scope for the registry entries: `f` returns a local
+    * frame ([[topK]]), so the index is deleted — and its memos dropped
+    * — on success and failure alike. A build that throws must not
+    * strand a partially written index in /tmp (a bench loop retrying
+    * the op would fill the disk), and the registry index queries build
+    * a throwaway index per call.
     */
   private def withTempIndex(prefix: String)(f: String => DataFrame): DataFrame = {
     val idx = java.nio.file.Files.createTempDirectory(prefix).toString
     try f(idx)
-    catch { case t: Throwable =>
+    finally {
       graft.operators.StreamingOps.deleteRec(idx)
       invalidate(idx)
-      throw t
     }
   }
 
@@ -505,19 +488,7 @@ object Wand {
   def topKOnCorpus(spark: SparkSession, sfDir: String, numShards: Int = 4): DataFrame =
     withTempIndex("graft-index-") { idx =>
       IndexBuilder.build(spark, sfDir, idx, numShards)
-      localizedResult(topK(spark, idx, Seq(1L)), idx)
-    }
-
-  /** Pin a small result locally, then delete the temp index dirs backing
-    * it — the registry index queries build a throwaway index per call
-    * and used to leave it in /tmp forever (same cleanup contract as the
-    * streaming registry queries).
-    */
-  private def localizedResult(df: DataFrame, dirs: String*): DataFrame =
-    try graft.operators.StreamingOps.localized(df)
-    finally {
-      graft.operators.StreamingOps.deleteRec(dirs: _*)
-      dirs.foreach(invalidate)
+      topK(spark, idx, Seq(1L))
     }
 
   /** Registry entry for the NORTH-RULE INGEST SHAPE: the corpus arrives
@@ -542,7 +513,7 @@ object Wand {
           graft.corpus.Extractor.extractTextCol(col("html")).as("text"))
       IndexBuilder.build(spark, sfDir, idx, numShards,
         docsOverride = Some(docsFromPages))
-      localizedResult(topK(spark, idx, Seq(1L)), idx)
+      topK(spark, idx, Seq(1L))
     }
 
   /** Registry entry for the LOG-STRUCTURED MERGE (the reference's
@@ -564,7 +535,7 @@ object Wand {
       IndexBuilder.build(spark, sfDir, idx, numShards, snapshotId = 2L,
         parentSnapshot = 1L, docIdRange = Some((mid, maxDoc + 1)))
       IndexBuilder.mergeSnapshots(spark, idx, Seq(1L, 2L), outSnap = 3L, numShards)
-      localizedResult(topK(spark, idx, Seq(3L)), idx)
+      topK(spark, idx, Seq(3L))
     }
 
   /** Registry entry for the [[IndexBuilder.EpsilonNetHints]] strategy
@@ -579,7 +550,7 @@ object Wand {
     withTempIndex("graft-index-eps-") { idx =>
       IndexBuilder.build(spark, sfDir, idx, numShards,
         hintStrategy = IndexBuilder.EpsilonNetHints())
-      localizedResult(topK(spark, idx, Seq(1L)), idx)
+      topK(spark, idx, Seq(1L))
     }
 
   /** Registry entry for the log-growth callbacks scheduler
@@ -616,7 +587,7 @@ object Wand {
         parentSnapshot = 1L, docIdRange = Some((mid, maxDoc + 1)))
       val snaps = IndexBuilder.snapshotsAsOf(spark, idx, commitSeq = 1L)
       require(snaps == Seq(1L), s"as-of commit 1 must see snapshot 1 only: $snaps")
-      localizedResult(topK(spark, idx, snaps), idx)
+      topK(spark, idx, snaps)
     }
 
   def topKOnScheduledIngest(spark: SparkSession, sfDir: String,
@@ -638,6 +609,6 @@ object Wand {
           live = Seq(out); out += 1
         } else live = live :+ snap
       }
-      localizedResult(topK(spark, idx, live), idx)
+      topK(spark, idx, live)
     }
 }

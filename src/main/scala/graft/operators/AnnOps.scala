@@ -839,7 +839,7 @@ object AnnOps {
       val dir = java.nio.file.Files.createTempDirectory("graft-tune-floor-").toString
       IndexBuilder.build(spark, sfDir, dir, numShards = 4,
         pruneTfnFloor = if (floor > 0) Some(floor) else None)
-      val hits = Wand.topK(spark, dir, Seq(1L), queries).cache()
+      val hits = Wand.topK(spark, dir, Seq(1L), queries)
       val recall = macrorecall(gold,
         hits.select(col("query_id").cast("long").as("vec_id"),
           col("doc_id").as("nbr_id")), k)
@@ -848,9 +848,9 @@ object AnnOps {
       val radius = hits.groupBy("query_id").agg(min("score").as("kth"))
         .agg(avg(-col("kth"))).head().getDouble(0)
       // absolute surviving postings (df summed over the sealed index)
-      val postings = spark.read.parquet(IndexBuilder.IndexPaths(dir).termstats(1L))
+      val postings = spark.read.schema(IndexBuilder.Schemas.termstats)
+        .parquet(IndexBuilder.IndexPaths(dir).termstats(1L))
         .agg(sum("df")).head().getLong(0)
-      hits.unpersist()
       graft.operators.StreamingOps.deleteRec(dir)
       Wand.invalidate(dir)
       (floor, recall, radius, postings)

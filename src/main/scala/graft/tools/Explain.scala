@@ -27,7 +27,8 @@ object Explain {
     show("q02_topk_agg", graft.operators.TopKSearch.topK(spark, sf))
     val ix = java.nio.file.Files.createTempDirectory("graft-explain-").toString
     IndexBuilder.build(spark, sf, ix, numShards = 4)
-    show("q03_wand_query", Wand.topK(spark, ix, Seq(1L)))
+    // a WAND call's only distributed part: the driver merges its rows
+    show("q03_wand_query", Wand.shardEval(spark, ix, Seq(1L)).toDF())
     show("q04_allknn", graft.operators.VectorOps.allKnn(spark, sf))
     show("q10_rerank", graft.operators.VectorOps.rerank(spark, sf))
     show("q13_jaccard", graft.operators.TextOps.jaccardPairs(spark, sf))

@@ -2,9 +2,12 @@ package graft
 
 import graft.core.Types.TermQuery
 import graft.index.{IndexBuilder, Wand}
-import graft.operators.ExactSearch
+import graft.operators.{ExactSearch, StreamingOps}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.collection.mutable.ArrayBuffer
 import scala.util.Random
 
 /** Rank-identity of the Block-Max WAND fast path against the
@@ -13,15 +16,55 @@ import scala.util.Random
   * (query_id, rnk, doc_id, score) equality, since exact block maxima
   * make WAND rank-exact (SURVEY.md §7.3).
   */
-class WandSpec extends AnyFunSuite {
+class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Int, Int, Long, Double)] =
     df.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
 
+  /** Temp dirs this suite creates; deleted (and their memos dropped)
+    * once it ends.
+    */
+  private val dirs = ArrayBuffer.empty[String]
+  private def tmp(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toString
+    dirs += d
+    d
+  }
+  override def afterAll(): Unit = {
+    dirs.foreach(Wand.invalidate)
+    StreamingOps.deleteRec(dirs.toSeq: _*)
+  }
+
   private lazy val indexDir: String = {
-    val d = Files.createTempDirectory("graft-wand-").toString
+    val d = tmp("graft-wand-")
     IndexBuilder.build(TestSpark.spark, TestSpark.Sf0001, d, numShards = 4)
     d
+  }
+
+  /** Exact top-k of `qs` (each at its own k) over the corpus in `sfDir`. */
+  private def exactRows(sfDir: String, qs: Seq[TermQuery]): Seq[(Int, Int, Long, Double)] = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val kById = qs.map(q => q.query_id -> q.k).toMap
+    rows(ExactSearch.topK(spark, sfDir, k = qs.map(_.k).max, queryTerms =
+      qs.flatMap(q => q.terms.map(t => (q.query_id, t))).toDF("query_id", "term")))
+      .filter { case (qid, rnk, _, _) => rnk <= kById(qid) }
+  }
+
+  /** `f`'s result and the number of Spark jobs it started. */
+  private def withJobCount[A](f: => A): (A, Int) = {
+    val sc = TestSpark.spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc) // earlier work's events
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      org.apache.spark.TestListenerBus.drain(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("WAND ≡ exact on the fixed query set (sf0.001)") {
@@ -57,7 +100,7 @@ class WandSpec extends AnyFunSuite {
 
   test("WAND ≡ exact with MULTI-BLOCK posting lists (sf0.01, 1 shard → ~4 blocks/list)") {
     val spark = TestSpark.spark
-    val d = Files.createTempDirectory("graft-wand-blocks-").toString
+    val d = tmp("graft-wand-blocks-")
     IndexBuilder.build(spark, TestSpark.Sf001, d, numShards = 1)
     val exact = rows(ExactSearch.topK(spark, TestSpark.Sf001))
     val wand = rows(Wand.topK(spark, d, Seq(1L)))
@@ -83,13 +126,13 @@ class WandSpec extends AnyFunSuite {
     // across ~35 undecoded blocks — the skip the counters must observe.
     // (The sf fixtures have no term rare enough: min df ≈ 250 ⇒ pivot
     // gaps of ~20 docs never cross a 128-entry block boundary.)
-    val corpusDir = Files.createTempDirectory("graft-cost-corpus-").toString
+    val corpusDir = tmp("graft-cost-corpus-")
     val needles = Set(100L, 200L, 300L, 4900L)
     val base = "hay wheat barley rye oat corn spelt millet"
     (0L until 5000L).map(i => (i, if (needles(i)) s"needle $base" else base))
       .toDF("doc_id", "text")
       .repartition(4).write.parquet(s"$corpusDir/documents.parquet")
-    val d = Files.createTempDirectory("graft-wand-cost-").toString
+    val d = tmp("graft-wand-cost-")
     IndexBuilder.build(spark, corpusDir, d, numShards = 1)
     val qs = Seq(TermQuery(900, Seq("needle", "hay"), 3))
     val (hits, metrics) = Wand.topKWithMetrics(spark, d, Seq(1L), qs)
@@ -122,13 +165,13 @@ class WandSpec extends AnyFunSuite {
     // selective corpus (one rare + one universal term): the hint bound
     // is ≈ the needle score, so the hay prefix is never scored at all
     import spark.implicits._
-    val corpusDir = Files.createTempDirectory("graft-hints-corpus-").toString
+    val corpusDir = tmp("graft-hints-corpus-")
     val needles = Set(100L, 200L, 300L, 4900L)
     val base = "hay wheat barley rye oat corn spelt millet"
     (0L until 5000L).map(i => (i, if (needles(i)) s"needle $base" else base))
       .toDF("doc_id", "text")
       .repartition(4).write.parquet(s"$corpusDir/documents.parquet")
-    val d = Files.createTempDirectory("graft-hints-ix-").toString
+    val d = tmp("graft-hints-ix-")
     IndexBuilder.build(spark, corpusDir, d, numShards = 1)
     val qs = Seq(TermQuery(901, Seq("needle", "hay"), 3))
     val (selOn, selMOn) = Wand.topKWithMetrics(spark, d, Seq(1L), qs, useHints = true)
@@ -162,7 +205,7 @@ class WandSpec extends AnyFunSuite {
       Seq(1L, 2L, 3L, 4L), "pad must refill uniform-profile terms to H")
 
     val strat = IndexBuilder.EpsilonNetHints()
-    val d = Files.createTempDirectory("graft-hints-eps-").toString
+    val d = tmp("graft-hints-eps-")
     IndexBuilder.build(spark, TestSpark.Sf0001, d, numShards = 4,
       hintStrategy = strat)
     // sidecar shape: ≤H distinct witnesses per term
@@ -192,8 +235,8 @@ class WandSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val strat = IndexBuilder.RandomWitnessHints()
-    val d1 = Files.createTempDirectory("graft-hints-rnd1-").toString
-    val d2 = Files.createTempDirectory("graft-hints-rnd2-").toString
+    val d1 = tmp("graft-hints-rnd1-")
+    val d2 = tmp("graft-hints-rnd2-")
     IndexBuilder.build(spark, TestSpark.Sf0001, d1, numShards = 4, hintStrategy = strat)
     IndexBuilder.build(spark, TestSpark.Sf0001, d2, numShards = 2, hintStrategy = strat)
     def sidecar(d: String): Map[(String, Long), (Long, Long)] =
@@ -206,7 +249,7 @@ class WandSpec extends AnyFunSuite {
     assert(s1 == sidecar(d2), "random witness sample must be seed-deterministic")
     assert(s1.nonEmpty)
     // a different seed picks a different sample (the hash actually ranks)
-    val d3 = Files.createTempDirectory("graft-hints-rnd3-").toString
+    val d3 = tmp("graft-hints-rnd3-")
     IndexBuilder.build(spark, TestSpark.Sf0001, d3, numShards = 4,
       hintStrategy = IndexBuilder.RandomWitnessHints(seed = 7L))
     assert(sidecar(d3) != s1, "different seed must sample differently")
@@ -233,7 +276,7 @@ class WandSpec extends AnyFunSuite {
     val exact = rows(Wand.topK(spark, indexDir, Seq(1L)))
       .groupBy(_._1).map { case (q, hs) => q -> hs.map(_._3).toSet }
     val full = postingsCount(indexDir)
-    val d = Files.createTempDirectory("graft-wand-pruned-").toString
+    val d = tmp("graft-wand-pruned-")
     IndexBuilder.build(spark, TestSpark.Sf0001, d, numShards = 4,
       pruneTfnFloor = Some(1.05))
     val pruned = postingsCount(d)
@@ -281,7 +324,7 @@ class WandSpec extends AnyFunSuite {
 
   test("multi-snapshot (unmerged segments) query ≡ single-snapshot query") {
     val spark = TestSpark.spark
-    val d = Files.createTempDirectory("graft-wand-multi-").toString
+    val d = tmp("graft-wand-multi-")
     IndexBuilder.build(spark, TestSpark.Sf0001, d, 4, snapshotId = 1L,
       docIdRange = Some((0L, 250L)))
     IndexBuilder.build(spark, TestSpark.Sf0001, d, 4, snapshotId = 2L,
@@ -301,7 +344,7 @@ class WandSpec extends AnyFunSuite {
     // blocks holding true top-k docs from the short-doc snapshot.
     val spark = TestSpark.spark
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-wand-skew-corpus-").toString
+    val dir = tmp("graft-wand-skew-corpus-")
     val filler = (1 to 120).map(i => s"filler$i").mkString(" ")
     val docs = (0L until 200L).map { id =>
       if (id == 99L) (id, "alpha alpha alpha beta")        // the true #1, LAST in the list
@@ -309,7 +352,7 @@ class WandSpec extends AnyFunSuite {
       else (id, s"alpha gamma $filler")                    // long docs drown alpha's tfn
     }
     docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val d = Files.createTempDirectory("graft-wand-skew-ix-").toString
+    val d = tmp("graft-wand-skew-ix-")
     IndexBuilder.build(spark, dir, d, 2, snapshotId = 1L, docIdRange = Some((0L, 100L)))
     IndexBuilder.build(spark, dir, d, 2, snapshotId = 2L, docIdRange = Some((100L, 10000L)))
     // k=2: the heap fills with uniform-score early docs, θ rises above
@@ -324,6 +367,87 @@ class WandSpec extends AnyFunSuite {
       "fixture must place doc 99 at rank 1 for the k=2 query")
     val wand = rows(Wand.topK(spark, d, Seq(1L, 2L), qs))
     assert(wand == exact, "skewed-avgdl multi-snapshot WAND diverged from exact")
-    graft.operators.StreamingOps.deleteRec(dir, d)
+  }
+
+  test("a warm single query runs ≤ 3 Spark jobs, a query of never-seen terms ≤ 4; both rank-exact") {
+    val spark = TestSpark.spark
+    // fresh memos for this index: the first call warms the snapshot
+    // stats and its own terms
+    Wand.invalidate(indexDir)
+    val warm = TermQuery(800, Seq("spark", "join", "the"), 10)
+    Wand.topK(spark, indexDir, Seq(1L), Seq(warm)).collect()
+    val (warmRows, warmJobs) =
+      withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(warm))))
+    // memo miss: one scan of the term sidecars, then the shard eval
+    val cold = TermQuery(801, Seq("window", "vector", "zzz_never_seen"), 25)
+    val (coldRows, coldJobs) =
+      withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(cold))))
+    info(s"Spark jobs per call: warm=$warmJobs never-seen terms=$coldJobs")
+    assert(warmJobs <= 3, s"warm single query ran $warmJobs jobs")
+    assert(coldJobs <= 4, s"never-seen-terms query ran $coldJobs jobs")
+    assert(warmRows.nonEmpty && warmRows == exactRows(TestSpark.Sf0001, Seq(warm)))
+    assert(coldRows.nonEmpty && coldRows == exactRows(TestSpark.Sf0001, Seq(cold)))
+  }
+
+  test("declared sidecar schemas match the schemas the writers lay down") {
+    val spark = TestSpark.spark
+    import IndexBuilder.Schemas
+    val paths = IndexBuilder.IndexPaths(indexDir)
+    def fields(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => f.name -> f.dataType).toMap
+    Seq("postings" -> (Schemas.postings, paths.postings(1L)),
+      "norms" -> (Schemas.norms, paths.norms(1L)),
+      "termstats" -> (Schemas.termstats, paths.termstats(1L)),
+      "hints" -> (Schemas.hints, paths.hints(1L)),
+      "stats" -> (Schemas.stats, paths.stats(1L))).foreach { case (name, (declared, dir)) =>
+      val written = spark.read.parquet(dir).schema
+      assert(fields(declared) == fields(written),
+        s"$name: declared ${declared.simpleString}, written ${written.simpleString}")
+    }
+  }
+
+  test("pre-hints index (no hints dir): exact results, warm-start latched off until a rebuild") {
+    val spark = TestSpark.spark
+    val d = tmp("graft-wand-prehints-")
+    IndexBuilder.build(spark, TestSpark.Sf0001, d, numShards = 4)
+    StreamingOps.deleteRec(IndexBuilder.IndexPaths(d).hints(1L))
+    val (hits, mOn) = Wand.topKWithMetrics(spark, d, Seq(1L), useHints = true)
+    assert(rows(hits) == rows(ExactSearch.topK(spark, TestSpark.Sf0001)))
+    assert(Wand.hintsDisabled(d, Seq(1L)), "a missing hints dir must latch the warm-start off")
+    // latched: asking for the warm-start does exactly the no-hints work
+    val mOff = Wand.topKWithMetrics(spark, d, Seq(1L), useHints = false)._2
+    assert(mOn.collect().toSeq == mOff.collect().toSeq)
+    // a rebuild in place writes the sidecar again and drops the latch
+    IndexBuilder.build(spark, TestSpark.Sf0001, d, numShards = 4)
+    assert(!Wand.hintsDisabled(d, Seq(1L)))
+    assert(rows(Wand.topK(spark, d, Seq(1L))) == rows(ExactSearch.topK(spark, TestSpark.Sf0001)))
+    assert(!Wand.hintsDisabled(d, Seq(1L)))
+  }
+
+  test("rebuild in place with different content: the next query is fresh and exact") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val words = Seq("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta")
+    def corpus(seed: Int, n: Int): String = {
+      val dir = tmp("graft-wand-rebuild-corpus-")
+      val rnd = new Random(seed)
+      (0L until n.toLong).map(i => (i,
+          Seq.fill(3 + rnd.nextInt(12))(words(rnd.nextInt(words.size))).mkString(" ")))
+        .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      dir
+    }
+    val (a, b) = (corpus(1, 300), corpus(2, 180))
+    val qs = Seq(TermQuery(1, Seq("alpha", "beta"), 10), TermQuery(2, Seq("theta"), 5),
+      TermQuery(3, Seq("gamma", "delta", "eta"), 20))
+    val d = tmp("graft-wand-rebuild-ix-")
+    IndexBuilder.build(spark, a, d, numShards = 4)
+    val before = rows(Wand.topK(spark, d, Seq(1L), qs))
+    assert(before == exactRows(a, qs))
+    // same path, new corpus, new shard count: stats, df and hints memos
+    // from the first index must not survive
+    IndexBuilder.build(spark, b, d, numShards = 3)
+    val after = rows(Wand.topK(spark, d, Seq(1L), qs))
+    assert(after == exactRows(b, qs))
+    assert(after != before, "the two corpora must rank differently")
   }
 }
