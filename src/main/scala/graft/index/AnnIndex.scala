@@ -4,6 +4,7 @@ import graft.corpus.Corpus
 import graft.operators.{AnnOps, CentersOps, VectorOps}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persisted ANN index — the vector twin of the fulltext index's
   * build-once/query-many contract (the reference's `index!` →
@@ -45,6 +46,29 @@ object AnnIndex {
     def centers = s"$root/centers"
   }
 
+  /** The schema each sidecar's writer lays down, passed on every read
+    * so no read starts a Parquet schema-inference job (the contract of
+    * [[IndexBuilder.Schemas]]; WandSpec's drift guard checks these
+    * against freshly built indexes). A codes row carries its flavor's
+    * payload: none, f64 vectors, or quantized codes.
+    */
+  object AnnSchemas {
+    val meta: StructType = StructType.fromDDL(
+      "kind STRING, tables INT, nbits INT, dim INT, n BIGINT, numShards INT, " +
+        "bucketCap INT, nlist INT, nprobe0 INT, vecs BOOLEAN, qlevels INT")
+    val centers: StructType = StructType.fromDDL("cell BIGINT, cemb ARRAY<DOUBLE>")
+    def codes(m: AnnMeta): StructType = StructType.fromDDL(
+      "shard INT, bucket BIGINT, vec_id BIGINT" +
+        (if (m.qlevels > 0) ", qlo DOUBLE, qc DOUBLE, qcode BINARY"
+         else if (m.vecs) ", emb ARRAY<DOUBLE>" else ""))
+  }
+
+  private def readCodes(spark: SparkSession, indexDir: String, m: AnnMeta): DataFrame =
+    spark.read.schema(AnnSchemas.codes(m)).parquet(AnnPaths(indexDir).codes)
+
+  private def readCenters(spark: SparkSession, indexDir: String): DataFrame =
+    spark.read.schema(AnnSchemas.centers).parquet(AnnPaths(indexDir).centers)
+
   /** kind = "lsh" | "ivf". For lsh: tables×nbits hyperplane coder over
     * dim components. For ivf: nlist trained centers (stored), nprobe0
     * the build-time default probe width. dim = 0 marks an index built
@@ -74,12 +98,12 @@ object AnnIndex {
   private def readMeta(spark: SparkSession, indexDir: String): AnnMeta = {
     import spark.implicits._
     // indexes persisted before the quantization field existed lack the
-    // qlevels column; default it to 0 (f64 payload — exactly what those
-    // indexes store) instead of failing the whole build-once contract
-    val raw = spark.read.parquet(AnnPaths(indexDir).meta)
-    val withQ = if (raw.columns.contains("qlevels")) raw
-                else raw.withColumn("qlevels", lit(0))
-    withQ.as[AnnMeta].head()
+    // qlevels column, which the declared schema reads as null; default
+    // it to 0 (f64 payload — exactly what those indexes store) instead
+    // of failing the whole build-once contract
+    spark.read.schema(AnnSchemas.meta).parquet(AnnPaths(indexDir).meta)
+      .withColumn("qlevels", coalesce(col("qlevels"), lit(0)))
+      .as[AnnMeta].head()
   }
 
   private def emptyResult(spark: SparkSession): DataFrame =
@@ -207,7 +231,7 @@ object AnnIndex {
     val m = readMeta(spark, indexDir)
     requireKind(m, "lsh", "searchLshAll")
     if (m.dim == 0) return emptyResult(spark)
-    val indexed = spark.read.parquet(AnnPaths(indexDir).codes)
+    val indexed = readCodes(spark, indexDir, m)
       .select(col("vec_id").as("nbr_id"), col("bucket"))
     // the distinct shuffles the full candidate pair set — deliberate on
     // this BULK path (the whole corpus queries at once, so pair volume
@@ -365,7 +389,7 @@ object AnnIndex {
     val buckets = qBuckets.map(_._2).distinct.sorted
     val shards = buckets.map(b => java.lang.Math.floorMod(b, m.numShards.toLong).toInt)
       .distinct.sorted
-    val scan0 = spark.read.parquet(paths.codes)
+    val scan0 = readCodes(spark, paths.root, m)
       .filter(col("shard").isin(shards: _*))
     // small probe sets stay an isin literal (row-group stat skipping);
     // a large one (big batch × tables × multiprobe, or a wide-nprobe
@@ -439,7 +463,7 @@ object AnnIndex {
         .select(col("vec_id").as("cell"),
           col("embedding").cast("array<double>").as("cemb"))
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(paths.centers)
-      val cembs = spark.read.parquet(paths.centers)
+      val cembs = readCenters(spark, outDir)
       // nearest-cell assignment through the fused broadcast-exhaustive
       // kernel (centers ≤ 4096 rows broadcast; one tight JVM scan per
       // vector, zero intermediate rows/shuffle) — same rows as the
@@ -513,7 +537,7 @@ object AnnIndex {
       nprobe: Int): DataFrame = {
     import spark.implicits._
     val np = if (nprobe > 0) nprobe else m.nprobe0
-    val cents = spark.read.parquet(AnnPaths(indexDir).centers)
+    val cents = readCenters(spark, indexDir)
       .as[(Long, Seq[Double])].collect()
       .map { case (c, e) => (c, e.toArray) }
     // cell ranking always runs on the RAW vector (the space the build
@@ -550,7 +574,7 @@ object AnnIndex {
     requireKind(m, "ivf", "searchIvfAll")
     if (m.dim == 0) return emptyResult(spark)
     val np = if (nprobe > 0) nprobe else m.nprobe0
-    val cembs = spark.read.parquet(AnnPaths(indexDir).centers)
+    val cembs = readCenters(spark, indexDir)
     val emb = AnnOps.embDs(spark, sfDir)
     // cell ranking on the RAW vectors — the space the build assigned in.
     // The probe frame is rebalanced before the candidate joins: the
@@ -569,7 +593,7 @@ object AnnIndex {
       // distances live on the quantization grid on both sides, so at
       // nprobe = nlist this is row-identical to the inline SQMinC kNN
       // (the q45 oracle gate)
-      val nbrs = decodedScan(spark.read.parquet(AnnPaths(indexDir).codes), m)
+      val nbrs = decodedScan(readCodes(spark, indexDir, m), m)
         .select(col("vec_id").as("nbr_id"), col("bucket"), col("emb").as("n_emb"))
       val (qlo, qc) = graft.operators.DistanceOps
         .sqMinCParams(col("emb"), m.qlevels)
@@ -596,7 +620,7 @@ object AnnIndex {
       // no distinct (the former pairIds.distinct() + two-corpus-join
       // rescore shuffled the full n² pair set at the q47 exhaustive
       // probe for zero reduction)
-      val nbrs = spark.read.parquet(AnnPaths(indexDir).codes)
+      val nbrs = readCodes(spark, indexDir, m)
         .select(col("vec_id").as("nbr_id"), col("bucket"), col("emb").as("n_emb"))
       val qSide = emb.select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
       val cands = probe.join(nbrs, "bucket")
@@ -608,7 +632,7 @@ object AnnIndex {
         .orderBy("vec_id", "rnk")
     } else {
       // payload-free index (vectors not stored): gather by id instead
-      val indexed = spark.read.parquet(AnnPaths(indexDir).codes)
+      val indexed = readCodes(spark, indexDir, m)
         .select(col("vec_id").as("nbr_id"), col("bucket"))
       val pairIds = probe.join(indexed, "bucket")
         .select("q_id", "nbr_id")

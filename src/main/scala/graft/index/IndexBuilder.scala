@@ -487,8 +487,6 @@ object IndexBuilder {
     // ---- lineage + metrics from the WRITTEN artifacts, then commit
     phase("commit_manifest") {
       commitManifest(spark, paths, snapshotId, parentSnapshot, onlyShards) }
-    // a rebuild at the same path invalidates Wand's driver memos
-    Wand.invalidate(indexDir)
   }
 
   /** Manifest + metrics for the shards just sealed; manifest row
@@ -925,6 +923,5 @@ object IndexBuilder {
     }
 
     commitManifest(spark, paths, outSnap, inSnaps.max, None)
-    Wand.invalidate(indexDir)
   }
 }

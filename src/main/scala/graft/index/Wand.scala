@@ -4,8 +4,12 @@ import graft.core.Types._
 import graft.functions.BM25
 import graft.operators.TopK
 import graft.queries.QuerySet
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
 /** Block-Max WAND top-k over sealed segments — the fast query path, the
@@ -20,18 +24,35 @@ import scala.collection.mutable.ArrayBuffer
   * rank-identity with the exhaustive scorer.
   *
   * Distribution model (the reference's `ParallelExhaustiveSearch`
-  * partial/merge, /root/reference/src/parallel-exhaustive.jl:44-62):
-  * a call runs in three layers. (1) The driver resolves corpus stats,
-  * per-term df and hint rows from memos; a miss costs one single-stage
-  * scan of the small term sidecars. (2) Segments are sharded by doc
-  * range; one cogroup of postings with norms evaluates WAND for all
-  * queries on every shard (queries + idf map broadcast) and emits each
-  * (shard, query)'s bounded top-k heap with its pruning counters.
-  * (3) The driver collects those heaps — at most shards × queries × k
-  * hits — and merges them per query with [[TopK]], the reference's
-  * caller-side queue merge. Scales horizontally in docs (shards) with
-  * no per-query shuffle of scored rows at all, and the only Spark jobs
-  * a warm call runs are the shard eval's.
+  * partial/merge, /root/reference/src/parallel-exhaustive.jl:44-62,
+  * over an index held in memory the way the reference holds its
+  * `StaticAdjList`): the first call on an (index, snapshot set) loads
+  * it into Spark storage as a [[Resident]] entry — one [[ShardSegment]]
+  * per shard (posting lists by term, norms decoded and doc-sorted) and
+  * a term dictionary hash-partitioned by term (df and hint rows) — and
+  * every call then runs in three layers. (1) The driver resolves corpus
+  * stats, idf and θ₀ from the entry; a term the entry's memo lacks
+  * costs one lookup job over the few dictionary partitions holding it.
+  * (2) One single-stage `mapPartitions` job evaluates WAND for all
+  * queries on every resident segment (queries, idf map, avgdl, θ₀ and
+  * snapshot scales broadcast) and emits each (shard, query)'s bounded
+  * top-k heap with its pruning counters. (3) The driver collects those
+  * heaps — at most shards × queries × k hits — and merges them per
+  * query with [[TopK]], the reference's caller-side queue merge. A
+  * warm call reads no parquet, plans no Catalyst query and shuffles
+  * nothing; scaling in docs is scaling in shards.
+  *
+  * Key and lifecycle: an entry is keyed by (index dir, sorted snapshot
+  * ids) and stamped with a fingerprint of its snapshots' sidecar files
+  * (names and lengths, from a driver-side listing that starts no job).
+  * Every Spark overwrite writes new part-file names, so an index
+  * rewritten in place — by this JVM or any other — no longer matches,
+  * and the next call unpersists the stale entry and loads afresh. An
+  * entry is also unpersisted by [[release]], and when a later load
+  * finds its index dir gone. Entries are persisted
+  * [[ResidentStorage]]: under memory pressure a segment spills to the
+  * executor's disk rather than being recomputed from parquet, and a
+  * lost block is recomputed from the load's lineage.
   *
   * Rounding discipline: heap order and final ranking use ROUNDED
   * scores ((round(s,4) DESC, doc_id ASC) — identical to the exact path
@@ -208,55 +229,76 @@ object Wand {
     }
   }
 
-  /** All queries over one shard: one [[ShardHits]] per query that had
-    * any cursor in this shard, so hits and counters come out of ONE
-    * shard-eval pass. The counters travel in the task's result rows,
-    * not an accumulator, so a retried task cannot double-count them.
+  /** One shard's resident part of an index: its posting lists by term,
+    * each tagged with the snapshot id it was loaded from, and its norms
+    * decoded and sorted by doc id — FULLY sorted, since unmerged
+    * snapshots' doc ranges may interleave arbitrarily within a shard
+    * (the [[IndexBuilder.mergeSnapshots]] contract). Built once per
+    * resident entry, so no call re-decodes a norm.
     */
-  /** @param snapScale per-snapshot Block-Max bound scale
-    *   (max(1, merged avgdl / snapshot avgdl) — see [[Cursor]]); keyed
-    *   by the snapshot id each posting segment was loaded from.
-    */
-  private[index] def evalShard(postings: Iterator[(Long, PostingList)],
-      norms: Iterator[DocNorms],
-      queries: Seq[TermQuery], idfMap: Map[String, Double],
-      avgdl: Double, theta0: Map[Int, Double] = Map.empty,
-      snapScale: Map[Long, Double] = Map.empty): Iterator[ShardHits] = {
-    val byTerm = scala.collection.mutable.HashMap.empty[String, ArrayBuffer[(Long, PostingList)]]
-    postings.foreach(sp => byTerm.getOrElseUpdate(sp._2.term, new ArrayBuffer) += sp)
-    if (byTerm.isEmpty) return Iterator.empty
-    // merged sorted norms arrays: FULL sort by doc id — unmerged
-    // snapshots' doc ranges may interleave arbitrarily within a shard
-    // (mergeSnapshots contract), so head-sorted concatenation is not
-    // enough for the binary search below
-    val segs = norms.map(IndexFormat.decodeNorms).toArray
-    val pairs = segs.iterator.flatMap { case (ids, dls) =>
-      ids.indices.iterator.map(i => (ids(i), dls(i)))
-    }.toArray.sortBy(_._1)
-    val nids = pairs.map(_._1)
-    val ndls = pairs.map(_._2)
-    val dlAt: Long => Long = { doc =>
+  private[index] final class ShardSegment(
+      val byTerm: Map[String, Array[(Long, PostingList)]],
+      nids: Array[Long], ndls: Array[Long]) extends Serializable {
+
+    def dlAt(doc: Long): Long = {
       val p = java.util.Arrays.binarySearch(nids, doc)
       require(p >= 0, s"doc $doc missing from norms sidecar")
       ndls(p)
     }
-    queries.iterator.flatMap { q =>
-      val cost = new Costs
-      val cursors = q.terms.distinct.flatMap(t =>
-        byTerm.getOrElse(t, ArrayBuffer.empty).map { case (snap, pl) =>
-          new Cursor(pl, idfMap(t), cost, snapScale.getOrElse(snap, 1.0))
-        }).toArray
-      if (cursors.isEmpty) None
-      else {
-        val heap = TopK.empty(q.k)
-        wandQuery(cursors, heap, dlAt, avgdl, cost,
-          theta0.getOrElse(q.query_id, Double.NegativeInfinity))
-        Some(ShardHits(q.query_id, heap.ids.take(heap.size),
-          heap.scores.take(heap.size), cost.docsScored, cost.blocksDecoded,
-          cost.blocksSkipped))
+
+    /** All queries over this shard: one [[ShardHits]] per query that
+      * had any cursor here, so hits and counters come out of ONE pass.
+      * The counters travel in the task's result rows, not an
+      * accumulator, so a retried task cannot double-count them.
+      */
+    def eval(args: EvalArgs): Iterator[ShardHits] =
+      args.queries.iterator.flatMap { q =>
+        val cost = new Costs
+        val cursors = q.terms.distinct.flatMap(t =>
+          byTerm.getOrElse(t, Array.empty[(Long, PostingList)]).map { case (snap, pl) =>
+            new Cursor(pl, args.idf(t), cost, args.snapScale.getOrElse(snap, 1.0))
+          }).toArray
+        if (cursors.isEmpty) None
+        else {
+          val heap = TopK.empty(q.k)
+          wandQuery(cursors, heap, dlAt, args.avgdl, cost,
+            args.theta0.getOrElse(q.query_id, Double.NegativeInfinity))
+          Some(ShardHits(q.query_id, heap.ids.take(heap.size),
+            heap.scores.take(heap.size), cost.docsScored, cost.blocksDecoded,
+            cost.blocksSkipped))
+        }
       }
+  }
+
+  private[index] object ShardSegment {
+    /** The segment of whatever (shard, (postings, norms)) groups one
+      * load partition holds (one shard each under the identity
+      * partitioning of small shard ids, but correct for any).
+      */
+    def apply(groups: Iterator[(Int, (Iterable[(Long, PostingList)], Iterable[DocNorms]))]): ShardSegment = {
+      val byTerm = scala.collection.mutable.HashMap.empty[String, ArrayBuffer[(Long, PostingList)]]
+      val pairs = ArrayBuffer.empty[(Long, Long)]
+      groups.foreach { case (_, (posts, norms)) =>
+        posts.foreach(sp => byTerm.getOrElseUpdate(sp._2.term, new ArrayBuffer) += sp)
+        norms.foreach { n =>
+          val (ids, dls) = IndexFormat.decodeNorms(n)
+          ids.indices.foreach(i => pairs += ((ids(i), dls(i))))
+        }
+      }
+      val sorted = pairs.toArray.sortBy(_._1)
+      new ShardSegment(byTerm.map { case (t, ps) => t -> ps.toArray }.toMap,
+        sorted.map(_._1), sorted.map(_._2))
     }
   }
+
+  /** What a shard-eval task needs besides its segment (broadcast).
+    * `snapScale` is the per-snapshot Block-Max bound scale
+    * (max(1, merged avgdl / snapshot avgdl) — see [[Cursor]]), keyed by
+    * the snapshot id each posting list was loaded from.
+    */
+  private[index] final case class EvalArgs(queries: Seq[TermQuery],
+      idf: Map[String, Double], avgdl: Double, theta0: Map[Int, Double],
+      snapScale: Map[Long, Double])
 
   /** Batch top-k over a built index (possibly several unmerged
     * snapshots — cursors per segment, doc ranges disjoint per term).
@@ -266,7 +308,8 @@ object Wand {
     */
   def topK(spark: SparkSession, indexDir: String, snaps: Seq[Long],
       queries: Seq[TermQuery] = QuerySet.queries): DataFrame =
-    topKWithMetrics(spark, indexDir, snaps, queries)._1
+    spark.createDataset(merged(spark, indexDir, snaps, queries, useHints = true)._1)(hitEncoder)
+      .toDF()
 
   /** θ warm-start from the hints sidecar (the reference's hints role,
     * /root/reference/src/searchgraph/hints.jl:42-264): sum each hint
@@ -301,99 +344,196 @@ object Wand {
     */
   private final case class TermInfo(df: Option[Long], hints: Array[(Long, Long, Long)])
 
-  /** Per-(index, snapshot set, term) memo of [[TermInfo]]: a sealed
-    * snapshot's termstats and hints never change, so each term is read
-    * from parquet AT MOST once per JVM — a call whose terms are warm
-    * (the repeated-single-query path) runs no driver-side Spark job.
-    * Terms absent from the index memoize too, so they don't re-trigger
-    * reads. Memory is bounded by (distinct queried terms) × H, not by
-    * the vocabulary.
-    */
-  private val termMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), TermInfo]
-  /** (indexDir, snaps) whose hints sidecar is absent (pre-hints index). */
-  private val noHints = scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
+  private val Absent = TermInfo(None, Array.empty)
 
-  /** Snapshot stats, memoized per (index, snapshot set) with the same
-    * immutable-per-snapshot argument as [[termMemo]].
+  /** Storage level of every resident entry: a segment that does not fit
+    * in memory spills to local disk instead of being dropped and
+    * re-read from parquet on the next call.
     */
-  private val statsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Seq[IndexBuilder.SnapStats]]
+  private val ResidentStorage: StorageLevel = StorageLevel.MEMORY_AND_DISK
 
-  /** Drop every memo entry for `indexDir`. The memos assume a sealed
-    * snapshot never changes at its path; [[IndexBuilder.build]] /
-    * [[IndexBuilder.mergeSnapshots]] CAN overwrite one in place
-    * (SaveMode.Overwrite, resume, re-merge), so they call this at
-    * commit time — otherwise a same-JVM rebuild would silently serve
-    * stale avgdl/idf/hints and score wrong with no error.
+  /** One (index, snapshot set) held in Spark storage (see the object
+    * doc for its key and lifecycle).
+    *
+    * `termMemo` caches the dictionary answers the driver has fetched: a
+    * term is looked up at most once per entry, and a call whose terms
+    * are all memoized runs no lookup job. Terms absent from the index
+    * memoize too. Memory is bounded by (distinct queried terms) × H,
+    * not by the vocabulary. `noHints` is the θ warm-start latch: some
+    * snapshot had no hints sidecar when the entry was loaded (a
+    * pre-hints index), so the dictionary carries no hint rows.
     */
-  def invalidate(indexDir: String): Unit = {
-    termMemo.keys.filter(_._1 == indexDir).foreach(termMemo.remove)
-    noHints.keys.filter(_._1 == indexDir).foreach(noHints.remove)
-    statsMemo.keys.filter(_._1 == indexDir).foreach(statsMemo.remove)
+  private final class Resident(val fingerprint: Seq[(String, Long)],
+      val stats: Seq[IndexBuilder.SnapStats], val noHints: Boolean,
+      val segments: RDD[ShardSegment], val dict: RDD[Map[String, TermInfo]]) {
+    val termMemo = TrieMap.empty[String, TermInfo]
+    def unpersist(): Unit = {
+      segments.unpersist(blocking = false)
+      dict.unpersist(blocking = false)
+    }
   }
 
-  /** Has the θ warm-start been latched off for this snapshot set? */
-  private[graft] def hintsDisabled(indexDir: String, snaps: Seq[Long]): Boolean =
-    noHints.contains((indexDir, snaps.sorted.mkString(",")))
+  private type Key = (String, Seq[Long])
+  private val resident = TrieMap.empty[Key, Resident]
+  private val loadLocks = TrieMap.empty[Key, AnyRef]
 
-  private def cachedStats(spark: SparkSession, indexDir: String,
-      snaps: Seq[Long]): Seq[IndexBuilder.SnapStats] = {
-    val sk = snaps.sorted.mkString(",")
-    statsMemo.getOrElseUpdate((indexDir, sk),
-      IndexBuilder.loadStats(spark, indexDir, snaps))
+  /** Names and lengths of every file under the snapshots' sidecar dirs
+    * — a driver-side listing through each path's own Hadoop FileSystem,
+    * which starts no Spark job. A missing dir contributes nothing.
+    */
+  private def fingerprint(spark: SparkSession, indexDir: String,
+      snaps: Seq[Long]): Seq[(String, Long)] = {
+    val paths = IndexBuilder.IndexPaths(indexDir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    snaps.flatMap(s => Seq(paths.postings(s), paths.norms(s), paths.termstats(s),
+        paths.stats(s), paths.hints(s))).flatMap { dir =>
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val fs = p.getFileSystem(conf)
+      // a plain recursive listStatus: listFiles' located statuses load
+      // owner and permissions per file, which the local file system
+      // does by forking a shell
+      def walk(d: org.apache.hadoop.fs.Path): Seq[(String, Long)] =
+        fs.listStatus(d).toSeq.flatMap(f =>
+          if (f.isDirectory) walk(f.getPath) else Seq(f.getPath.toString -> f.getLen))
+      if (fs.exists(p)) walk(p).sorted else Nil
+    }
   }
 
-  /** [[TermInfo]] for the given terms. The terms the memo lacks are
-    * fetched by ONE single-stage scan: a union of every snapshot's
-    * termstats and hints sidecars under the term filter (pushed to
-    * parquet row groups), with no shuffle. The driver sums df and
-    * de-duplicates the hint rows. A snapshot set with a hints dir
-    * missing is latched in [[noHints]] by a driver-side file-system
-    * check before the scan is built, and its scans read termstats only.
+  /** The resident entry for (indexDir, snaps): the current one when
+    * its fingerprint still matches the files, else a fresh load under
+    * the key's lock (the stale entry unpersisted first).
     */
-  private def termInfo(spark: SparkSession, indexDir: String, snaps: Seq[Long],
-      terms: Seq[String]): Map[String, TermInfo] = {
-    val sk = snaps.sorted.mkString(",")
-    val missing = terms.filter(t => !termMemo.contains((indexDir, sk, t)))
-    if (missing.nonEmpty) {
-      import IndexBuilder.Schemas
-      val paths = IndexBuilder.IndexPaths(indexDir)
-      if (!noHints.contains((indexDir, sk)) &&
-          !snaps.forall(s => IndexBuilder.pathExists(spark, paths.hints(s)))) {
-        System.err.println(s"[graft] no hints sidecar for $indexDir " +
-          s"snaps=$sk — θ warm-start disabled")
-        noHints.put((indexDir, sk), ())
-      }
-      val none = lit(null).cast("long")
-      val dfRows = snaps.map(s =>
-        spark.read.schema(Schemas.termstats).parquet(paths.termstats(s))
-          .select(col("term"), col("df"), none.as("doc_id"), none.as("tf"), none.as("dl")))
-      val hintRows =
-        if (noHints.contains((indexDir, sk))) Nil
-        else snaps.map(s => spark.read.schema(Schemas.hints).parquet(paths.hints(s))
-          .select(col("term"), none.as("df"), col("doc_id"), col("tf"), col("dl")))
-      val byTerm = (dfRows ++ hintRows).reduce(_ union _)
-        .filter(col("term").isin(missing: _*))
-        .collect()
-        .groupBy(_.getString(0))
-      missing.foreach { t =>
-        val rs = byTerm.getOrElse(t, Array.empty[Row])
-        val dfs = rs.filter(!_.isNullAt(1)).map(_.getLong(1))
-        val hints = rs.filter(!_.isNullAt(2))
-          .map(r => (r.getLong(2), r.getLong(3), r.getLong(4))).distinct
-        termMemo.put((indexDir, sk, t),
-          TermInfo(if (dfs.isEmpty) None else Some(dfs.sum), hints))
+  private def residentEntry(spark: SparkSession, indexDir: String,
+      snaps: Seq[Long]): Resident = {
+    val key: Key = (indexDir, snaps.sorted)
+    val fp = fingerprint(spark, indexDir, key._2)
+    loadLocks.getOrElseUpdate(key, new AnyRef).synchronized {
+      resident.get(key) match {
+        case Some(e) if e.fingerprint == fp => e
+        case stale =>
+          stale.foreach { e => resident.remove(key); e.unpersist() }
+          resident.keys.filter(k => !IndexBuilder.pathExists(spark, k._1))
+            .foreach(k => release(k._1))
+          val e = load(spark, indexDir, key._2, fp)
+          resident.put(key, e).foreach(_.unpersist())
+          e
       }
     }
-    terms.flatMap(t => termMemo.get((indexDir, sk, t)).map(t -> _)).toMap
   }
+
+  /** The resident load's Catalyst plans, the only ones left on the
+    * query path: every snapshot's postings tagged with its id, the
+    * norms, and the dictionary rows — termstats `(term, df)` and, with
+    * `hints`, hint rows `(term, doc_id, tf, dl)`, in one null-padded
+    * union. All read with the writers' declared schemas.
+    */
+  private[graft] def loadPlans(spark: SparkSession, indexDir: String,
+      snaps: Seq[Long], hints: Boolean): (Dataset[(Long, PostingList)], Dataset[DocNorms], DataFrame) = {
+    import spark.implicits._
+    import IndexBuilder.Schemas
+    val paths = IndexBuilder.IndexPaths(indexDir)
+    val posts = snaps.map(s => IndexBuilder.loadPostings(spark, indexDir, Seq(s))
+      .map(pl => (s, pl))).reduce(_ union _)
+    val none = lit(null).cast("long")
+    val dfRows = snaps.map(s =>
+      spark.read.schema(Schemas.termstats).parquet(paths.termstats(s))
+        .select(col("term"), col("df"), none.as("doc_id"), none.as("tf"), none.as("dl")))
+    val hintRows =
+      if (!hints) Nil
+      else snaps.map(s => spark.read.schema(Schemas.hints).parquet(paths.hints(s))
+        .select(col("term"), none.as("df"), col("doc_id"), col("tf"), col("dl")))
+    (posts, IndexBuilder.loadNorms(spark, indexDir, snaps), (dfRows ++ hintRows).reduce(_ union _))
+  }
+
+  /** A new resident entry. Only the stats read runs here (one job); the
+    * segments and the dictionary are persisted unmaterialized, and the
+    * first shard eval and the first lookup compute and store them.
+    */
+  private def load(spark: SparkSession, indexDir: String, snaps: Seq[Long],
+      fp: Seq[(String, Long)]): Resident = {
+    val paths = IndexBuilder.IndexPaths(indexDir)
+    val noHints = !snaps.forall(s => IndexBuilder.pathExists(spark, paths.hints(s)))
+    if (noHints) System.err.println(s"[graft] no hints sidecar for $indexDir " +
+      s"snaps=${snaps.mkString(",")} — θ warm-start disabled")
+    val stats = IndexBuilder.loadStats(spark, indexDir, snaps)
+    val (posts, norms, dictRows) = loadPlans(spark, indexDir, snaps, !noHints)
+    // shard ids are 0 until num_shards, so hash partitioning by shard
+    // puts each shard in its own partition
+    val shards = new HashPartitioner(stats.map(_.num_shards).max)
+    val name = s"$indexDir snaps=${snaps.mkString(",")}"
+    val segments = posts.rdd.keyBy(_._2.shard).cogroup(norms.rdd.keyBy(_.shard), shards)
+      .mapPartitions(groups => Iterator(ShardSegment(groups)))
+      .setName(s"wand segments $name").persist(ResidentStorage)
+    val dict = dictRows.rdd.keyBy(_.getString(0)).partitionBy(shards)
+      .mapPartitions(rows => Iterator(termDict(rows)))
+      .setName(s"wand dictionary $name").persist(ResidentStorage)
+    new Resident(fp, stats, noHints, segments, dict)
+  }
+
+  /** One dictionary partition: df summed over snapshots and hint rows
+    * de-duplicated, per term.
+    */
+  private def termDict(rows: Iterator[(String, Row)]): Map[String, TermInfo] = {
+    val dfs = scala.collection.mutable.HashMap.empty[String, Long]
+    val hints = scala.collection.mutable.HashMap.empty[String, ArrayBuffer[(Long, Long, Long)]]
+    rows.foreach { case (t, r) =>
+      if (!r.isNullAt(1)) dfs(t) = dfs.getOrElse(t, 0L) + r.getLong(1)
+      else hints.getOrElseUpdate(t, new ArrayBuffer) += ((r.getLong(2), r.getLong(3), r.getLong(4)))
+    }
+    (dfs.keySet ++ hints.keySet).iterator.map(t => t ->
+      TermInfo(dfs.get(t), hints.get(t).map(_.distinct.toArray).getOrElse(Array.empty))).toMap
+  }
+
+  /** Unpersist every resident entry of `indexDir`. Only frees memory:
+    * correctness never depends on it, since a rewritten index fails the
+    * fingerprint check on its next call.
+    */
+  def release(indexDir: String): Unit =
+    resident.keys.filter(_._1 == indexDir).foreach { k =>
+      resident.remove(k).foreach(_.unpersist())
+      loadLocks.remove(k)
+    }
+
+  /** Has the θ warm-start been latched off for this snapshot set as
+    * its files are now?
+    */
+  private[graft] def hintsDisabled(spark: SparkSession, indexDir: String,
+      snaps: Seq[Long]): Boolean =
+    resident.get((indexDir, snaps.sorted)).exists(e =>
+      e.noHints && e.fingerprint == fingerprint(spark, indexDir, snaps.sorted))
+
+  /** [[TermInfo]] for the given terms. The terms the entry's memo lacks
+    * are fetched by ONE lookup job over just the dictionary partitions
+    * they hash to.
+    */
+  private def termInfo(spark: SparkSession, e: Resident,
+      terms: Seq[String]): Map[String, TermInfo] = {
+    val missing = terms.filterNot(e.termMemo.contains)
+    if (missing.nonEmpty) {
+      val byTerm = new HashPartitioner(e.dict.getNumPartitions)
+      val found = spark.sparkContext.runJob(e.dict,
+        (dicts: Iterator[Map[String, TermInfo]]) =>
+          dicts.flatMap(d => missing.flatMap(t => d.get(t).map(t -> _))).toArray,
+        missing.map(byTerm.getPartition).distinct.sorted).flatten.toMap
+      missing.foreach(t => e.termMemo.put(t, found.getOrElse(t, Absent)))
+    }
+    terms.flatMap(t => e.termMemo.get(t).map(t -> _)).toMap
+  }
+
+  /** One query's pruning counters summed over shards. */
+  final case class QueryCost(query_id: Int, docs_scored: Long,
+      blocks_decoded: Long, blocks_skipped: Long)
+
+  // derived once: deriving a product encoder per call costs more than
+  // a warm call's whole shard eval
+  private lazy val hitEncoder = Encoders.product[QueryHit]
+  private lazy val costEncoder = Encoders.product[QueryCost]
 
   /** [[topK]] plus the per-query cost metrics
     * `(query_id, docs_scored, blocks_decoded, blocks_skipped)` summed
     * over shards — the production observable for WAND pruning (the
     * reference's `costdist`/`costblk`). Both come from ONE collect of
-    * the [[shardEval]] rows (≤ shards × queries rows of ≤ k hits); the
+    * the [[shardHits]] (≤ shards × queries rows of ≤ k hits); the
     * driver merges each query's shard heaps with [[TopK]] and sums its
     * counters. Both returned frames are small local DataFrames, hits
     * in (query_id, rnk) order and metrics in query_id order.
@@ -401,9 +541,17 @@ object Wand {
   def topKWithMetrics(spark: SparkSession, indexDir: String, snaps: Seq[Long],
       queries: Seq[TermQuery] = QuerySet.queries,
       useHints: Boolean = true): (DataFrame, DataFrame) = {
-    import spark.implicits._
+    val (hits, costs) = merged(spark, indexDir, snaps, queries, useHints)
+    (spark.createDataset(hits)(hitEncoder).toDF(), spark.createDataset(costs)(costEncoder).toDF())
+  }
+
+  /** One call's hits in (query_id, rnk) order and its counters in
+    * query_id order.
+    */
+  private def merged(spark: SparkSession, indexDir: String, snaps: Seq[Long],
+      queries: Seq[TermQuery], useHints: Boolean): (Seq[QueryHit], Seq[QueryCost]) = {
     val kById = queries.groupMapReduce(_.query_id)(_.k)((first, _) => first)
-    val byQuery = shardEval(spark, indexDir, snaps, queries, useHints).collect()
+    val byQuery = shardHits(spark, indexDir, snaps, queries, useHints)
       .groupBy(_.query_id).toSeq.sortBy(_._1)
     val hits = byQuery.flatMap { case (qid, parts) =>
       val heap = TopK.empty(kById(qid))
@@ -412,29 +560,22 @@ object Wand {
       TopK.result(heap).zipWithIndex.map { case (h, i) => QueryHit(qid, i + 1, h.doc_id, h.score) }
     }
     val metrics = byQuery.map { case (qid, parts) =>
-      (qid, parts.map(_.docs_scored).sum, parts.map(_.blocks_decoded).sum,
+      QueryCost(qid, parts.map(_.docs_scored).sum, parts.map(_.blocks_decoded).sum,
         parts.map(_.blocks_skipped).sum)
     }
-    (hits.toDF(),
-      metrics.toDF("query_id", "docs_scored", "blocks_decoded", "blocks_skipped"))
+    (hits, metrics)
   }
 
-  /** The shard-eval plan (lazy): the driver-side stats/df/hints
-    * resolution runs here, then one cogroup of the term-filtered
-    * postings with the norms evaluates every query on every shard. It
-    * is the only distributed part of a call.
+  /** Every (shard, query) heap of one call: the driver resolves stats,
+    * idf and θ₀ from the resident entry, then one single-stage job
+    * evaluates all queries on every resident segment.
     */
-  private[graft] def shardEval(spark: SparkSession, indexDir: String,
-      snaps: Seq[Long], queries: Seq[TermQuery] = QuerySet.queries,
-      useHints: Boolean = true): Dataset[ShardHits] = {
-    import spark.implicits._
-    val stats = cachedStats(spark, indexDir, snaps)
-    val nDocs = stats.map(_.n_docs).sum
-    val avgdl = stats.map(_.sum_dl).sum.toDouble / nDocs
-    val qTerms = queries.flatMap(_.terms).distinct
-    // global idf for the query terms only: memoized df + driver map +
-    // broadcast
-    val info = termInfo(spark, indexDir, snaps, qTerms)
+  private def shardHits(spark: SparkSession, indexDir: String,
+      snaps: Seq[Long], queries: Seq[TermQuery], useHints: Boolean): Array[ShardHits] = {
+    val e = residentEntry(spark, indexDir, snaps)
+    val nDocs = e.stats.map(_.n_docs).sum
+    val avgdl = e.stats.map(_.sum_dl).sum.toDouble / nDocs
+    val info = termInfo(spark, e, queries.flatMap(_.terms).distinct)
     val idfMap: Map[String, Double] =
       info.flatMap { case (t, ti) => ti.df.map(df => t -> BM25.idf(nDocs, df)) }
     val theta0 =
@@ -443,31 +584,16 @@ object Wand {
     // per-snapshot Block-Max bound scale (see Cursor): sealed maxima
     // are tight under their own avgdl; a merged avgdl above it needs
     // the avgdl-ratio correction to stay an upper bound
-    val snapScale: Map[Long, Double] = stats
+    val snapScale: Map[Long, Double] = e.stats
       .map(s => s.snapshot_id -> math.max(1.0, avgdl / s.avgdl)).toMap
-    val bc = spark.sparkContext.broadcast((queries, idfMap, avgdl, theta0, snapScale))
-
-    // postings tagged with their source snapshot (per-snapshot read so
-    // the term filter still pushes down to parquet row groups)
-    val posts = snaps.map { s =>
-      spark.read.schema(IndexBuilder.Schemas.postings)
-        .parquet(IndexBuilder.IndexPaths(indexDir).postings(s))
-        .filter(col("term").isin(qTerms: _*)) // pushed to parquet row groups
-        .as[PostingList]
-        .map(pl => (s, pl))
-    }.reduce(_ union _)
-    val norms = IndexBuilder.loadNorms(spark, indexDir, snaps)
-
-    posts.groupByKey(_._2.shard)
-      .cogroup(norms.groupByKey(_.shard)) { (_, pIt, nIt) =>
-        val (qs, idf, ad, t0, sc) = bc.value
-        evalShard(pIt, nIt, qs, idf, ad, t0, sc)
-      }
+    val bc = spark.sparkContext.broadcast(EvalArgs(queries, idfMap, avgdl, theta0, snapScale))
+    try e.segments.mapPartitions(_.flatMap(_.eval(bc.value))).collect()
+    finally bc.destroy()
   }
 
   /** Temp-index scope for the registry entries: `f` returns a local
-    * frame ([[topK]]), so the index is deleted — and its memos dropped
-    * — on success and failure alike. A build that throws must not
+    * frame ([[topK]]), so the index is deleted — and its resident entry
+    * released — on success and failure alike. A build that throws must not
     * strand a partially written index in /tmp (a bench loop retrying
     * the op would fill the disk), and the registry index queries build
     * a throwaway index per call.
@@ -477,7 +603,7 @@ object Wand {
     try f(idx)
     finally {
       graft.operators.StreamingOps.deleteRec(idx)
-      invalidate(idx)
+      release(idx)
     }
   }
 

@@ -852,7 +852,7 @@ object AnnOps {
         .parquet(IndexBuilder.IndexPaths(dir).termstats(1L))
         .agg(sum("df")).head().getLong(0)
       graft.operators.StreamingOps.deleteRec(dir)
-      Wand.invalidate(dir)
+      Wand.release(dir)
       (floor, recall, radius, postings)
     }
     gold.unpersist()

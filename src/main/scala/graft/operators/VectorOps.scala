@@ -63,8 +63,9 @@ object VectorOps {
     * count() JOB per invocation (rerank alone triggered it 4×) — pure
     * driver-side latency noise on the query paths. A caller that
     * REWRITES a corpus directory in-process must call
-    * [[invalidateCounts]] or the guard checks the stale count (same
-    * staleness contract as [[graft.index.Wand.invalidate]]).
+    * [[invalidateCounts]] or the guard checks the stale count (unlike
+    * [[graft.index.Wand]]'s resident entries, which a file fingerprint
+    * keeps fresh).
     */
   private val countMemo = scala.collection.concurrent.TrieMap.empty[(String, String), Long]
 

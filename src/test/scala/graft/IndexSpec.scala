@@ -3,8 +3,10 @@ package graft
 import graft.index.{IndexBuilder, IndexFormat, Wand}
 import graft.functions.BM25
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.collection.mutable.ArrayBuffer
 import scala.util.Random
 
 /** Index build: seal/decode round-trip (the `StaticAdjList` freeze/thaw
@@ -13,9 +15,21 @@ import scala.util.Random
   * partial manifest, and merge determinism (merged snapshots ≡ direct
   * full build; idempotence + associativity per FIXTURES.md §4).
   */
-class IndexSpec extends AnyFunSuite {
+class IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private def tmp(): String = Files.createTempDirectory("graft-ix-").toString
+  /** Temp dirs this suite creates; deleted (and their resident WAND
+    * entries released) once it ends.
+    */
+  private val dirs = ArrayBuffer.empty[String]
+  private def tmp(): String = {
+    val d = Files.createTempDirectory("graft-ix-").toString
+    dirs += d
+    d
+  }
+  override def afterAll(): Unit = {
+    dirs.foreach(Wand.release)
+    graft.operators.StreamingOps.deleteRec(dirs.toSeq: _*)
+  }
 
   test("seal/decode round-trip with multi-block lists + block-max soundness") {
     val rnd = new Random(42)

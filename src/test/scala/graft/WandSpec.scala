@@ -21,8 +21,8 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Int, Int, Long, Double)] =
     df.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
 
-  /** Temp dirs this suite creates; deleted (and their memos dropped)
-    * once it ends.
+  /** Temp dirs this suite creates; deleted (and their resident entries
+    * released) once it ends.
     */
   private val dirs = ArrayBuffer.empty[String]
   private def tmp(prefix: String): String = {
@@ -31,7 +31,7 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     d
   }
   override def afterAll(): Unit = {
-    dirs.foreach(Wand.invalidate)
+    dirs.foreach(Wand.release)
     StreamingOps.deleteRec(dirs.toSeq: _*)
   }
 
@@ -369,24 +369,46 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(wand == exact, "skewed-avgdl multi-snapshot WAND diverged from exact")
   }
 
-  test("a warm single query runs ≤ 3 Spark jobs, a query of never-seen terms ≤ 4; both rank-exact") {
+  test("Spark jobs per call: 3 on a fresh index, 1 warm, 2 on never-seen terms; rank-exact") {
     val spark = TestSpark.spark
-    // fresh memos for this index: the first call warms the snapshot
-    // stats and its own terms
-    Wand.invalidate(indexDir)
+    // a fresh entry: the first call reads the stats, looks its terms up
+    // (materializing the dictionary partitions they hash to) and runs
+    // the shard eval (materializing the segments)
+    Wand.release(indexDir)
     val warm = TermQuery(800, Seq("spark", "join", "the"), 10)
-    Wand.topK(spark, indexDir, Seq(1L), Seq(warm)).collect()
+    val (firstRows, firstJobs) =
+      withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(warm))))
     val (warmRows, warmJobs) =
       withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(warm))))
-    // memo miss: one scan of the term sidecars, then the shard eval
+    // memo miss: one lookup job over the resident dictionary, then the
+    // shard eval
     val cold = TermQuery(801, Seq("window", "vector", "zzz_never_seen"), 25)
     val (coldRows, coldJobs) =
       withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(cold))))
-    info(s"Spark jobs per call: warm=$warmJobs never-seen terms=$coldJobs")
-    assert(warmJobs <= 3, s"warm single query ran $warmJobs jobs")
-    assert(coldJobs <= 4, s"never-seen-terms query ran $coldJobs jobs")
-    assert(warmRows.nonEmpty && warmRows == exactRows(TestSpark.Sf0001, Seq(warm)))
+    info(s"Spark jobs per call: first=$firstJobs warm=$warmJobs never-seen terms=$coldJobs")
+    assert(firstJobs == 3, s"first call on a fresh entry ran $firstJobs jobs")
+    assert(warmJobs == 1, s"warm single query ran $warmJobs jobs")
+    assert(coldJobs == 2, s"never-seen-terms query ran $coldJobs jobs")
+    val gold = exactRows(TestSpark.Sf0001, Seq(warm))
+    assert(gold.nonEmpty && firstRows == gold && warmRows == gold)
     assert(coldRows.nonEmpty && coldRows == exactRows(TestSpark.Sf0001, Seq(cold)))
+  }
+
+  test("nothing stays resident after release or a registry call") {
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    val d = tmp("graft-wand-release-")
+    IndexBuilder.build(spark, TestSpark.Sf0001, d, numShards = 2)
+    assert(persisted == before, "the build itself must leave nothing persisted")
+    Wand.topK(spark, d, Seq(1L)).collect()
+    assert(persisted.size == before.size + 2, "one entry = segments + dictionary")
+    Wand.release(d)
+    assert(persisted == before)
+    // a registry call builds, queries and deletes a throwaway index
+    assert(Wand.topKOnCorpus(spark, TestSpark.Sf0001).collect().nonEmpty)
+    assert(persisted == before)
   }
 
   test("declared sidecar schemas match the schemas the writers lay down") {
@@ -404,6 +426,26 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fields(declared) == fields(written),
         s"$name: declared ${declared.simpleString}, written ${written.simpleString}")
     }
+    // the ANN sidecars: meta and centers, and codes in each payload flavor
+    import graft.index.AnnIndex
+    import AnnIndex.{AnnPaths, AnnSchemas}
+    val builds = Seq(
+      "ivf" -> ((d: String) => AnnIndex.buildIvf(spark, TestSpark.Sf0001, d, numShards = 2)),
+      "ivf-sq8" -> ((d: String) =>
+        AnnIndex.buildIvf(spark, TestSpark.Sf0001, d, numShards = 2, quantLevels = 255)),
+      "lsh" -> ((d: String) => AnnIndex.buildLsh(spark, TestSpark.Sf0001, d, numShards = 2)))
+    builds.foreach { case (flavor, build) =>
+      val d = tmp("graft-wand-ann-")
+      val m = build(d)
+      val sidecars = Seq("meta" -> (AnnSchemas.meta, AnnPaths(d).meta),
+        "codes" -> (AnnSchemas.codes(m), AnnPaths(d).codes)) ++
+        (if (m.kind == "ivf") Seq("centers" -> (AnnSchemas.centers, AnnPaths(d).centers)) else Nil)
+      sidecars.foreach { case (name, (declared, dir)) =>
+        val written = spark.read.parquet(dir).schema
+        assert(fields(declared) == fields(written),
+          s"$flavor $name: declared ${declared.simpleString}, written ${written.simpleString}")
+      }
+    }
   }
 
   test("pre-hints index (no hints dir): exact results, warm-start latched off until a rebuild") {
@@ -413,15 +455,15 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     StreamingOps.deleteRec(IndexBuilder.IndexPaths(d).hints(1L))
     val (hits, mOn) = Wand.topKWithMetrics(spark, d, Seq(1L), useHints = true)
     assert(rows(hits) == rows(ExactSearch.topK(spark, TestSpark.Sf0001)))
-    assert(Wand.hintsDisabled(d, Seq(1L)), "a missing hints dir must latch the warm-start off")
+    assert(Wand.hintsDisabled(spark, d, Seq(1L)), "a missing hints dir must latch the warm-start off")
     // latched: asking for the warm-start does exactly the no-hints work
     val mOff = Wand.topKWithMetrics(spark, d, Seq(1L), useHints = false)._2
     assert(mOn.collect().toSeq == mOff.collect().toSeq)
     // a rebuild in place writes the sidecar again and drops the latch
     IndexBuilder.build(spark, TestSpark.Sf0001, d, numShards = 4)
-    assert(!Wand.hintsDisabled(d, Seq(1L)))
+    assert(!Wand.hintsDisabled(spark, d, Seq(1L)))
     assert(rows(Wand.topK(spark, d, Seq(1L))) == rows(ExactSearch.topK(spark, TestSpark.Sf0001)))
-    assert(!Wand.hintsDisabled(d, Seq(1L)))
+    assert(!Wand.hintsDisabled(spark, d, Seq(1L)))
   }
 
   test("rebuild in place with different content: the next query is fresh and exact") {
@@ -443,11 +485,15 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     IndexBuilder.build(spark, a, d, numShards = 4)
     val before = rows(Wand.topK(spark, d, Seq(1L), qs))
     assert(before == exactRows(a, qs))
-    // same path, new corpus, new shard count: stats, df and hints memos
-    // from the first index must not survive
+    val residentBefore = spark.sparkContext.getPersistentRDDs.size
+    // same path, new corpus, new shard count, and no release: the
+    // rewritten files fail the fingerprint, so the first index's
+    // segments, stats, df and hints must not be served
     IndexBuilder.build(spark, b, d, numShards = 3)
     val after = rows(Wand.topK(spark, d, Seq(1L), qs))
     assert(after == exactRows(b, qs))
     assert(after != before, "the two corpora must rank differently")
+    assert(spark.sparkContext.getPersistentRDDs.size == residentBefore,
+      "the stale entry's RDDs must be unpersisted when the new one loads")
   }
 }
