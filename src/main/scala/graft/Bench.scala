@@ -32,7 +32,7 @@ object Bench {
   val Inflate = sys.env.getOrElse("SPARK_GRAFT_INFLATE", "100").toInt
   val QueryReps = 3
 
-  private def mkSession(cores: Int): SparkSession = {
+  private[graft] def mkSession(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-$cores")

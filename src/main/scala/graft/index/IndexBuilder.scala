@@ -90,27 +90,39 @@ object IndexBuilder {
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
+  /** Names and lengths of every file under `path`, sorted — a
+    * driver-side listing through the path's own Hadoop FileSystem,
+    * which starts no Spark job. A missing path lists nothing. It is the
+    * fingerprint that keys caches by what the files are: a rewrite in
+    * place, from this JVM or another, changes it.
+    */
+  private[graft] def fileListing(spark: SparkSession, path: String): Seq[(String, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a plain recursive listStatus: listFiles' located statuses load
+    // owner and permissions per file, which the local file system
+    // does by forking a shell
+    def walk(d: org.apache.hadoop.fs.Path): Seq[(String, Long)] =
+      fs.listStatus(d).toSeq.flatMap(f =>
+        if (f.isDirectory) walk(f.getPath) else Seq(f.getPath.toString -> f.getLen))
+    if (fs.exists(p)) walk(p).sorted else Nil
+  }
+
   /** Hint fan-in per term (see the hints write in [[build]]). */
   val HintsPerTerm = 8
-
-  /** Phase timer for fixed-cost profiling (`-Dgraft.profile.build`):
-    * the build's scaling efficiency at small corpora is bounded by
-    * per-phase driver choreography, so each phase is measurable. */
-  @inline private def phase[A](name: String)(f: => A): A = {
-    if (!sys.props.contains("graft.profile.build")) f
-    else {
-      val t0 = System.nanoTime(); val a = f
-      println(f"[build-phase] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      a
-    }
-  }
 
   /** Hint-selection strategy family — the reference ships several hint
     * callbacks (Random/Disjoint/KDisjoint/Epsilon/KCenters,
     * /root/reference/src/searchgraph/hints.jl:42-264); the engine's
     * sidecar schema is strategy-agnostic (any H REAL (doc_id, tf, dl)
     * witnesses keep the θ warm-start sound), so strategies differ only
-    * in WHICH witnesses they keep.
+    * in WHICH witnesses they keep. Random (hints.jl:42-75) is not kept:
+    * on the fixed query set it scored 6,052 docs against 6,061 with no
+    * hints and 5,665 with top-H (BASELINE.md "Hint strategy family
+    * A/B"). Disjoint/KDisjoint (hints.jl:100-175) select by
+    * graph-adjacency disjointness, a resource an inverted index doesn't
+    * have, and KCenters diversity (hints.jl:221-264) is subsumed by the
+    * ε-net over the 1-D tfn space (fft centers on a line ARE an ε-net).
     */
   sealed trait HintStrategy extends Serializable
 
@@ -131,24 +143,6 @@ object IndexBuilder {
     * reference's `quantile=0` absolute-ε mode).
     */
   final case class EpsilonNetHints(eps: Double = 0.02, pool: Int = 4 * HintsPerTerm)
-      extends HintStrategy
-
-  /** The reference's `RandomHints` (hints.jl:42-75: "hints are a
-    * random sample of the dataset") on the term-witness space: rank
-    * witnesses by `xxhash64(doc_id, seed)` instead of tfn, so the kept
-    * top-H-by-hash set is a seeded uniform sample WITHOUT replacement
-    * of the term's full posting set — still bounded map-side by the
-    * same aggregator (≤H rows per (partition, term) shuffle, any df).
-    * Soundness is free (any real witnesses certify a θ0 lower bound);
-    * selectivity is whatever the sample gives — the reference's own
-    * baseline arm, kept as the control in `tools.HintsAB strategies`.
-    * The remaining reference callbacks don't transfer: Disjoint/
-    * KDisjoint (hints.jl:100-175) select by graph-adjacency
-    * disjointness, a resource an inverted index doesn't have, and
-    * KCenters diversity (hints.jl:221-264) is subsumed by the ε-net
-    * over the 1-D tfn space (fft centers on a line ARE an ε-net).
-    */
-  final case class RandomWitnessHints(seed: Long = 0x9E3779B97F4A7C15L)
       extends HintStrategy
 
   final case class HintRow(doc_id: Long, tf: Long, dl: Long)
@@ -257,18 +251,10 @@ object IndexBuilder {
     val poolSize = strategy match {
       case TopHHints => HintsPerTerm
       case EpsilonNetHints(_, pool) => pool
-      case RandomWitnessHints(_) => HintsPerTerm
-    }
-    // the aggregator's rank column: tfn ("strongest first") except for
-    // the random strategy, where a doc_id hash makes top-H ≡ a seeded
-    // uniform sample of the term's posting set
-    val rankCol = strategy match {
-      case RandomWitnessHints(seed) =>
-        xxhash64(col("doc_id"), lit(seed)).cast("double")
-      case _ => graft.functions.BM25.tfNormCol(col("tf"), col("dl"), lit(avgdl))
     }
     df.select(col("term"), col("doc_id").cast("long"), col("tf").cast("long"),
-        col("dl").cast("long"), rankCol.as("tfn"))
+        col("dl").cast("long"),
+        graft.functions.BM25.tfNormCol(col("tf"), col("dl"), lit(avgdl)).as("tfn"))
       .as[(String, Long, Long, Long, Double)]
       .groupByKey(_._1)
       .agg(new HintsTopH(poolSize).toColumn.name("hs"))
@@ -276,7 +262,6 @@ object IndexBuilder {
         val kept = strategy match {
           case TopHHints => hs
           case EpsilonNetHints(eps, _) => epsilonNet(hs, avgdl, eps, HintsPerTerm)
-          case RandomWitnessHints(_) => hs
         }
         kept.map(r => (term, r.doc_id, r.tf, r.dl))
       }
@@ -346,8 +331,8 @@ object IndexBuilder {
     val dl = docs.select(col("doc_id"),
       size(Tokenizer.tokensCol(col("text"))).as("dl"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val statsRow = phase("stats_action") { dl.agg(
-      count(lit(1)).as("n"), sum("dl").as("sum_dl"), max("doc_id").as("maxd")).head() }
+    val statsRow = dl.agg(
+      count(lit(1)).as("n"), sum("dl").as("sum_dl"), max("doc_id").as("maxd")).head()
     val nDocs = statsRow.getLong(0)
     val sumDl = statsRow.getLong(1)
     val maxDoc = statsRow.getLong(2)
@@ -406,11 +391,11 @@ object IndexBuilder {
     val pending = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
     def track(f: Future[Unit]): Future[Unit] = { pending += f; f }
     try {
-    val postingsF = track(Future(phase("postings_seal_write") {
+    val postingsF = track(Future {
       sealedPostings.write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", overwriteMode)
         .partitionBy("shard").parquet(paths.postings(snapshotId))
-    }))
+    })
 
     // ---- seal norms sidecar
     val dlShard = dl.select(shardCol.as("shard"), col("doc_id"), col("dl").cast("long"))
@@ -423,11 +408,11 @@ object IndexBuilder {
       .repartition(numShards, col("shard"))
       .sortWithinPartitions("shard", "doc_id")
       .mapPartitions(sealNormRuns)
-    val normsF = track(Future(phase("norms_seal_write") {
+    val normsF = track(Future {
       sealedNorms.write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", overwriteMode)
         .partitionBy("shard").parquet(paths.norms(snapshotId))
-    }))
+    })
     // termstats + hints read artifacts the postings job produces (the
     // sealed segments / the tfScoped cache it fills) — wait for it
     Await.result(postingsF, Duration.Inf)
@@ -442,12 +427,12 @@ object IndexBuilder {
         .select(col("term"), col("df"), col("cf"),
           graft.functions.BM25.idfCol(lit(nDocs), col("df")).as("idf"))
         .as[TermStats]
-      val termstatsF = track(Future(phase("termstats_write") {
-        termstats.write.mode(SaveMode.Overwrite).parquet(paths.termstats(snapshotId)) }))
+      val termstatsF = track(Future(
+        termstats.write.mode(SaveMode.Overwrite).parquet(paths.termstats(snapshotId))))
 
-      val statsF = track(Future(phase("stats_write") {
+      val statsF = track(Future(
         Seq(SnapStats(snapshotId, nDocs, sumDl, avgdl, numShards, maxDoc)).toDS()
-          .write.mode(SaveMode.Overwrite).parquet(paths.stats(snapshotId)) }))
+          .write.mode(SaveMode.Overwrite).parquet(paths.stats(snapshotId))))
 
       // ---- per-term hints sidecar: the reference's search-start hints
       // (/root/reference/src/searchgraph/hints.jl:42-264) transferred to
@@ -464,9 +449,8 @@ object IndexBuilder {
       val hintSrc = if (onlyShards.isEmpty) tfScoped.toDF() else tf.toDF()
       // hints reads the tfScoped cache (filled by the postings job) —
       // independent of termstats/stats, so all three run concurrently
-      phase("hints_write") {
-        topHintsPerTerm(hintSrc, avgdl, hintStrategy)
-          .write.mode(SaveMode.Overwrite).parquet(paths.hints(snapshotId)) }
+      topHintsPerTerm(hintSrc, avgdl, hintStrategy)
+        .write.mode(SaveMode.Overwrite).parquet(paths.hints(snapshotId))
       Await.result(termstatsF, Duration.Inf)
       Await.result(statsF, Duration.Inf)
     }
@@ -485,8 +469,7 @@ object IndexBuilder {
     }
 
     // ---- lineage + metrics from the WRITTEN artifacts, then commit
-    phase("commit_manifest") {
-      commitManifest(spark, paths, snapshotId, parentSnapshot, onlyShards) }
+    commitManifest(spark, paths, snapshotId, parentSnapshot, onlyShards)
   }
 
   /** Manifest + metrics for the shards just sealed; manifest row

@@ -377,26 +377,12 @@ object Wand {
   private val resident = TrieMap.empty[Key, Resident]
   private val loadLocks = TrieMap.empty[Key, AnyRef]
 
-  /** Names and lengths of every file under the snapshots' sidecar dirs
-    * — a driver-side listing through each path's own Hadoop FileSystem,
-    * which starts no Spark job. A missing dir contributes nothing.
-    */
+  /** The [[IndexBuilder.fileListing]] of the snapshots' sidecar dirs. */
   private def fingerprint(spark: SparkSession, indexDir: String,
       snaps: Seq[Long]): Seq[(String, Long)] = {
     val paths = IndexBuilder.IndexPaths(indexDir)
-    val conf = spark.sparkContext.hadoopConfiguration
     snaps.flatMap(s => Seq(paths.postings(s), paths.norms(s), paths.termstats(s),
-        paths.stats(s), paths.hints(s))).flatMap { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(conf)
-      // a plain recursive listStatus: listFiles' located statuses load
-      // owner and permissions per file, which the local file system
-      // does by forking a shell
-      def walk(d: org.apache.hadoop.fs.Path): Seq[(String, Long)] =
-        fs.listStatus(d).toSeq.flatMap(f =>
-          if (f.isDirectory) walk(f.getPath) else Seq(f.getPath.toString -> f.getLen))
-      if (fs.exists(p)) walk(p).sorted else Nil
-    }
+        paths.stats(s), paths.hints(s))).flatMap(IndexBuilder.fileListing(spark, _))
   }
 
   /** The resident entry for (indexDir, snaps): the current one when

@@ -196,7 +196,6 @@ object LinkOps {
       val tele = (15L * PrScale) / (PrDen * n)
       val outdegNodes = outdeg.select(col("src").as("doc_id")).persist()
       try {
-        val debug = sys.env.get("SPARK_GRAFT_PR_DEBUG").contains("1")
         // localCheckpoint persists its RDD (MEMORY_AND_DISK) and the
         // ContextCleaner only reclaims it when unreferenced — without
         // an explicit unpersist every iteration's rank vector stays
@@ -210,8 +209,7 @@ object LinkOps {
           }
         var ranks = nodes.select(col("doc_id"), lit(PrScale / n).as("r"))
           .localCheckpoint(true)
-        for (it <- 1 to iters) {
-          val t0 = System.nanoTime()
+        for (_ <- 1 to iters) {
           // the dangling mass rides along as a 1-row frame (broadcast
           // NLJ) instead of a separate driver action: one job per
           // iteration — the eager checkpoint — and because `ranks` is a
@@ -234,8 +232,6 @@ object LinkOps {
                 expr(s"($PrDampNum * dang) div ($PrDen * ${n}L)")).as("r"))
             .localCheckpoint(true)
           checkpointRdd(prev).foreach(_.unpersist(false))
-          if (debug) System.err.println(
-            f"[pagerank] iter $it: ${(System.nanoTime() - t0) / 1e9}%.2f s")
         }
         ranks.select(col("doc_id"), col("r").as("rank_u")).orderBy("doc_id")
       } finally outdegNodes.unpersist(false)

@@ -838,10 +838,11 @@ object TextOps {
     * the pre-exchange split. Measured on the shingle twin of this
     * frame at sf0.1: 10.1 s → 0.19 s once the checkpoint blocks the
     * pushdown and the filter runs on the materialized array instead
-    * (r6 SliceProbe; the same mechanism cost q56/q58/q59/q60/q64 their
-    * r5 "weak" ratings). Callers get the exploded frame as a cheap
-    * view — re-exploding the checkpointed arrays costs ~0.1 s, so the
-    * exploded frame itself no longer needs its own checkpoint.
+    * (OPTIMIZATION_r06.md Finding 1; the same mechanism cost
+    * q56/q58/q59/q60/q64 their r5 "weak" ratings). Callers get the
+    * exploded frame as a cheap view — re-exploding the checkpointed
+    * arrays costs ~0.1 s, so the exploded frame itself no longer needs
+    * its own checkpoint.
     */
   private def windowFrame(docsDf: DataFrame, w: Int): DataFrame =
     docsDf.select(col("doc_id"), toks.as("t"))

@@ -58,25 +58,32 @@ object VectorOps {
         "use the ANN/LSH scale path (AnnOps) or raise graft.exact.maxN")
   }
 
-  /** Row counts for the guard, memoized per (table, sfDir): fixture
-    * tables are immutable per directory, and the guard used to cost one
-    * count() JOB per invocation (rerank alone triggered it 4×) — pure
-    * driver-side latency noise on the query paths. A caller that
-    * REWRITES a corpus directory in-process must call
-    * [[invalidateCounts]] or the guard checks the stale count (unlike
-    * [[graft.index.Wand]]'s resident entries, which a file fingerprint
-    * keeps fresh).
+  /** Row counts for the guard, memoized per table path and stamped with
+    * the table's [[graft.index.IndexBuilder.fileListing]]: the guard
+    * used to cost one count() JOB per invocation (rerank alone
+    * triggered it 4×) — pure driver-side latency noise on the query
+    * paths. A table rewritten in place lists different files, so its
+    * next call counts again.
     */
-  private val countMemo = scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+  private val countMemo =
+    scala.collection.concurrent.TrieMap.empty[String, (Seq[(String, Long)], Long)]
 
-  private[graft] def invalidateCounts(sfDir: String): Unit =
-    countMemo.keys.filter(_._2 == sfDir).foreach(countMemo.remove)
+  private def memoCount(spark: SparkSession, table: String)(count: => Long): Long = {
+    val fp = graft.index.IndexBuilder.fileListing(spark, table)
+    countMemo.get(table) match {
+      case Some((f, n)) if f == fp => n
+      case _ =>
+        val n = count
+        countMemo.put(table, (fp, n))
+        n
+    }
+  }
 
   private[graft] def embCount(spark: SparkSession, sfDir: String): Long =
-    countMemo.getOrElseUpdate(("embeddings", sfDir), Corpus.embeddings(spark, sfDir).count())
+    memoCount(spark, s"$sfDir/embeddings.parquet")(Corpus.embeddings(spark, sfDir).count())
 
   private[operators] def docCount(spark: SparkSession, sfDir: String): Long =
-    countMemo.getOrElseUpdate(("documents", sfDir), Corpus.documents(spark, sfDir).count())
+    memoCount(spark, s"$sfDir/documents.parquet")(Corpus.documents(spark, sfDir).count())
 
   private def emb(spark: SparkSession, sfDir: String, alias: String): DataFrame = {
     guardExact(spark, embCount(spark, sfDir))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measure the persisted-ANN-index bet at a synthetic scale the fixture
@@ -14,21 +13,14 @@ import org.apache.spark.sql.functions._
   *  3. vector-carrying persisted IVF codes ([[graft.index.AnnIndex]]
   *     `vecs`): pruned scan carries the vectors — the batch plan never
   *     touches the corpus table.
-  * `runMain graft.tools.AnnIndexBench [n] [dim] [batch] [cores]`
+  * `runMain graft.tools.AnnIndexBench [n] [dim] [batch]`, at [[Probe.cores]]
   */
 object AnnIndexBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 1000000
     val dim = if (args.length > 1) args(1).toInt else 64
     val batch = if (args.length > 2) args(2).toInt else 16
-    val cores = if (args.length > 3) args(3).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session()
     import spark.implicits._
     def t[A](f: => A): (Double, A) = {
       val t0 = System.nanoTime(); val a = f

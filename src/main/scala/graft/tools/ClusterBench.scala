@@ -34,14 +34,18 @@ object ClusterBench {
   }
 
   def main(args: Array[String]): Unit = {
-    // master comes from spark-submit when present; default for bare
-    // `sbt runMain` testing
-    def withMaster(b: SparkSession.Builder): SparkSession.Builder =
-      if (sys.props.contains("spark.master")) b else b.master("local[32]")
+    // master and memory come from spark-submit when present; a bare
+    // `sbt runMain` falls back to the tools' local session
+    def session(app: String): SparkSession =
+      if (!sys.props.contains("spark.master")) Probe.session()
+      else {
+        val s = SparkSession.builder().appName(app).getOrCreate()
+        s.sparkContext.setLogLevel("WARN")
+        s
+      }
     if (args.headOption.contains("--inflate")) {
       val Array(_, sfDir, factor, outDir) = args
-      val spark = withMaster(SparkSession.builder().appName("graft-inflate")).getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = session("graft-inflate")
       val (tmp, n) = graft.Bench.inflate(spark, sfDir, factor.toInt)
       // inflate() writes into its own temp dir; move to the caller's path
       java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
@@ -56,14 +60,9 @@ object ClusterBench {
     val shards = args(2).toInt
     val reps = if (args.length > 3) args(3).toInt else 3
     val expectExecs = if (args.length > 4) args(4).toInt else 0
-    // master/memory come from spark-submit; only engine knobs here
-    val spark = withMaster(SparkSession.builder()
-      .appName("graft-cluster-bench"))
-      .config("spark.sql.shuffle.partitions", shards)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-cluster-bench")
+    spark.conf.set("spark.sql.shuffle.partitions", shards.toLong)
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     try {
       // Executor JVMs register asynchronously after app start; timing a
       // build before they all arrive measures a partially-sized cluster

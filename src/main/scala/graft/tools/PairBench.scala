@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale evidence for the round-5 bucketed pair operators: the exact
@@ -11,20 +10,13 @@ import org.apache.spark.sql.functions._
   * cannot run (n² = 10¹² pairs at n = 1M), and verifies from the
   * executed plans that no cartesian node appears anywhere.
   *
-  * `runMain graft.tools.PairBench [n] [dim] [cores]`
+  * `runMain graft.tools.PairBench [n] [dim]`, at [[Probe.cores]]
   */
 object PairBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 1000000
     val dim = if (args.length > 1) args(1).toInt else 64
-    val cores = if (args.length > 2) args(2).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session()
     import spark.implicits._
     def t[A](f: => A): (Double, A) = {
       val t0 = System.nanoTime(); val a = f

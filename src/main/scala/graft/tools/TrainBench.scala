@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measure IVF center-training cost: distributed [[graft.operators.CentersOps.fft]]
   * (k sequential driver-coordinated Spark jobs — the reference's loop
   * shape) vs [[graft.operators.CentersOps.fftSampled]] (one collect +
   * a driver-local loop over a deterministic bounded sample).
-  * `runMain graft.tools.TrainBench <sfDir> <nlist> [sampleFactor] [cores]`
+  * `runMain graft.tools.TrainBench <sfDir> <nlist> [sampleFactor]`, at [[Probe.cores]]
   * — the BASELINE.md "training cost vs full fft" evidence the round-3
   * verdict asks for. Also reports the IVF macrorecall under sampled
   * training so cost is never quoted without its recall.
@@ -16,14 +14,7 @@ object TrainBench {
     val sfDir = args(0)
     val nlist = if (args.length > 1) args(1).toInt else 64
     val factor = if (args.length > 2) args(2).toInt else 16
-    val cores = if (args.length > 3) args(3).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session()
     import graft.operators.{AnnOps, CentersOps, VectorOps}
     def t[A](f: => A): (Double, A) = {
       val t0 = System.nanoTime(); val a = f

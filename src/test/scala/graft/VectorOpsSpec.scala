@@ -160,6 +160,20 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(VectorOps.allKnn(spark, dir, k = 1).count() > 0)
   }
 
+  test("guard row count follows a table rewritten in place") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft-count-").toString
+    def write(n: Int): Unit = (0 until n).map(i => (i.toLong, Array(1.0f, 0.0f)))
+      .toDF("vec_id", "embedding").write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    try {
+      write(3)
+      assert(VectorOps.embCount(spark, d) == 3)
+      write(6)
+      assert(VectorOps.embCount(spark, d) == 6, "a stale count reached the exact guard")
+    } finally graft.operators.StreamingOps.deleteRec(d)
+  }
+
   test("distsample quantiles are sorted and within [0,2]") {
     val spark = TestSpark.spark
     val qs = VectorOps.distSample(spark, dir).collect().map(_.getDouble(1))

@@ -231,43 +231,6 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(eps <= none, "ε-net hints may never cost more than no hints")
   }
 
-  test("RandomWitnessHints: seeded uniform witness sample, deterministic, warm-start sound") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val strat = IndexBuilder.RandomWitnessHints()
-    val d1 = tmp("graft-hints-rnd1-")
-    val d2 = tmp("graft-hints-rnd2-")
-    IndexBuilder.build(spark, TestSpark.Sf0001, d1, numShards = 4, hintStrategy = strat)
-    IndexBuilder.build(spark, TestSpark.Sf0001, d2, numShards = 2, hintStrategy = strat)
-    def sidecar(d: String): Map[(String, Long), (Long, Long)] =
-      spark.read.parquet(s"$d/hints/snap=1")
-        .select("term", "doc_id", "tf", "dl").as[(String, Long, Long, Long)]
-        .collect().map(r => (r._1, r._2) -> (r._3, r._4)).toMap
-    val s1 = sidecar(d1)
-    // deterministic sample: identical witnesses regardless of shard
-    // count / partitioning (top-H-by-hash is order-free)
-    assert(s1 == sidecar(d2), "random witness sample must be seed-deterministic")
-    assert(s1.nonEmpty)
-    // a different seed picks a different sample (the hash actually ranks)
-    val d3 = tmp("graft-hints-rnd3-")
-    IndexBuilder.build(spark, TestSpark.Sf0001, d3, numShards = 4,
-      hintStrategy = IndexBuilder.RandomWitnessHints(seed = 7L))
-    assert(sidecar(d3) != s1, "different seed must sample differently")
-    // ≤H witnesses per term
-    val byTerm = s1.keys.groupBy(_._1)
-    byTerm.foreach { case (t, ks) =>
-      assert(ks.size <= IndexBuilder.HintsPerTerm, s"term $t: ${ks.size} hints")
-    }
-    // soundness: results identical, work never grows
-    val (hitsOn, mOn) = Wand.topKWithMetrics(spark, d1, Seq(1L), useHints = true)
-    val (hitsOff, mOff) = Wand.topKWithMetrics(spark, d1, Seq(1L), useHints = false)
-    assert(rows(hitsOn) == rows(hitsOff), "random warm-start changed results")
-    def scored(mdf: org.apache.spark.sql.DataFrame): Long =
-      mdf.collect().map(_.getLong(1)).sum
-    info(s"docs scored: random=${scored(mOn)} none=${scored(mOff)}")
-    assert(scored(mOn) <= scored(mOff))
-  }
-
   test("static index pruning: tfn-floor build trades size for recall ≥ 0.9") {
     val spark = TestSpark.spark
     import spark.implicits._
