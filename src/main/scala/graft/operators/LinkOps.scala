@@ -196,17 +196,9 @@ object LinkOps {
       val tele = (15L * PrScale) / (PrDen * n)
       val outdegNodes = outdeg.select(col("src").as("doc_id")).persist()
       try {
-        // localCheckpoint persists its RDD (MEMORY_AND_DISK) and the
-        // ContextCleaner only reclaims it when unreferenced — without
-        // an explicit unpersist every iteration's rank vector stays
-        // resident for the rest of the job (~iters stale copies per
-        // call, multiplied across bench reps). Keep only the latest:
-        // after the new checkpoint materializes, drop the previous
-        // iteration's RDD via its LogicalRDD handle.
-        def checkpointRdd(df: DataFrame) =
-          df.queryExecution.analyzed.collectFirst {
-            case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-          }
+        // keep only the latest rank vector resident: after the new
+        // checkpoint materializes, drop the previous iteration's
+        // (see [[unpersistCheckpoint]])
         var ranks = nodes.select(col("doc_id"), lit(PrScale / n).as("r"))
           .localCheckpoint(true)
         for (_ <- 1 to iters) {
@@ -231,7 +223,7 @@ object LinkOps {
               (lit(tele) + coalesce(col("c"), lit(0L)) +
                 expr(s"($PrDampNum * dang) div ($PrDen * ${n}L)")).as("r"))
             .localCheckpoint(true)
-          checkpointRdd(prev).foreach(_.unpersist(false))
+          unpersistCheckpoint(prev)
         }
         ranks.select(col("doc_id"), col("r").as("rank_u")).orderBy("doc_id")
       } finally outdegNodes.unpersist(false)

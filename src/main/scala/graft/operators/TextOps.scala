@@ -12,6 +12,16 @@ import org.apache.spark.sql.functions._
   * near-dup, MinHash-LSH and SimHash sketches, language id, quality
   * scoring, token accounting, fingerprinting.
   *
+  * One text-derivation frame serves every operator that derives from
+  * the token stream. [[spread]] is the one partitioning rule: corpus
+  * rows are rebalanced to the session's default parallelism only when
+  * the corpus is read as fewer splits than that. [[derive]] tokenizes
+  * once, builds the per-doc array columns an operator reads (3-token
+  * shingles, w-token windows, lines, 2-grams) and localCheckpoints that
+  * array frame before any explode; operators then explode, aggregate
+  * and join cheap views of the checkpoint. [[langId]] alone stays on
+  * the scan partitioning (see [[spread]]).
+  *
   * Scale shapes: everything is explode → hash-agg → (broadcast/equi)
   * join; pair generation only ever happens through an inverted
   * (shingle → docs) join or an LSH bucket join — never a cross join.
@@ -21,26 +31,58 @@ object TextOps {
   private def docs(spark: SparkSession, sfDir: String): DataFrame =
     Corpus.documents(spark, sfDir).select(col("doc_id"), col("text"))
 
-  /** [[docs]] rebalanced to the session's default parallelism BEFORE
-    * any per-row derivation. A single-file corpus is ONE scan split,
-    * and every narrow transform (tokenize, shingle, explode, window)
-    * inherits that partitioning — without this the whole derivation
-    * chain, and every localCheckpoint taken from it, runs on one task
-    * (the serialization jaccardPairs' comment documents; measured up
-    * to ~7× on the substring/shingle family, r6). The repartition is
-    * scale-adaptive (defaultParallelism, never a constant) and moves
-    * only the raw text — at cluster scale a many-split input makes it
-    * a cheap rebalance rather than a bottleneck fix.
+  private val toks: Column = Tokenizer.tokensCol(col("text"))
+
+  // ---------------------------------------------------------------- text-derivation frame
+
+  /** Corpus rows `d` spread over the session's default parallelism,
+    * applied BEFORE any per-row derivation. Every narrow transform
+    * (tokenize, shingle, explode, window) inherits the input's
+    * partitioning, so a single-file corpus — ONE scan split — would run
+    * the whole derivation chain, and every checkpoint taken from it, on
+    * one task (measured up to ~7× on the substring/shingle family, r6).
+    * Rebalancing the derived frame instead would leave the derivation
+    * itself on the scan split and shuffle the wider arrays. An input
+    * already read as ≥ defaultParallelism splits (a many-file corpus,
+    * any corpus at cluster scale) is used as read: the round-robin
+    * shuffle would move every row and spread nothing. `d` is a scan of
+    * corpus rows, so reading its split count plans it but runs no job.
     *
     * Integer/string-derivation operators only: float-sum operators
     * (langId's log-likelihood sums) deliberately keep the scan
     * partitioning so partial-aggregation order — and with it last-ulp
     * rounding — stays exactly as oracled.
     */
-  private def docsPar(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir).repartition(spark.sparkContext.defaultParallelism)
+  private[graft] def spread(d: DataFrame): DataFrame = {
+    val par = d.sparkSession.sparkContext.defaultParallelism
+    if (d.queryExecution.toRdd.getNumPartitions < par) d.repartition(par) else d
+  }
 
-  private val toks: Column = Tokenizer.tokensCol(col("text"))
+  /** The derived array frame `(doc_id, cols…)` over [[spread]] rows of
+    * `d`, materialized once by `localCheckpoint` (eager,
+    * lineage-truncated). Each of `cols` may read the token array `t` and
+    * any column of `d`. Tokenizing ONCE into `t` matters: inlining the
+    * tokenizer into a transform lambda re-splits the full text per
+    * array element (measured ~5× on the whole operator at sf0.1).
+    *
+    * The checkpoint sits before every explode of the arrays, and it is
+    * load-bearing: `InferFiltersFromGenerate` synthesizes `size(a) > 0
+    * AND isnotnull(a)` from an explode and pushes it through every
+    * intermediate project down to the scan — where `a` is no longer a
+    * column but the full inlined tokenize+derive expression, evaluated
+    * INTERPRETED (higher-order functions are codegen-fallback) per row
+    * on the pre-exchange split. Measured on the shingle frame at sf0.1:
+    * 10.1 s → 0.19 s once the checkpoint blocks the pushdown
+    * (OPTIMIZATION_r06.md Finding 1; the same mechanism cost
+    * q56/q58/q59/q60/q64 their r5 "weak" ratings). It also turns an
+    * operator's several references to the frame (df aggregates, both
+    * join sides, verification) into scans rather than re-derivations.
+    * Exploded views of the checkpoint are cheap (~0.1 s) and take no
+    * checkpoint of their own. At cluster scale the same reuse is a
+    * persist(DISK)/table write.
+    */
+  private[graft] def derive(d: DataFrame, cols: Column*): DataFrame =
+    spread(d).withColumn("t", toks).select(col("doc_id") +: cols: _*).localCheckpoint()
 
   // ---------------------------------------------------------------- exact dedup
 
@@ -65,25 +107,13 @@ object TextOps {
 
   // ---------------------------------------------------------------- shingles
 
-  /** Distinct 3-token shingles per doc. Tokenize ONCE into a column,
-    * then index it — inlining the tokenizer into the transform lambda
-    * re-splits the full text 3× per shingle position (measured ~5× on
-    * the whole operator at sf0.1).
-    */
-  def docShingles(spark: SparkSession, sfDir: String): DataFrame =
-    docShinglesFrom(docs(spark, sfDir))
-
-  /** Injectable-docs form — callers that need the derivation itself to
-    * run parallel pass a [[docsPar]]-rebalanced frame.
-    */
-  private[graft] def docShinglesFrom(docsDf: DataFrame): DataFrame =
-    docsDf
-      .select(col("doc_id"), toks.as("t"))
-      .select(col("doc_id"), array_distinct(
-        when(size(col("t")) >= 3,
-          expr("transform(sequence(1, size(t) - 2), " +
-            "i -> concat(t[i-1], ' ', t[i], ' ', t[i+1]))"))
-          .otherwise(array().cast("array<string>"))).as("shingles"))
+  /** Distinct 3-token shingles of `t`, a [[derive]] column. */
+  private val shingles: Column =
+    array_distinct(
+      when(size(col("t")) >= 3,
+        expr("transform(sequence(1, size(t) - 2), " +
+          "i -> concat(t[i-1], ' ', t[i], ' ', t[i+1]))"))
+        .otherwise(array().cast("array<string>"))).as("shingles")
 
   /** DuckDB fragment: (doc_id, shingles LIST) with 1-based subscripts. */
   private val duckShinglesSql: String =
@@ -118,17 +148,9 @@ object TextOps {
     */
   def jaccardPairs(spark: SparkSession, sfDir: String, tau: Double = 0.5,
       dfCap: Int = ShingleDfCap): DataFrame = {
-    // materialize the shingle table ONCE (localCheckpoint = eager,
-    // lineage-truncated): it feeds five downstream references (df agg,
-    // both sides of the self-join, both verify joins) and tokenization
-    // is the dominant linear cost — without this the plan re-tokenizes
-    // the corpus per reference (measured ~5× on the whole operator).
-    // The rebalance matters as much as the reuse, and it sits BEFORE
-    // the derivation ([[docsPar]]): repartitioning the derived frame
-    // would leave tokenize+shingle itself on the one scan split and
-    // pay a second, wider shuffle of the shingle arrays.
-    // At cluster scale the same reuse is a persist(DISK)/table write.
-    val sh = docShinglesFrom(docsPar(spark, sfDir)).localCheckpoint()
+    // the shingle frame feeds five references: df agg, both sides of
+    // the self-join, both verify joins
+    val sh = derive(docs(spark, sfDir), shingles)
     val invAll = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
     // the HOT side is the small one: shingles with df > cap are by
     // definition few (web boilerplate), so broadcast them and strip
@@ -226,16 +248,12 @@ object TextOps {
     * oracle) with failure probability ≪ 1e-8 on this corpus.
     */
   def minhashLsh(spark: SparkSession, sfDir: String, tau: Double = 0.5): DataFrame =
-    // one materialization feeds both the signature pass and verification
-    // (rebalance BEFORE derivation — see jaccardPairs / [[docsPar]])
-    minhashLshFrom(spark,
-      docShinglesFrom(docsPar(spark, sfDir)).localCheckpoint(),
-      tau)
+    minhashLshFrom(spark, derive(docs(spark, sfDir), shingles), tau)
 
-  /** Injectable-shingle form, for callers that already hold a
-    * materialized (doc_id, shingles) frame — [[cleanPipeline]] shares
-    * ONE checkpointed frame between this and [[decontaminateFrom]]
-    * rather than tokenizing + shingling the corpus twice.
+  /** Injectable-shingle form over a [[derive]]d (doc_id, shingles)
+    * frame — [[cleanPipeline]] shares ONE frame between this and
+    * [[decontaminateFrom]] rather than tokenizing + shingling the
+    * corpus twice.
     */
   private[graft] def minhashLshFrom(spark: SparkSession, shDf: DataFrame,
       tau: Double): DataFrame = {
@@ -278,9 +296,9 @@ object TextOps {
     * shuffle-friendly map cost paid once per corpus.
     */
   def simhashSigs(spark: SparkSession, sfDir: String): DataFrame = {
-    // rebalance before the explode ([[docsPar]]); all sums here are
-    // integer (tf counts, ±tf votes), so partitioning cannot move a bit
-    val tf = docsPar(spark, sfDir)
+    // all sums here are integer (tf counts, ±tf votes), so the
+    // partitioning cannot move a bit
+    val tf = spread(docs(spark, sfDir))
       .select(col("doc_id"), explode(toks).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val hashed = tf.select(col("doc_id"), col("tf"),
@@ -468,7 +486,7 @@ object TextOps {
     * length saturation — each a Spark built-in expression.
     */
   def qualityScore(spark: SparkSession, sfDir: String): DataFrame =
-    docsPar(spark, sfDir)
+    spread(docs(spark, sfDir))
       .select(col("doc_id"), toks.as("t"))
       .select(
         col("doc_id").cast("long"),
@@ -582,7 +600,11 @@ object TextOps {
     * alternating large-star/small-star contraction is the documented
     * upgrade if diameters ever grow). `localCheckpoint` cuts the
     * per-round lineage so the plan does not deepen with the iteration
-    * count.
+    * count; each round's checkpoint is released once the next round
+    * has compared against it, and the edge checkpoints once the loop
+    * ends, so a call leaves only the returned labels resident. Round 0
+    * reads `allDocs` as given: checkpointing it would save one doc-id
+    * scan at the price of one eager job per call.
     */
   private[graft] def dupClustersFrom(allDocs: DataFrame, pairs: DataFrame): DataFrame = {
     val edgesRaw =
@@ -595,8 +617,8 @@ object TextOps {
       // partitioning, so the per-round join sees edges pre-clustered
       // on dst and only ever exchanges the labels side
       else edgesRaw.repartition(col("dst")).localCheckpoint()
-    var labels = allDocs.select(col("doc_id").cast("long"),
-      col("doc_id").cast("long").as("lbl")).localCheckpoint()
+    val seed = allDocs.select(col("doc_id").cast("long"), col("doc_id").cast("long").as("lbl"))
+    var labels = seed
     var changed = 1L
     while (changed > 0) {
       val prop = edges.join(labels, edges("dst") === labels("doc_id"))
@@ -606,8 +628,10 @@ object TextOps {
         .localCheckpoint()
       changed = next.as("n").join(labels.as("o"), "doc_id")
         .filter(col("n.lbl") =!= col("o.lbl")).count()
+      if (labels ne seed) unpersistCheckpoint(labels)
       labels = next
     }
+    Seq(edgesRaw, edges).foreach(unpersistCheckpoint)
     labels.select(col("doc_id"), col("lbl").as("cluster_id")).orderBy("doc_id")
   }
 
@@ -678,11 +702,7 @@ object TextOps {
     */
   def decontaminate(spark: SparkSession, sfDir: String,
       minHits: Int = 1, stride: Int = BenchmarkIdStride): DataFrame =
-    // checkpointed arrays: decontaminateFrom explodes the frame twice
-    // (benchmark + corpus sides), and an unmaterialized frame would pay
-    // the inferred-generate re-derivation each time (windowFrame doc)
-    decontaminateFrom(docShinglesFrom(docsPar(spark, sfDir)).localCheckpoint(),
-      minHits, stride)
+    decontaminateFrom(derive(docs(spark, sfDir), shingles), minHits, stride)
 
   /** Injectable-shingle form (see [[minhashLshFrom]]). */
   private[graft] def decontaminateFrom(sh: DataFrame,
@@ -730,14 +750,12 @@ object TextOps {
     * token of the corpus. O(dl log dl) per doc, embarrassingly parallel.
     */
   def repetition(spark: SparkSession, sfDir: String): DataFrame =
-    repetitionFrom(docsPar(spark, sfDir))
+    repetitionFrom(docs(spark, sfDir))
 
   private[graft] def repetitionFrom(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), toks.as("t"))
-      .select(col("doc_id"),
-        sort_array(when(size(col("t")) >= 2,
-          expr("transform(sequence(1, size(t) - 1), i -> concat(t[i-1], ' ', t[i]))"))
-          .otherwise(array().cast("array<string>"))).as("g"))
+    derive(d, sort_array(when(size(col("t")) >= 2,
+        expr("transform(sequence(1, size(t) - 1), i -> concat(t[i-1], ' ', t[i]))"))
+        .otherwise(array().cast("array<string>"))).as("g"))
       .select(col("doc_id"), size(col("g")).as("n2"),
         // run-length fold over the sorted grams: dst = distinct grams,
         // mx = longest run = max multiplicity (mx is updated on every
@@ -813,62 +831,35 @@ object TextOps {
     * per-doc sorted-position fold for the interval union, the same
     * one-pass run-length trick as [[repetition]]. A hot boilerplate
     * window inflates only the combined count, not a reducer's row
-    * count; AQE's skew split handles the join side. The window frame
-    * is materialized once (localCheckpoint — it feeds both the dup
-    * derivation and the position join; recomputing it would tokenize
-    * the corpus twice).
+    * count; AQE's skew split handles the join side. The [[derive]]d
+    * window frame also carries each doc's token count, so the corpus
+    * is tokenized once.
     */
   def substringDup(spark: SparkSession, sfDir: String,
       w: Int = SubstringWindow): DataFrame =
     substringDupFrom(docs(spark, sfDir), w)
 
-  /** Positional w-token window frame (doc_id, pos, win) — one row per
-    * corpus token position that can start a window. Shared by the
-    * measurement pass ([[substringDup]]) and the removal pass
-    * ([[substringDedup]]).
-    *
-    * The window ARRAY column is localCheckpoint'ed BEFORE the explode.
-    * This is load-bearing, not hygiene: `InferFiltersFromGenerate`
-    * synthesizes `size(ws) > 0 AND isnotnull(ws)` from the explode and
-    * pushes it through every intermediate project down to the scan —
-    * where `ws` is no longer a column but the full inlined
-    * tokenize+window expression (each slice(t, …) re-deriving t, i.e.
-    * re-splitting the text per element), evaluated INTERPRETED
-    * (higher-order functions are codegen-fallback) twice per row on
-    * the pre-exchange split. Measured on the shingle twin of this
-    * frame at sf0.1: 10.1 s → 0.19 s once the checkpoint blocks the
-    * pushdown and the filter runs on the materialized array instead
-    * (OPTIMIZATION_r06.md Finding 1; the same mechanism cost
-    * q56/q58/q59/q60/q64 their r5 "weak" ratings). Callers get the
-    * exploded frame as a cheap view — re-exploding the checkpointed
-    * arrays costs ~0.1 s, so the exploded frame itself no longer needs
-    * its own checkpoint.
+  /** Positional w-token windows of `t` as an array of (pos, win)
+    * structs, a [[derive]] column shared by the measurement pass
+    * ([[substringDup]]) and the removal pass ([[substringDedup]]).
     */
-  private def windowFrame(docsDf: DataFrame, w: Int): DataFrame =
-    docsDf.select(col("doc_id"), toks.as("t"))
-      .select(col("doc_id"),
-        when(size(col("t")) >= w, expr(
-          s"transform(sequence(0, size(t) - $w), " +
-            s"i -> struct(i AS pos, concat_ws(' ', slice(t, i + 1, $w)) AS win))"))
-          .otherwise(expr("array()").cast("array<struct<pos:int,win:string>>"))
-          .as("ws"))
-      .localCheckpoint()
-      .select(col("doc_id"), explode(col("ws")).as("x"))
+  private def windows(w: Int): Column =
+    when(size(col("t")) >= w, expr(
+      s"transform(sequence(0, size(t) - $w), " +
+        s"i -> struct(i AS pos, concat_ws(' ', slice(t, i + 1, $w)) AS win))"))
+      .otherwise(expr("array()").cast("array<struct<pos:int,win:string>>"))
+      .as("ws")
+
+  /** One row (doc_id, pos, win) per window of a [[windows]] frame. */
+  private def windowRows(f: DataFrame): DataFrame =
+    f.select(col("doc_id"), explode(col("ws")).as("x"))
       .select(col("doc_id"), col("x.pos").as("pos"), col("x.win").as("win"))
 
-  private[graft] def substringDupFrom(docsDf0: DataFrame, w: Int): DataFrame = {
-    // rebalance BEFORE the window derivation: a single-split input
-    // serializes windowFrame, the checkpoint it feeds, and (via
-    // checkpoint partitioning) every downstream map side — the r5
-    // plan bug that put this family 5–10× over the q13 cost class
-    val docsDf = docsDf0.repartition(
-      docsDf0.sparkSession.sparkContext.defaultParallelism)
-    val d = docsDf.select(col("doc_id"), toks.as("t"))
-    val dims = d.select(col("doc_id"), size(col("t")).as("dl"),
-      greatest(size(col("t")) - lit(w - 1), lit(0)).as("n_windows"))
-    // windowFrame checkpoints its ARRAY column (see its scaladoc); the
-    // exploded view is cheap to recompute for both references below
-    val pos = windowFrame(docsDf, w)
+  private[graft] def substringDupFrom(docsDf: DataFrame, w: Int): DataFrame = {
+    val f = derive(docsDf, size(col("t")).as("dl"), windows(w))
+    val dims = f.select(col("doc_id"), col("dl"),
+      greatest(col("dl") - lit(w - 1), lit(0)).as("n_windows"))
+    val pos = windowRows(f)
     val dup = pos.groupBy("win").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select("win")
     val perDoc = pos.join(dup, "win")
@@ -935,7 +926,7 @@ object TextOps {
     * cross-engine gate is trivially bit-stable).
     *
     * Scale shape — fully relational, no per-row quadratic step: the
-    * shared [[windowFrame]] (one row per corpus token) → per-window
+    * shared [[windows]] frame (one row per corpus token) → per-window
     * count + min-struct canonical (ONE map-side-combinable aggregate,
     * no Window node) → non-canonical occurrences explode w drop
     * positions each (≤ w× corpus tokens, w a small constant) → LEFT
@@ -949,11 +940,10 @@ object TextOps {
       w: Int = SubstringWindow): DataFrame =
     substringDedupFrom(docs(spark, sfDir), w)
 
-  private[graft] def substringDedupFrom(docsDf0: DataFrame, w: Int): DataFrame = {
-    // rebalance before derivation — see substringDupFrom
-    val docsDf = docsDf0.repartition(
-      docsDf0.sparkSession.sparkContext.defaultParallelism)
-    val pos = windowFrame(docsDf, w) // array-checkpointed inside
+  private[graft] def substringDedupFrom(docsDf: DataFrame, w: Int): DataFrame = {
+    // the frame keeps the token array for the posexploded token side
+    val f = derive(docsDf, col("t"), windows(w))
+    val pos = windowRows(f)
     val canon = pos.groupBy("win")
       .agg(count(lit(1)).as("c"),
         min(struct(col("doc_id"), col("pos"))).as("canon"))
@@ -966,15 +956,14 @@ object TextOps {
         col("pos") === col("canon.pos")))
       .select(col("doc_id"),
         explode(expr(s"sequence(pos, pos + ${w - 1})")).as("p"))
-    val tokPos = docsDf
-      .select(col("doc_id"), posexplode(toks).as(Seq("p", "tok")))
+    val tokPos = f.select(col("doc_id"), posexplode(col("t")).as(Seq("p", "tok")))
     val kept = tokPos.join(dropPos, Seq("doc_id", "p"), "left_anti")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_kept"),
         array_join(transform(
           array_sort(collect_list(struct(col("p"), col("tok")))),
           x => x.getField("tok")), " ").as("clean_text"))
-    docsDf.select(col("doc_id"), size(toks).as("n_tokens"))
+    f.select(col("doc_id"), size(col("t")).as("n_tokens"))
       .join(kept, Seq("doc_id"), "left")
       .select(col("doc_id").cast("long"),
         col("n_tokens").cast("long"),
@@ -1102,20 +1091,16 @@ object TextOps {
     * bounded by corpus shingle occurrences) → per-doc integer sums.
     */
   def shingleNovelty(spark: SparkSession, sfDir: String): DataFrame = {
-    // rebalance before derivation ([[docsPar]]), checkpoint the ARRAY
-    // frame — not the exploded one: the explode's inferred not-empty
-    // filter otherwise re-derives the whole shingle expression at the
-    // scan, interpreted, per row (see windowFrame's scaladoc; this was
-    // r5's slowest bench entry at 10–24 s, ~1.3 s after the fix). The
-    // exploded view is recomputed cheaply for its two consumers.
-    val sh = docShinglesFrom(docsPar(spark, sfDir)).localCheckpoint()
+    // one row per doc: the frame is also the doc-id list a shingle-less
+    // doc is kept by
+    val sh = derive(docs(spark, sfDir), shingles)
     val e = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
     val df = e.groupBy("shingle").agg(count(lit(1)).as("df"))
     val agg = e.join(df, "shingle")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n"), sum("df").as("s"),
         sum(when(col("df") === 1, 1L).otherwise(0L)).as("u"))
-    docs(spark, sfDir).select(col("doc_id"))
+    sh.select(col("doc_id"))
       .join(agg, Seq("doc_id"), "left")
       .select(col("doc_id").cast("long"),
         coalesce(col("n"), lit(0L)).cast("long").as("n_shingles"),
@@ -1163,14 +1148,8 @@ object TextOps {
     * all-sources boilerplate shingles.
     */
   def sourceOverlap(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = Corpus.documents(spark, sfDir).select(col("doc_id"), col("source"))
-    // rebalance before derivation ([[docsPar]]) and checkpoint the
-    // shingle ARRAYS before the explode (see windowFrame's scaladoc —
-    // the inferred-generate filter otherwise re-derives the shingle
-    // expression at the scan); the source join stays a broadcast of
-    // the (doc_id, source) side
-    val e = docShinglesFrom(docsPar(spark, sfDir)).localCheckpoint()
-      .join(src, "doc_id")
+    val e = derive(Corpus.documents(spark, sfDir)
+        .select(col("doc_id"), col("source"), col("text")), col("source"), shingles)
       .select(col("source"), explode(col("shingles")).as("shingle"))
       .distinct()
       .localCheckpoint() // feeds totals + both join sides; one derivation
@@ -1210,7 +1189,7 @@ object TextOps {
 
   // ---------------------------------------------------------------- line-level boilerplate removal
 
-  /** Body tokens per synthesized line (see [[lineFrame]]). */
+  /** Body tokens per synthesized line (see [[lines]]). */
   val LineLen = 12
 
   /** Corpus doc-frequency at or above which a line is boilerplate.
@@ -1223,27 +1202,20 @@ object TextOps {
   /** Deterministic line synthesis: the fixture text is one flat token
     * run, so the line structure this operator exists for — a shared
     * per-source header and footer around distinct body lines — is
-    * rebuilt per row as a pure function of (doc_id, source, text): one
+    * rebuilt per row as a pure function of (source, t): one
     * subscribe-header, the body chunked into [[LineLen]]-token lines,
     * one copyright-footer. The DuckDB oracle reconstructs the identical
-    * frame. Output: (doc_id, pos, line), one row per line occurrence.
+    * array. A [[derive]] column.
     */
-  private def lineFrame(docsDf: DataFrame): DataFrame =
-    docsDf
-      .select(col("doc_id"), col("source"), toks.as("t"))
-      .select(col("doc_id"),
-        concat(
-          array(concat(lit("subscribe to the "), col("source"), lit(" newsletter"))),
-          when(size(col("t")) > 0, expr(
-            s"transform(sequence(1, (size(t) + ${LineLen - 1}) div $LineLen), " +
-              s"i -> concat_ws(' ', slice(t, (i - 1) * $LineLen + 1, $LineLen)))"))
-            .otherwise(expr("array()").cast("array<string>")),
-          array(concat(lit("copyright "), col("source"), lit(" all rights reserved"))))
-          .as("lines"))
-      // checkpoint the line ARRAYS before the explode — same inferred-
-      // generate re-derivation hazard as windowFrame (see its scaladoc)
-      .localCheckpoint()
-      .select(col("doc_id"), posexplode(col("lines")).as(Seq("pos", "line")))
+  private val lines: Column =
+    concat(
+      array(concat(lit("subscribe to the "), col("source"), lit(" newsletter"))),
+      when(size(col("t")) > 0, expr(
+        s"transform(sequence(1, (size(t) + ${LineLen - 1}) div $LineLen), " +
+          s"i -> concat_ws(' ', slice(t, (i - 1) * $LineLen + 1, $LineLen)))"))
+        .otherwise(expr("array()").cast("array<string>")),
+      array(concat(lit("copyright "), col("source"), lit(" all rights reserved"))))
+      .as("lines")
 
   /** q64: line-frequency boilerplate removal — the CCNet/RefinedWeb
     * line-dedup pass: a line occurring in ≥ [[BoilerplateDf]] distinct
@@ -1270,11 +1242,10 @@ object TextOps {
     lineDedupFrom(Corpus.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text")))
 
-  private[graft] def lineDedupFrom(docsDf0: DataFrame): DataFrame = {
-    // rebalance before derivation — see substringDupFrom
-    val docsDf = docsDf0.repartition(
-      docsDf0.sparkSession.sparkContext.defaultParallelism)
-    val lf = lineFrame(docsDf) // array-checkpointed inside; cheap view
+  private[graft] def lineDedupFrom(docsDf: DataFrame): DataFrame = {
+    // one row (doc_id, pos, line) per line occurrence
+    val lf = derive(docsDf, lines)
+      .select(col("doc_id"), posexplode(col("lines")).as(Seq("pos", "line")))
     val boiler = lf.groupBy("line")
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= BoilerplateDf)
@@ -1357,11 +1328,10 @@ object TextOps {
     */
   def cleanPipeline(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir).select(col("doc_id").cast("long"))
-    // ONE checkpointed shingle frame feeds both shingle consumers —
-    // fuzzy dedup (LSH + verify) and decontamination; composing the
-    // public entry points instead would tokenize + shingle the corpus
-    // twice (the cost docShingles' own comment quantifies)
-    val sh = docShinglesFrom(docsPar(spark, sfDir)).localCheckpoint()
+    // ONE shingle frame feeds both shingle consumers — fuzzy dedup
+    // (LSH + verify) and decontamination; composing the public entry
+    // points instead would tokenize + shingle the corpus twice
+    val sh = derive(docs(spark, sfDir), shingles)
     val exact = dedupExact(spark, sfDir)
     val clus = dupClustersFrom(d,
       minhashLshFrom(spark, sh, tau = 0.5).select(col("a"), col("b")))

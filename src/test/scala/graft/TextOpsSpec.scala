@@ -95,18 +95,35 @@ class TextOpsSpec extends AnyFunSuite {
     * 1 forces a second iteration), leave isolated docs as singleton
     * clusters, and be insensitive to pair orientation.
     */
-  test("dup clusters: transitive chain, singleton, orientation-blind") {
+  private def chainClusters(): org.apache.spark.sql.DataFrame = {
     val spark = TestSpark.spark
     import spark.implicits._
     val docs = (1L to 7L).toDF("doc_id")
     // chain 5-3, 3-1 (min label 1 must travel 2 hops to 5); pair 6-2
     // given in descending orientation; 4 and 7 isolated
     val pairs = Seq((5L, 3L), (1L, 3L), (6L, 2L)).toDF("a", "b")
-    val got = TextOps.dupClustersFrom(docs, pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = Set((1L, 1L), (3L, 1L), (5L, 1L), (2L, 2L), (6L, 2L),
-      (4L, 4L), (7L, 7L))
-    assert(got == want, s"got $got")
+    TextOps.dupClustersFrom(docs, pairs)
+  }
+
+  private val chainWant = Set((1L, 1L), (3L, 1L), (5L, 1L), (2L, 2L), (6L, 2L),
+    (4L, 4L), (7L, 7L))
+
+  test("dup clusters: transitive chain, singleton, orientation-blind") {
+    val got = chainClusters().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == chainWant, s"got $got")
+  }
+
+  /** The propagation checkpoints every round and the edge set; only
+    * the last round's labels may stay resident, and the returned plan
+    * must still run after the rest are released.
+    */
+  test("dup clusters release every checkpoint but the returned labels") {
+    val sc = TestSpark.spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val clusters = chainClusters()
+    val grown = sc.getPersistentRDDs.keySet -- before
+    assert(grown.size <= 1, s"${grown.size} RDDs left resident by one call")
+    assert(clusters.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == chainWant)
   }
 
   /** Decontamination against the stride-derived benchmark split: the
@@ -315,7 +332,11 @@ class TextOpsSpec extends AnyFunSuite {
         ("substringDedup", TextOps.substringDedup(spark, dir)),
         ("shingleNovelty", TextOps.shingleNovelty(spark, dir)),
         ("sourceOverlap", TextOps.sourceOverlap(spark, dir)),
-        ("lineDedup", TextOps.lineDedup(spark, dir)))) {
+        ("lineDedup", TextOps.lineDedup(spark, dir)),
+        ("jaccardPairs", TextOps.jaccardPairs(spark, dir)),
+        ("minhashLsh", TextOps.minhashLsh(spark, dir)),
+        ("decontaminate", TextOps.decontaminate(spark, dir)),
+        ("cleanPipeline", TextOps.cleanPipeline(spark, dir)))) {
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("ExistingRDD"),
         s"$nm explode no longer reads a checkpointed array frame")
@@ -323,6 +344,31 @@ class TextOpsSpec extends AnyFunSuite {
         s"$nm plan re-derives the array expression (checkpoint lost or " +
           "filter pushdown resurfaced)")
     }
+  }
+
+  /** The one rebalance rule: a corpus read as fewer splits than the
+    * session's default parallelism is spread to it before derivation;
+    * one read as at least that many splits is used as read.
+    */
+  test("corpus rows are rebalanced only when read as fewer splits than cores") {
+    val spark = TestSpark.spark
+    val par = spark.sparkContext.defaultParallelism
+    val docs = graft.corpus.Corpus.documents(spark, dir).select("doc_id", "text")
+    assert(docs.rdd.getNumPartitions < par, "the fixture corpus is one split")
+    assert(TextOps.derive(docs, size(col("t")).as("n")).rdd.getNumPartitions == par)
+    def roundRobin(d: org.apache.spark.sql.DataFrame): Boolean =
+      TextOps.spread(d).queryExecution.executedPlan.toString
+        .contains("RoundRobinPartitioning")
+    assert(roundRobin(docs))
+    val many = java.nio.file.Files.createTempDirectory("graft-splits-").toString
+    try {
+      docs.repartition(par).write.parquet(s"$many/documents.parquet")
+      val manyDocs = graft.corpus.Corpus.documents(spark, many).select("doc_id", "text")
+      assert(manyDocs.rdd.getNumPartitions >= par)
+      assert(!roundRobin(manyDocs), "a corpus of >= defaultParallelism splits was shuffled")
+      assert(!TextOps.qualityScore(spark, many).queryExecution.executedPlan.toString
+        .contains("RoundRobinPartitioning"))
+    } finally graft.operators.StreamingOps.deleteRec(many)
   }
 
   /** Golden canonical-removal model for [[TextOps.substringDedup]]:
