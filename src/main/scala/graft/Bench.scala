@@ -322,6 +322,8 @@ object Bench {
     val prep = mkSession(cores)
     val (corpusDir, nDocs) = inflate(prep, sfDir, Inflate)
     prep.stop()
+    // the inflated corpus is deleted however the run ends
+    try {
 
     // ---- scaling ladder: N/16, N/4, N cores, SAME input, each cycle
     // with its own warmup (evidence for the N → 4N gate; the lowest
@@ -450,6 +452,6 @@ object Bench {
     catch { case e: Throwable => System.err.println(s"[bench] sidecar write failed: $e") }
     println(s"""{"metric":"ops_detail","ops_detail":$opsDetail}""")
     println(headline)
-    graft.operators.StreamingOps.deleteRec(corpusDir)
+    } finally graft.operators.StreamingOps.deleteRec(corpusDir)
   }
 }

@@ -1,6 +1,6 @@
 package graft.analysis
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Deterministic tokenization — the per-row invariant of the north rule
@@ -21,25 +21,51 @@ object Tokenizer {
   def tokensCol(text: Column): Column =
     filter(split(lower(text), " "), t => t =!= lit(""))
 
-  /** Explode docs into (doc_id, dl, term) with doc length attached —
-    * dl is computed from the array, NOT via a second shuffle
-    * (SURVEY.md §7: tf and dl come out of ONE aggregation).
+  /** One document's distinct terms in ascending order with their
+    * counts, and its length `dl` (tokens, repeats included).
     */
-  def explodeTerms(docs: DataFrame): DataFrame = {
-    val toks = docs.select(
-      col("doc_id"),
-      tokensCol(col("text")).as("toks"))
-    toks
-      .select(col("doc_id"), size(col("toks")).as("dl"), explode(col("toks")).as("term"))
+  final case class DocTerms(doc_id: Long, dl: Int, terms: Array[String], tfs: Array[Long])
+
+  /** Count a document's terms inside its own row. A null token array
+    * (null text) is an empty document.
+    */
+  private def countTerms(docId: Long, toks: Array[String]): DocTerms = {
+    val sorted = if (toks == null) Array.empty[String] else toks.sorted
+    val terms = Array.newBuilder[String]
+    val tfs = Array.newBuilder[Long]
+    var i = 0
+    while (i < sorted.length) {
+      var j = i + 1
+      while (j < sorted.length && sorted(j) == sorted(i)) j += 1
+      terms += sorted(i); tfs += (j - i).toLong
+      i = j
+    }
+    DocTerms(docId, sorted.length, terms.result(), tfs.result())
   }
 
-  /** (doc_id, dl, term, tf) — one shuffle: groupBy(doc_id, dl, term);
-    * dl is functionally dependent on doc_id so the extra key is free.
+  /** (doc_id, text) → one [[DocTerms]] per document, documents with no
+    * token included: one tokenize, and no shuffle, since a document is
+    * one row.
     */
-  def termFrequencies(docs: DataFrame): DataFrame =
-    explodeTerms(docs)
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
+  def docTerms(docs: DataFrame): Dataset[DocTerms] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col("doc_id").cast("long"), tokensCol(col("text")))
+      .as[(Long, Array[String])]
+      .map { case (id, toks) => countTerms(id, toks) }
+  }
+
+  /** (doc_id, dl, term, tf), counted per document row ([[docTerms]]),
+    * so no exchange. A document's terms come out in ascending order, so
+    * a per-(query, doc) sum over them adds in one fixed order.
+    */
+  def termFrequencies(docs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docTerms(docs)
+      .flatMap(d => d.terms.indices.map(i => (d.doc_id, d.dl, d.terms(i), d.tfs(i))))
+      .toDF("doc_id", "dl", "term", "tf")
+  }
 
   /** DuckDB fragment producing (doc_id, term) rows from `documents`. */
   val duckdbTokensSql: String =

@@ -2,6 +2,7 @@ package graft.corpus
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Corpus access + the north-rule page shape.
   *
@@ -18,10 +19,23 @@ import org.apache.spark.sql.functions._
 object Corpus {
 
   def documents(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    table(spark, s"$sfDir/documents.parquet")
 
   def embeddings(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
+    table(spark, s"$sfDir/embeddings.parquet")
+
+  /** The schema Parquet infers for a table path. Inference starts a
+    * Spark job, so it runs once per file set; a rewrite in place
+    * infers again.
+    */
+  private val schemas = new graft.index.IndexBuilder.ListingMemo[StructType]
+
+  /** A parquet table read with its memoized inferred schema. Being the
+    * files' own schema, it fails on a file set that lacks a column
+    * exactly where an inferring read fails.
+    */
+  private def table(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemas(spark, path)(spark.read.parquet(path).schema)).parquet(path)
 
   /** Fixed epoch for warc_ts: 2026-01-01T00:00:00Z + doc_id seconds. */
   val WarcEpochSeconds: Long = 1767225600L

@@ -3,9 +3,14 @@ package graft.index
 import graft.analysis.Tokenizer
 import graft.core.Types._
 import graft.corpus.Corpus
+import graft.functions.BM25
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.CollectionAccumulator
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
 /** Inverted-index build — the engine's `index!` (reference build driver
@@ -18,10 +23,9 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Pipeline (SURVEY.md §3.2):
   *   documents scan (doc_id, text → column pruning)
-  *   → tokenize + explode, dl attached
-  *   → map-side combined tf agg                 [shuffle 1]
+  *   → tokenize, tf and dl counted inside each document's row
   *   → shard = doc_id range bucket; repartition(shard)
-  *     + sortWithinPartitions(shard, term, doc_id)   [shuffle 2, sort-based]
+  *     + sortWithinPartitions(shard, term, doc_id)   [the one shuffle]
   *   → streaming per-(shard,term) run seal (delta-gap+VByte blocks,
   *     block-max metadata) — spill-safe: one posting list in memory
   *     at a time, never a whole shard
@@ -40,9 +44,10 @@ import scala.collection.mutable.ArrayBuffer
   */
 object IndexBuilder {
 
-  /** One tokenized posting occurrence after tf aggregation. */
+  /** One (shard, term, doc) posting on its way to the seal; a null
+    * term marks the document's norms row.
+    */
   final case class TermPosting(shard: Int, term: String, doc_id: Long, tf: Long, dl: Long)
-  final case class DocLen(shard: Int, doc_id: Long, dl: Long)
 
   final case class SnapStats(
       snapshot_id: Long, n_docs: Long, sum_dl: Long, avgdl: Double,
@@ -106,6 +111,25 @@ object IndexBuilder {
       fs.listStatus(d).toSeq.flatMap(f =>
         if (f.isDirectory) walk(f.getPath) else Seq(f.getPath.toString -> f.getLen))
     if (fs.exists(p)) walk(p).sorted else Nil
+  }
+
+  /** Values derived from a path's files, each stamped with the path's
+    * [[fileListing]]: a value is computed again only when the listing
+    * changed, so a table rewritten in place is never answered from
+    * its old files.
+    */
+  private[graft] final class ListingMemo[V] {
+    private val memo = TrieMap.empty[String, (Seq[(String, Long)], V)]
+    def apply(spark: SparkSession, path: String)(compute: => V): V = {
+      val fp = fileListing(spark, path)
+      memo.get(path) match {
+        case Some((f, v)) if f == fp => v
+        case _ =>
+          val v = compute
+          memo.put(path, (fp, v))
+          v
+      }
+    }
   }
 
   /** Hint fan-in per term (see the hints write in [[build]]). */
@@ -238,6 +262,12 @@ object IndexBuilder {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[HintRow]]()
   }
 
+  /** Candidates kept per term before `strategy` selects its hints. */
+  private def poolSize(strategy: HintStrategy): Int = strategy match {
+    case TopHHints => HintsPerTerm
+    case EpsilonNetHints(_, pool) => pool
+  }
+
   /** (term, doc_id, tf, dl) → ≤H hint rows per term under `avgdl`,
     * selected by `strategy`, via [[HintsTopH]] (map-side-combined —
     * head-term safe). The ε-net strategy widens the bounded candidate
@@ -248,16 +278,12 @@ object IndexBuilder {
       avgdl: Double, strategy: HintStrategy = TopHHints): org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val poolSize = strategy match {
-      case TopHHints => HintsPerTerm
-      case EpsilonNetHints(_, pool) => pool
-    }
     df.select(col("term"), col("doc_id").cast("long"), col("tf").cast("long"),
         col("dl").cast("long"),
         graft.functions.BM25.tfNormCol(col("tf"), col("dl"), lit(avgdl)).as("tfn"))
       .as[(String, Long, Long, Long, Double)]
       .groupByKey(_._1)
-      .agg(new HintsTopH(poolSize).toColumn.name("hs"))
+      .agg(new HintsTopH(poolSize(strategy)).toColumn.name("hs"))
       .flatMap { case (term, hs) =>
         val kept = strategy match {
           case TopHHints => hs
@@ -269,9 +295,10 @@ object IndexBuilder {
   }
 
   /** Build snapshot `snapshotId` over (optionally a doc_id subset of)
-    * the corpus. `onlyShards` limits sealing to the given shards
-    * (resume path); global artifacts (termstats/stats) are written only
-    * when sealing the full shard set.
+    * the corpus. `onlyShards` limits the writes to the given shards
+    * (resume path); global artifacts (termstats/stats/hints) are
+    * written only when sealing the full shard set, unless
+    * `writeGlobals` says otherwise.
     *
     * `pruneTfnFloor` is the STATIC INDEX PRUNING dial — the inverted-
     * index analog of the reference's build-side neighborhood filters
@@ -287,12 +314,25 @@ object IndexBuilder {
     * PRUNED posting set, keeping the sealed index self-consistent.
     * `None` (default) = exact index; recall vs the exact index under
     * various floors is pinned in WandSpec.
-    */
-  /** `docsOverride`: an alternative (doc_id, text) source plan — the
+    *
+    * `docsOverride`: an alternative (doc_id, text) source plan — the
     * north-rule ingest path feeds the html EXTRACTION projection here
     * directly (see [[Wand.topKOnPagesCorpus]]), so extraction →
     * tokenize → seal is ONE Catalyst plan with no materialized
     * intermediate corpus.
+    *
+    * Passes:
+    *   1. read (doc_id, text) → per-row tf ([[Tokenizer.docTerms]]:
+    *      one tokenize, dl from the same pass), persisted; one job
+    *      reads the corpus stats off it;
+    *   2. shard exchange: the one Exchange postings cross;
+    *   3. seal ([[sealShards]]): per shard its norms, per (shard, term)
+    *      a posting list and its hint candidates, persisted;
+    *   4. writes: postings ∥ norms ∥ termstats ∥ stats ∥ hints, all
+    *      from the one sealed copy; the postings write's tasks report
+    *      each shard's [[ShardSummary]];
+    *   5. commit: manifest and metrics rows from the summaries.
+    * Nothing written is read back.
     */
   def build(spark: SparkSession, sfDir: String, indexDir: String,
       numShards: Int = 8, snapshotId: Long = 1L, parentSnapshot: Long = 0L,
@@ -308,10 +348,9 @@ object IndexBuilder {
     // rebuild with a different shard count would otherwise leave STALE
     // shard partitions behind — dynamic overwrite only replaces the
     // partitions present in the new data — and stale doc-range shards
-    // double-count their docs at query time, and commitManifest, which
-    // derives lineage from the WRITTEN postings, would commit them);
-    // only the RESUME path (onlyShards) wants dynamic overwrite, to
-    // re-seal just the missing shards without touching committed ones.
+    // double-count their docs at query time); only the RESUME path
+    // (onlyShards) wants dynamic overwrite, to re-seal just the missing
+    // shards without touching committed ones.
     val overwriteMode = if (onlyShards.isEmpty) "static" else "dynamic"
     val paths = IndexPaths(indexDir)
 
@@ -321,65 +360,10 @@ object IndexBuilder {
       case Some((lo, hi)) => docsAll.filter(col("doc_id") >= lo && col("doc_id") < hi)
       case None => docsAll
     }
-
-    // ---- pass 0: corpus stats (tiny driver fetch; partial+final agg,
-    // no shuffle). The (doc_id, dl) frame is persisted — 16 bytes/row —
-    // because BOTH the stats action here and the norms seal below read
-    // it, and recomputing it is a full tokenize of the corpus (the
-    // build's most expensive linear stage, and the tf path already pays
-    // one tokenize of its own).
-    val dl = docs.select(col("doc_id"),
-      size(Tokenizer.tokensCol(col("text"))).as("dl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val statsRow = dl.agg(
-      count(lit(1)).as("n"), sum("dl").as("sum_dl"), max("doc_id").as("maxd")).head()
-    val nDocs = statsRow.getLong(0)
-    val sumDl = statsRow.getLong(1)
-    val maxDoc = statsRow.getLong(2)
-    val avgdl = sumDl.toDouble / nDocs
-    // range sharding over the GLOBAL id space so snapshots over
-    // different doc batches share shard boundaries and merge shard-locally
-    // (when building the whole corpus, maxDoc IS the global max — skip
-    // the extra job)
-    val globalMax = if (docIdRange.isEmpty) maxDoc
-      else docsAll.agg(max("doc_id")).head().getLong(0)
-    val shardSize = math.max(1L, (globalMax + numShards) / numShards)
-    // the seal/decode paths index a shard's docs with Int arrays
-    // (IndexFormat.decodeNorms et al.); refuse a shard count that
-    // would silently wrap those counts past 2^31 instead of failing
-    // deep inside an executor task — raise numShards with the corpus
-    require(shardSize <= Int.MaxValue.toLong,
-      s"shard size $shardSize (globalMax=$globalMax / numShards=$numShards) " +
-        s"exceeds Int range — raise numShards so each shard holds < 2^31 docs")
-    val shardCol = (col("doc_id") / shardSize).cast("int")
-
-    // ---- term frequencies: ONE aggregation for tf and dl, cached —
-    // both the seal pass and the hints pass read it, and recomputing
-    // means a second full tokenize of the corpus (the most expensive
-    // linear stage). MEMORY_AND_DISK: spills, never OOMs.
-    val tfUnpruned = Tokenizer.termFrequencies(docs)
-      .select(shardCol.as("shard"), col("term"), col("doc_id"),
-        col("tf").cast("long"), col("dl").cast("long"))
-    val tf = pruneTfnFloor.fold(tfUnpruned)(floor =>
-        tfUnpruned.filter(graft.functions.BM25.tfNormCol(
-          col("tf"), col("dl"), lit(avgdl)) >= floor))
-      .as[TermPosting]
-    val tfScoped = (onlyShards match {
-      case Some(ss) => tf.filter(p => ss.contains(p.shard))
-      case None => tf
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // ---- seal postings: sort-based, streaming per-run
-    val sealedPostings = tfScoped
-      .repartition(numShards, col("shard"))
-      .sortWithinPartitions("shard", "term", "doc_id")
-      .mapPartitions(it => sealRuns(it, avgdl))
-    // postings ∥ norms: independent artifacts (postings reads tfScoped,
-    // norms reads the dl cache the stats action already materialized),
-    // so the small norms job rides in the wide postings shuffle's slot
-    // slack — on a cluster this keeps executor slots full while the
-    // shuffle tail drains; at small corpora it removes one serialized
-    // job round-trip of pure fixed cost.
+    // MEMORY_AND_DISK throughout: spills, never OOMs
+    val rows = Tokenizer.docTerms(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    val summaries = spark.sparkContext.collectionAccumulator[ShardSummary]("seal summaries")
+    var sealedRdd: RDD[Sealed] = null
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -388,73 +372,97 @@ object IndexBuilder {
     // must never return (or fail out to a caller's retry) while a
     // zombie writer job still holds one of this snapshot's directories,
     // or the retry's Overwrite races it on the same path
-    val pending = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
-    def track(f: Future[Unit]): Future[Unit] = { pending += f; f }
+    val pending = ArrayBuffer.empty[Future[Unit]]
+    def track(f: => Unit): Unit = pending += Future(f)
     try {
-    val postingsF = track(Future {
-      sealedPostings.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", overwriteMode)
-        .partitionBy("shard").parquet(paths.postings(snapshotId))
-    })
+      // corpus stats: one job, which also fills the per-row cache
+      val (nDocs, sumDl, maxDoc) = rows.select(col("doc_id"), col("dl")).as[(Long, Int)]
+        .mapPartitions { it =>
+          var n = 0L; var s = 0L; var m = Long.MinValue
+          it.foreach { case (d, l) => n += 1; s += l; m = math.max(m, d) }
+          Iterator((n, s, m))
+        }.collect().reduce((x, y) => (x._1 + y._1, x._2 + y._2, math.max(x._3, y._3)))
+      require(nDocs > 0, s"no documents to index in $sfDir (docIdRange=$docIdRange)")
+      val avgdl = sumDl.toDouble / nDocs
+      // range sharding over the GLOBAL id space so snapshots over
+      // different doc batches share shard boundaries and merge shard-locally
+      // (when building the whole corpus, maxDoc IS the global max — skip
+      // the extra job)
+      val globalMax = if (docIdRange.isEmpty) maxDoc
+        else docsAll.agg(max("doc_id")).head().getLong(0)
+      val shardSize = math.max(1L, (globalMax + numShards) / numShards)
+      // the seal/decode paths index a shard's docs with Int arrays
+      // (IndexFormat.decodeNorms et al.); refuse a shard count that
+      // would silently wrap those counts past 2^31 instead of failing
+      // deep inside an executor task — raise numShards with the corpus
+      require(shardSize <= Int.MaxValue.toLong,
+        s"shard size $shardSize (globalMax=$globalMax / numShards=$numShards) " +
+          s"exceeds Int range — raise numShards so each shard holds < 2^31 docs")
 
-    // ---- seal norms sidecar
-    val dlShard = dl.select(shardCol.as("shard"), col("doc_id"), col("dl").cast("long"))
-      .as[DocLen]
-    val dlScoped = onlyShards match {
-      case Some(ss) => dlShard.filter(d => ss.contains(d.shard))
-      case None => dlShard
-    }
-    val sealedNorms = dlScoped
-      .repartition(numShards, col("shard"))
-      .sortWithinPartitions("shard", "doc_id")
-      .mapPartitions(sealNormRuns)
-    val normsF = track(Future {
-      sealedNorms.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", overwriteMode)
-        .partitionBy("shard").parquet(paths.norms(snapshotId))
-    })
-    // termstats + hints read artifacts the postings job produces (the
-    // sealed segments / the tfScoped cache it fills) — wait for it
-    Await.result(postingsF, Duration.Inf)
-
-    if (writeGlobals.getOrElse(onlyShards.isEmpty)) {
-      // ---- global term stats from the SEALED postings (df_local/cf_local
-      // are already per-(shard,term) aggregates — summing the tiny sealed
-      // rows avoids a second full tokenize+shuffle pass over the corpus)
-      val termstats = loadPostings(spark, indexDir, Seq(snapshotId))
-        .groupBy("term")
-        .agg(sum("df_local").as("df"), sum("cf_local").as("cf"))
-        .select(col("term"), col("df"), col("cf"),
-          graft.functions.BM25.idfCol(lit(nDocs), col("df")).as("idf"))
-        .as[TermStats]
-      val termstatsF = track(Future(
-        termstats.write.mode(SaveMode.Overwrite).parquet(paths.termstats(snapshotId))))
-
-      val statsF = track(Future(
+      val globals = writeGlobals.getOrElse(onlyShards.isEmpty)
+      if (globals) track(
         Seq(SnapStats(snapshotId, nDocs, sumDl, avgdl, numShards, maxDoc)).toDS()
-          .write.mode(SaveMode.Overwrite).parquet(paths.stats(snapshotId))))
+          .write.mode(SaveMode.Overwrite).parquet(paths.stats(snapshotId)))
 
-      // ---- per-term hints sidecar: the reference's search-start hints
-      // (/root/reference/src/searchgraph/hints.jl:42-264) transferred to
-      // WAND as a θ warm-start — for each term, the H docs with the
-      // largest tf-normalization. At query time their partial scores
-      // lower-bound the k-th best BEFORE any posting decodes (Wand
-      // derives θ0 from them), so pruning fires from the first block.
-      // Raw (tf, dl) is stored, not tfn: a multi-snapshot query recomputes
-      // tfn under the MERGED avgdl, keeping the bound sound. Output is
-      // H rows/term — tiny vs the postings; one extra agg pass over tf.
-      // full-corpus source: the persisted tfScoped when it IS the full
-      // corpus; on a resume (onlyShards) fall back to the unscoped plan
-      // so the overwritten sidecar still covers every term
-      val hintSrc = if (onlyShards.isEmpty) tfScoped.toDF() else tf.toDF()
-      // hints reads the tfScoped cache (filled by the postings job) —
-      // independent of termstats/stats, so all three run concurrently
-      topHintsPerTerm(hintSrc, avgdl, hintStrategy)
-        .write.mode(SaveMode.Overwrite).parquet(paths.hints(snapshotId))
-      Await.result(termstatsF, Duration.Inf)
-      Await.result(statsF, Duration.Inf)
-    }
-    Await.result(normsF, Duration.Inf)
+      // shard exchange → per shard: one norms row (term null sorts
+      // first), then the pruned postings in (term, doc_id) order. Every
+      // shard is sealed, also on a resume: the global artifacts need
+      // the whole corpus, and only the writes are scoped to onlyShards.
+      val pool = poolSize(hintStrategy)
+      val sealPlan = rows.withColumn("shard", (col("doc_id") / shardSize).cast("int"))
+        .repartition(numShards, col("shard"))
+        .as[ShardDoc]
+        .flatMap { d =>
+          Iterator.single(TermPosting(d.shard, null, d.doc_id, 0L, d.dl)) ++
+            d.terms.indices.iterator
+              .filter(i => pruneTfnFloor.forall(BM25.tfNorm(d.tfs(i), d.dl, avgdl) >= _))
+              .map(i => TermPosting(d.shard, d.terms(i), d.doc_id, d.tfs(i), d.dl))
+        }
+        .sortWithinPartitions("shard", "term", "doc_id")
+        .mapPartitions(it => sealShards(it, avgdl, pool))
+      // `.rdd` runs the exchange's map stage now; the write that first
+      // reaches a sealed partition computes and keeps it (block locks
+      // make concurrent writes share one computation), so all writes
+      // start at once and read one sealed copy. A cached Dataset would
+      // cost a job of its own to fill under adaptive execution.
+      sealedRdd = sealPlan.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      val sealedRows = spark.createDataset(sealedRdd)
+      def writeShards(rows: Dataset[Sealed], part: String, path: String): Unit =
+        onlyShards.fold(rows)(ss => rows.filter(col("shard").isin(ss.toSeq: _*)))
+          .where(col(part).isNotNull).select(s"$part.*").write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", overwriteMode)
+          .partitionBy("shard").parquet(path)
+
+      // the postings write's tasks report the shard summaries
+      track(writeShards(spark.createDataset(sealedRdd.mapPartitions(reportShards(summaries))),
+        "postings", paths.postings(snapshotId)))
+      track(writeShards(sealedRows, "norms", paths.norms(snapshotId)))
+      if (globals) {
+        val lists = sealedRows.where(col("postings").isNotNull)
+        track(lists.groupBy(col("postings.term").as("term"))
+          .agg(sum("postings.df_local").as("df"), sum("postings.cf_local").as("cf"))
+          .select(col("term"), col("df"), col("cf"),
+            BM25.idfCol(lit(nDocs), col("df")).as("idf"))
+          .as[TermStats]
+          .write.mode(SaveMode.Overwrite).parquet(paths.termstats(snapshotId)))
+        // ---- per-term hints sidecar: the reference's search-start hints
+        // (reference searchgraph/hints.jl:42-264) transferred to
+        // WAND as a θ warm-start — for each term, the H docs with the
+        // largest tf-normalization. At query time their partial scores
+        // lower-bound the k-th best BEFORE any posting decodes (Wand
+        // derives θ0 from them), so pruning fires from the first block.
+        // Raw (tf, dl) is stored, not tfn: a multi-snapshot query recomputes
+        // tfn under the MERGED avgdl, keeping the bound sound. Each
+        // (shard, term) list brings its own best `pool` candidates, a
+        // superset of the term's global best `pool`.
+        track(topHintsPerTerm(
+          lists.select(col("postings.term").as("term"), explode(col("hints")).as("h"))
+            .select(col("term"), col("h.doc_id").as("doc_id"), col("h.tf").as("tf"),
+              col("h.dl").as("dl")),
+          avgdl, hintStrategy)
+          .write.mode(SaveMode.Overwrite).parquet(paths.hints(snapshotId)))
+      }
+      pending.foreach(Await.result(_, Duration.Inf))
     } catch {
       case e: Throwable =>
         // drain, don't cancel: Spark jobs aren't interruptible mid-write;
@@ -464,39 +472,84 @@ object IndexBuilder {
           try Await.result(f, Duration.Inf) catch { case _: Throwable => () })
         throw e
     } finally {
-      tfScoped.unpersist(blocking = false)
-      dl.unpersist(blocking = false)
+      if (sealedRdd != null) sealedRdd.unpersist(blocking = false)
+      rows.unpersist(blocking = false)
     }
 
-    // ---- lineage + metrics from the WRITTEN artifacts, then commit
-    commitManifest(spark, paths, snapshotId, parentSnapshot, onlyShards)
+    commitManifest(spark, paths, snapshotId, parentSnapshot, onlyShards,
+      shardSummaries(summaries))
+  }
+
+  /** One document routed to its shard ([[Tokenizer.DocTerms]] + shard). */
+  final case class ShardDoc(shard: Int, doc_id: Long, dl: Int, terms: Array[String],
+      tfs: Array[Long])
+
+  /** One row of the seal's output: a shard's norms, or one (shard,
+    * term) posting list with its hint candidates (best first).
+    */
+  final case class Sealed(shard: Int, postings: Option[PostingList],
+      norms: Option[DocNorms], hints: Seq[HintRow])
+
+  /** What the sealed rows say about one shard — the lineage of its
+    * manifest row. A task that saw only a shard's norms (or only its
+    * postings) reports that part, with the other part's fields at their
+    * identities, and [[shardSummaries]] adds the parts up.
+    */
+  final case class ShardSummary(shard: Int, min_doc: Long, max_doc: Long,
+      doc_count: Long, term_count: Long, postings_bytes: Long) {
+    def +(o: ShardSummary): ShardSummary = ShardSummary(shard,
+      math.min(min_doc, o.min_doc), math.max(max_doc, o.max_doc),
+      doc_count + o.doc_count, term_count + o.term_count, postings_bytes + o.postings_bytes)
+  }
+
+  private def normsSummary(shard: Int, docIds: Array[Long]): ShardSummary =
+    ShardSummary(shard, docIds.head, docIds.last, docIds.length.toLong, 0L, 0L)
+
+  private def postingsSummary(shard: Int, lists: Long, bytes: Long): ShardSummary =
+    ShardSummary(shard, Long.MaxValue, Long.MinValue, 0L, lists, bytes)
+
+  private def listBytes(pl: PostingList): Long = pl.docs_enc.length.toLong + pl.tfs_enc.length
+
+  /** Passes a partition's sealed rows through and, once it is
+    * consumed, adds each of its shards' summary to `acc`. Reported by
+    * the tasks of a write, whose accumulator updates Spark merges once
+    * per partition, from successful attempts only.
+    */
+  private def reportShards(acc: CollectionAccumulator[ShardSummary])(
+      it: Iterator[Sealed]): Iterator[Sealed] = {
+    val parts = scala.collection.mutable.Map.empty[Int, ShardSummary]
+    it.map { r =>
+      val part = r.norms match {
+        case Some(n) => normsSummary(r.shard, IndexFormat.decodeNorms(n)._1)
+        case None => postingsSummary(r.shard, 1L, listBytes(r.postings.get))
+      }
+      parts(r.shard) = parts.get(r.shard).fold(part)(_ + part)
+      r
+    } ++ { parts.values.foreach(acc.add); Iterator.empty }
+  }
+
+  /** The per-shard summaries tasks reported, parts added up. Equal
+    * duplicates are dropped first, so a partition reported twice
+    * cannot double-count; a shard with postings but no norms cannot
+    * occur, since every document has a norm.
+    */
+  private def shardSummaries(acc: CollectionAccumulator[ShardSummary]): Seq[ShardSummary] = {
+    import scala.jdk.CollectionConverters._
+    acc.value.asScala.toSeq.distinct.groupBy(_.shard).values
+      .map(_.reduce(_ + _)).filter(_.doc_count > 0).toSeq.sortBy(_.shard)
   }
 
   /** Manifest + metrics for the shards just sealed; manifest row
     * presence IS the commit marker for a (snapshot, shard) segment.
+    * A shard whose documents all tokenize to zero terms has norms but
+    * no posting lists; it commits with zeroed posting stats — leaving
+    * it out would make readManifest report it missing forever, and
+    * resume() would loop re-sealing it without ever converging.
     */
   private def commitManifest(spark: SparkSession, paths: IndexPaths,
-      snapshotId: Long, parentSnapshot: Long, onlyShards: Option[Set[Int]]): Unit = {
+      snapshotId: Long, parentSnapshot: Long, onlyShards: Option[Set[Int]],
+      shards: Seq[ShardSummary]): Unit = {
     import spark.implicits._
-    val written = loadPostings(spark, paths.root, Seq(snapshotId))
-    val normsW = loadNorms(spark, paths.root, Seq(snapshotId))
-    val scoped = onlyShards match {
-      case Some(ss) => written.filter(p => ss.contains(p.shard))
-      case None => written
-    }
-    val normsScoped = onlyShards match {
-      case Some(ss) => normsW.filter(n => ss.contains(n.shard))
-      case None => normsW
-    }
-    val docRange = normsScoped.map { n =>
-      val (ids, _) = IndexFormat.decodeNorms(n)
-      (n.shard, ids.head, ids.last, n.n_docs)
-    }.toDF("shard", "min_doc", "max_doc", "doc_count")
-    val postAgg = scoped.map(p =>
-        (p.shard, 1L, p.docs_enc.length.toLong + p.tfs_enc.length.toLong))
-      .toDF("shard", "lists", "bytes")
-      .groupBy("shard")
-      .agg(sum("lists").as("term_count"), sum("bytes").as("postings_bytes"))
     // APPEND-ONLY commit (crash-safe + concurrent-safe: Spark's parquet
     // Append never deletes earlier commit markers — the former
     // collect + whole-dir Overwrite could destroy EVERY snapshot's
@@ -511,27 +564,10 @@ object IndexBuilder {
     // already undefined at the segment layer (both Overwrite the same
     // parquet partitions).
     val seq = 1L + rawManifest(spark, paths).map(_.commit_seq).foldLeft(0L)(math.max)
-    // one job computes the (numShards-row) lineage: collect it, then
-    // write manifest AND metrics from the driver-local rows — deriving
-    // metrics from the manifest DATASET re-ran its whole plan (a second
-    // scan of the sealed postings + norms per commit, pure fixed cost)
-    // LEFT join from the norms side: a shard whose documents all
-    // tokenize to zero terms has norms but no posting lists — an inner
-    // join would drop its manifest row, readManifest would report it
-    // missing forever, and resume() would loop re-sealing it without
-    // ever converging. Such a shard commits with zeroed posting stats.
-    val manifestRows = docRange.join(postAgg, Seq("shard"), "left")
-      .select(lit(snapshotId).as("snapshot_id"),
-        concat(lit(s"snap-$snapshotId-shard-"), col("shard")).as("segment_id"),
-        col("shard").cast("int"), col("min_doc"), col("max_doc"),
-        col("doc_count"),
-        coalesce(col("term_count"), lit(0L)).as("term_count"),
-        coalesce(col("postings_bytes"), lit(0L)).as("postings_bytes"),
-        lit(parentSnapshot).as("parent_snapshot"),
-        lit(seq).as("commit_seq"),
-        lit(onlyShards.isEmpty).as("full_commit"))
-      .as[ManifestRow]
-      .collect().toSeq
+    val manifestRows = shards.filter(s => onlyShards.forall(_.contains(s.shard))).map(s =>
+      ManifestRow(snapshotId, s"snap-$snapshotId-shard-${s.shard}", s.shard, s.min_doc,
+        s.max_doc, s.doc_count, s.term_count, s.postings_bytes, parentSnapshot, seq,
+        onlyShards.isEmpty))
     // metrics are observability, not commit markers — their Append can
     // ride alongside the manifest's (different paths, no ordering need)
     import scala.concurrent.{Await, Future}
@@ -689,15 +725,19 @@ object IndexBuilder {
     missing
   }
 
-  /** Streaming run-grouper: consecutive (shard, term) rows → sealed
-    * posting list. Input iterator must be sorted by (shard, term,
-    * doc_id); holds ONE list in memory, never a whole shard.
+  /** Streaming run-grouper over one partition sorted by (shard, term,
+    * doc_id), term null first: each shard's null-term run becomes its
+    * norms, each (shard, term) run one posting list plus its best
+    * `pool` hint candidates. Holds ONE run in memory, never a whole
+    * shard.
     */
-  private[index] def sealRuns(it: Iterator[TermPosting], avgdl: Double): Iterator[PostingList] = {
+  private[index] def sealShards(it: Iterator[TermPosting], avgdl: Double,
+      pool: Int): Iterator[Sealed] = {
     val bit = it.buffered
-    new Iterator[PostingList] {
+    val best = new HintsTopH(pool)
+    new Iterator[Sealed] {
       override def hasNext: Boolean = bit.hasNext
-      override def next(): PostingList = {
+      override def next(): Sealed = {
         val shard = bit.head.shard
         val term = bit.head.term
         val ds = new ArrayBuffer[Long]; val ts = new ArrayBuffer[Long]; val ls = new ArrayBuffer[Long]
@@ -705,23 +745,18 @@ object IndexBuilder {
           val r = bit.next()
           ds += r.doc_id; ts += r.tf; ls += r.dl
         }
-        IndexFormat.seal(shard, term, ds.toArray, ts.toArray, ls.toArray, avgdl)
-      }
-    }
-  }
-
-  private[index] def sealNormRuns(it: Iterator[DocLen]): Iterator[DocNorms] = {
-    val bit = it.buffered
-    new Iterator[DocNorms] {
-      override def hasNext: Boolean = bit.hasNext
-      override def next(): DocNorms = {
-        val shard = bit.head.shard
-        val ds = new ArrayBuffer[Long]; val ls = new ArrayBuffer[Long]
-        while (bit.hasNext && bit.head.shard == shard) {
-          val r = bit.next()
-          ds += r.doc_id; ls += r.dl
+        if (term == null)
+          Sealed(shard, None, Some(IndexFormat.sealNorms(shard, ds.toArray, ls.toArray)), Nil)
+        else {
+          var h = best.zero
+          var i = 0
+          while (i < ds.length) {
+            h = best.reduce(h, (term, ds(i), ts(i), ls(i), BM25.tfNorm(ts(i), ls(i), avgdl)))
+            i += 1
+          }
+          Sealed(shard, Some(IndexFormat.seal(shard, term, ds.toArray, ts.toArray, ls.toArray, avgdl)),
+            None, best.finish(h))
         }
-        IndexFormat.sealNorms(shard, ds.toArray, ls.toArray)
       }
     }
   }
@@ -811,6 +846,7 @@ object IndexBuilder {
 
     val posts = loadPostings(spark, indexDir, inSnaps)
     val norms = loadNorms(spark, indexDir, inSnaps)
+    val summaries = spark.sparkContext.collectionAccumulator[ShardSummary]("merge summaries")
 
     // decode → dl lookup per shard via SORTED cogroup: Spark sorts each
     // shard's segments by term inside the shuffle (sort-based, spills),
@@ -830,8 +866,12 @@ object IndexBuilder {
           while (i < ids.length) { dlMap.put(ids(i), dls(i)); i += 1 }
         }
         val bit = pIt.buffered
+        var lists = 0L; var bytes = 0L
         new Iterator[PostingList] {
-          override def hasNext: Boolean = bit.hasNext
+          override def hasNext: Boolean = bit.hasNext || {
+            if (lists > 0) { summaries.add(postingsSummary(shard, lists, bytes)); lists = 0 }
+            false
+          }
           override def next(): PostingList = {
             val term = bit.head.term
             val segs = new ArrayBuffer[(Array[Long], Array[Long])]
@@ -847,7 +887,9 @@ object IndexBuilder {
               require(dl != null, s"doc $d in postings but missing from norms (shard $shard)")
               dl.longValue()
             }
-            IndexFormat.seal(shard, term, docIds, tfs, dls, avgdl)
+            val pl = IndexFormat.seal(shard, term, docIds, tfs, dls, avgdl)
+            lists += 1; bytes += listBytes(pl)
+            pl
           }
         }
       }
@@ -864,6 +906,7 @@ object IndexBuilder {
         val (ids, dls) = IndexFormat.decodeNorms(nm)
         ids.zip(dls)
       }.toArray.sortBy(_._1)
+      summaries.add(normsSummary(shard, all.map(_._1)))
       IndexFormat.sealNorms(shard, all.map(_._1), all.map(_._2))
     }
     mergedNorms.write.mode(SaveMode.Overwrite)
@@ -905,6 +948,6 @@ object IndexBuilder {
       if (fs.exists(hp)) fs.delete(hp, true)
     }
 
-    commitManifest(spark, paths, outSnap, inSnaps.max, None)
+    commitManifest(spark, paths, outSnap, inSnaps.max, None, shardSummaries(summaries))
   }
 }

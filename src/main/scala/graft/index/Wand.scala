@@ -4,7 +4,7 @@ import graft.core.Types._
 import graft.functions.BM25
 import graft.operators.TopK
 import graft.queries.QuerySet
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -49,7 +49,11 @@ import scala.collection.mutable.ArrayBuffer
   * rewritten in place — by this JVM or any other — no longer matches,
   * and the next call unpersists the stale entry and loads afresh. An
   * entry is also unpersisted by [[release]], and when a later load
-  * finds its index dir gone. Entries are persisted
+  * finds its index dir gone. An entry belongs to the `SparkContext`
+  * that loaded it: once that context is stopped or replaced, its
+  * storage is gone with it, so the entry is stale whatever its
+  * fingerprint says, and it is dropped without an unpersist.
+  * Entries are persisted
   * [[ResidentStorage]]: under memory pressure a segment spills to the
   * executor's disk rather than being recomputed from parquet, and a
   * lost block is recomputed from the load's lineage.
@@ -367,7 +371,10 @@ object Wand {
       val stats: Seq[IndexBuilder.SnapStats], val noHints: Boolean,
       val segments: RDD[ShardSegment], val dict: RDD[Map[String, TermInfo]]) {
     val termMemo = TrieMap.empty[String, TermInfo]
-    def unpersist(): Unit = {
+    /** Was this entry loaded by `sc`, and is `sc` still running? */
+    def liveIn(sc: SparkContext): Boolean = (segments.sparkContext eq sc) && !sc.isStopped
+    /** Frees the entry's storage; a stopped context has none left. */
+    def unpersist(): Unit = if (!segments.sparkContext.isStopped) {
       segments.unpersist(blocking = false)
       dict.unpersist(blocking = false)
     }
@@ -386,8 +393,9 @@ object Wand {
   }
 
   /** The resident entry for (indexDir, snaps): the current one when
-    * its fingerprint still matches the files, else a fresh load under
-    * the key's lock (the stale entry unpersisted first).
+    * its fingerprint still matches the files and it lives in the
+    * caller's context, else a fresh load under the key's lock (the
+    * stale entry unpersisted first, entries of a dead context dropped).
     */
   private def residentEntry(spark: SparkSession, indexDir: String,
       snaps: Seq[Long]): Resident = {
@@ -395,9 +403,11 @@ object Wand {
     val fp = fingerprint(spark, indexDir, key._2)
     loadLocks.getOrElseUpdate(key, new AnyRef).synchronized {
       resident.get(key) match {
-        case Some(e) if e.fingerprint == fp => e
+        case Some(e) if e.fingerprint == fp && e.liveIn(spark.sparkContext) => e
         case stale =>
           stale.foreach { e => resident.remove(key); e.unpersist() }
+          resident.collect { case (k, o) if !o.liveIn(spark.sparkContext) => k }
+            .foreach(resident.remove)
           resident.keys.filter(k => !IndexBuilder.pathExists(spark, k._1))
             .foreach(k => release(k._1))
           val e = load(spark, indexDir, key._2, fp)
@@ -485,8 +495,8 @@ object Wand {
     */
   private[graft] def hintsDisabled(spark: SparkSession, indexDir: String,
       snaps: Seq[Long]): Boolean =
-    resident.get((indexDir, snaps.sorted)).exists(e =>
-      e.noHints && e.fingerprint == fingerprint(spark, indexDir, snaps.sorted))
+    resident.get((indexDir, snaps.sorted)).exists(e => e.noHints &&
+      e.liveIn(spark.sparkContext) && e.fingerprint == fingerprint(spark, indexDir, snaps.sorted))
 
   /** [[TermInfo]] for the given terms. The terms the entry's memo lacks
     * are fetched by ONE lookup job over just the dictionary partitions

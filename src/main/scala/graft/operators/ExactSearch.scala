@@ -14,16 +14,15 @@ import org.apache.spark.sql.functions._
   *
   * Shape of the plan (scale notes in line):
   *   documents scan (doc_id, text only → column pruning)
-  *   → explode tokens with dl attached (no extra shuffle for dl)
-  *   → groupBy(doc_id, dl, term).count          [shuffle 1: tf]
+  *   → tf and dl counted inside each document's row (no shuffle)
   *   → broadcast-join the tiny (query_id, term) side
   *   → broadcast-join per-term df + 1-row corpus stats
-  *   → groupBy(query_id, doc_id).sum(contrib)   [shuffle 2: scoring]
-  *   → per-query top-k                          [shuffle 3: tiny]
+  *   → groupBy(query_id, doc_id).sum(contrib)   [shuffle 1: scoring]
+  *   → per-query top-k                          [shuffle 2: tiny]
   *
-  * At 10^12 docs the two big shuffles are map-side-combined hash
-  * aggregations keyed by high-cardinality keys (no skew: (doc_id,term)
-  * and (query_id,doc_id) are near-unique); the query side and term
+  * At 10^12 docs the scoring shuffle is a map-side-combined hash
+  * aggregation keyed by a high-cardinality key (no skew:
+  * (query_id,doc_id) is near-unique); the query side and term
   * stats are broadcast, so no shuffle scales with m. This path is the
   * correctness oracle; the throughput path is Block-Max WAND over
   * sealed segments (graft.index.Wand).
@@ -48,7 +47,8 @@ object ExactSearch {
       .agg(count(lit(1)).as("n_docs"), avg("dl").as("avgdl"))
 
   /** Scored (query_id, doc_id, score) before top-k truncation; score
-    * already rounded to the output grid.
+    * already rounded to the output grid. A document's contributions
+    * reach the sum in its term order ([[Tokenizer.termFrequencies]]).
     */
   def scoreAll(spark: SparkSession, sfDir: String, queryTerms: DataFrame): DataFrame = {
     val tf = termFreqs(spark, sfDir)

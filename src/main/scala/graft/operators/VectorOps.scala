@@ -58,26 +58,12 @@ object VectorOps {
         "use the ANN/LSH scale path (AnnOps) or raise graft.exact.maxN")
   }
 
-  /** Row counts for the guard, memoized per table path and stamped with
-    * the table's [[graft.index.IndexBuilder.fileListing]]: the guard
+  /** Row counts for the guard, memoized per table path: the guard
     * used to cost one count() JOB per invocation (rerank alone
     * triggered it 4×) — pure driver-side latency noise on the query
-    * paths. A table rewritten in place lists different files, so its
-    * next call counts again.
+    * paths. A table rewritten in place counts again.
     */
-  private val countMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Seq[(String, Long)], Long)]
-
-  private def memoCount(spark: SparkSession, table: String)(count: => Long): Long = {
-    val fp = graft.index.IndexBuilder.fileListing(spark, table)
-    countMemo.get(table) match {
-      case Some((f, n)) if f == fp => n
-      case _ =>
-        val n = count
-        countMemo.put(table, (fp, n))
-        n
-    }
-  }
+  private val memoCount = new graft.index.IndexBuilder.ListingMemo[Long]
 
   private[graft] def embCount(spark: SparkSession, sfDir: String): Long =
     memoCount(spark, s"$sfDir/embeddings.parquet")(Corpus.embeddings(spark, sfDir).count())

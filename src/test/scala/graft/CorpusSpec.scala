@@ -67,4 +67,22 @@ class CorpusSpec extends AnyFunSuite {
       .select("url", "warc_ts").orderBy("url").collect().toSeq
     assert(a == b)
   }
+
+  test("a corpus schema is inferred once per file set; an in-place rewrite re-infers") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-corpus-").toString
+    val table = s"$dir/documents.parquet"
+    try {
+      Seq((1L, "a b")).toDF("doc_id", "text").write.parquet(table)
+      Corpus.documents(spark, dir)
+      val (cols, jobs) = TestSpark.withJobCount(Corpus.documents(spark, dir).columns.toSeq)
+      assert(jobs == 0, s"a second read of an unchanged corpus ran $jobs jobs")
+      assert(cols == Seq("doc_id", "text"))
+      Seq((2L, "en")).toDF("doc_id", "lang").write.mode("overwrite").parquet(table)
+      val again = Corpus.documents(spark, dir)
+      assert(again.columns.toSeq == Seq("doc_id", "lang"))
+      assert(again.as[(Long, String)].collect().toSeq == Seq((2L, "en")))
+    } finally graft.operators.StreamingOps.deleteRec(dir)
+  }
 }

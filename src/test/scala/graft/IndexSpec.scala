@@ -2,7 +2,13 @@ package graft
 
 import graft.index.{IndexBuilder, IndexFormat, Wand}
 import graft.functions.BM25
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.{SparkPlan, SparkPlanInfo}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -115,6 +121,74 @@ class IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(man.select("shard").distinct().count() == man.count())
   }
 
+  /** Hash-partitioning keys of every shuffle exchange in a physical
+    * plan, adaptive stages included.
+    */
+  private def exchangeKeys(p: SparkPlan): Seq[Set[String]] = {
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => Nil
+    }
+    val own = p match {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: HashPartitioning => Seq(h.expressions.flatMap(_.references.map(_.name)).toSet)
+        case _ => Nil
+      }
+      case _ => Nil
+    }
+    own ++ (p.children ++ inner ++ p.subqueries).flatMap(exchangeKeys)
+  }
+
+  test("a full sf0.001 build runs ≤ 12 Spark jobs, one posting exchange, no read-back") {
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val dir = tmp()
+    // the plan of every SQL execution the build starts, as posted and
+    // as adaptive execution re-plans it
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val (_, jobs) = try TestSpark.withJobCount(
+      IndexBuilder.build(spark, TestSpark.Sf0001, dir, numShards = 4))
+    finally sc.removeSparkListener(listener)
+    info(s"IndexBuilder.build at sf0.001: $jobs Spark jobs")
+    assert(jobs <= 12, s"the build ran $jobs Spark jobs")
+    import scala.jdk.CollectionConverters._
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    val all = plans.asScala.toSeq.flatMap(nodes)
+    // the shard exchange is the only one the posting rows cross: no
+    // exchange is keyed on a document
+    val hashKey = """hashpartitioning\(([^)]*), \d+\)""".r
+    val keys = all.filter(_.nodeName == "Exchange").flatMap(e =>
+      hashKey.findFirstMatchIn(e.simpleString)
+        .map(_.group(1).split(", ").map(_.takeWhile(_ != '#')).toSet)).distinct
+    assert(keys.contains(Set("shard")), s"no shard exchange among $keys")
+    assert(!keys.exists(_.contains("doc_id")), s"an exchange keyed on doc_id: $keys")
+    // nothing the build writes is read back
+    val read = all.filter(_.nodeName.startsWith("Scan")).map(_.simpleString)
+      .filter(_.contains(dir))
+    assert(read.forall(_.contains(s"$dir/manifest")), s"the build read back $read")
+  }
+
+  test("the exact scorer counts term frequencies with no (doc_id, dl, term) exchange") {
+    val spark = TestSpark.spark
+    val plan = graft.operators.ExactSearch.scoreAll(spark, TestSpark.Sf0001,
+      graft.operators.ExactSearch.defaultQueryTerms(spark)).queryExecution.executedPlan
+    val keys = exchangeKeys(plan)
+    assert(keys.nonEmpty, "the scoring aggregation's exchange was not found")
+    // the scoring sum is keyed on (query_id, doc_id) and df on term
+    assert(!keys.exists(k => k.contains("dl") || k.contains("term") && k.contains("doc_id")),
+      s"a tf exchange in the exact scorer: $keys")
+  }
+
   test("build content is independent of shard count and shuffle parallelism") {
     val spark = TestSpark.spark
     import spark.implicits._
@@ -177,6 +251,23 @@ class IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cur.map(_.doc_count).sum == 500L)
     // resume over the deduped view sees the rebuild as complete
     assert(IndexBuilder.resume(spark, TestSpark.Sf0001, dir, 2, 1L).isEmpty)
+  }
+
+  test("a shard whose documents have no terms commits with norms and zeroed posting stats") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val corpus = tmp()
+    // shard 1 (doc ids 4..7 of 0..7 over 2 shards) tokenizes to nothing
+    (0L until 8L).map(i => (i, if (i < 4) s"alpha beta w$i" else "  "))
+      .toDF("doc_id", "text").write.parquet(s"$corpus/documents.parquet")
+    val dir = tmp()
+    IndexBuilder.build(spark, corpus, dir, numShards = 2)
+    val view = IndexBuilder.readManifest(spark, dir)
+    assert(view.map(r => (r.shard, r.min_doc, r.max_doc, r.doc_count)) ==
+      Seq((0, 0L, 3L, 4L), (1, 4L, 7L, 4L)))
+    assert(view.find(_.shard == 1).exists(r => r.term_count == 0L && r.postings_bytes == 0L))
+    assert(view.find(_.shard == 0).exists(r => r.term_count == 6L && r.postings_bytes > 0L))
+    assert(IndexBuilder.resume(spark, corpus, dir, 2, 1L).isEmpty)
   }
 
   test("manifest time travel: as-of views replay the append-only log exactly") {

@@ -3,7 +3,6 @@ package graft
 import graft.core.Types.TermQuery
 import graft.index.{IndexBuilder, Wand}
 import graft.operators.{ExactSearch, StreamingOps}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -49,22 +48,6 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     rows(ExactSearch.topK(spark, sfDir, k = qs.map(_.k).max, queryTerms =
       qs.flatMap(q => q.terms.map(t => (q.query_id, t))).toDF("query_id", "term")))
       .filter { case (qid, rnk, _, _) => rnk <= kById(qid) }
-  }
-
-  /** `f`'s result and the number of Spark jobs it started. */
-  private def withJobCount[A](f: => A): (A, Int) = {
-    val sc = TestSpark.spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc) // earlier work's events
-    sc.addSparkListener(listener)
-    try {
-      val a = f
-      org.apache.spark.TestListenerBus.drain(sc)
-      (a, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("WAND ≡ exact on the fixed query set (sf0.001)") {
@@ -340,14 +323,14 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     Wand.release(indexDir)
     val warm = TermQuery(800, Seq("spark", "join", "the"), 10)
     val (firstRows, firstJobs) =
-      withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(warm))))
+      TestSpark.withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(warm))))
     val (warmRows, warmJobs) =
-      withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(warm))))
+      TestSpark.withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(warm))))
     // memo miss: one lookup job over the resident dictionary, then the
     // shard eval
     val cold = TermQuery(801, Seq("window", "vector", "zzz_never_seen"), 25)
     val (coldRows, coldJobs) =
-      withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(cold))))
+      TestSpark.withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(cold))))
     info(s"Spark jobs per call: first=$firstJobs warm=$warmJobs never-seen terms=$coldJobs")
     assert(firstJobs == 3, s"first call on a fresh entry ran $firstJobs jobs")
     assert(warmJobs == 1, s"warm single query ran $warmJobs jobs")
@@ -458,5 +441,33 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after != before, "the two corpora must rank differently")
     assert(spark.sparkContext.getPersistentRDDs.size == residentBefore,
       "the stale entry's RDDs must be unpersisted when the new one loads")
+  }
+
+  /** The resident map outlives a session in the same JVM; an entry of
+    * a stopped context must be neither served nor unpersisted.
+    */
+  test("resident entries die with their SparkContext: a new session queries exactly") {
+    val first = tmp("graft-wand-ctx-")
+    val kept = tmp("graft-wand-ctx-")
+    val second = tmp("graft-wand-ctx-")
+    val old = TestSpark.spark
+    IndexBuilder.build(old, TestSpark.Sf0001, first, numShards = 2)
+    IndexBuilder.build(old, TestSpark.Sf0001, kept, numShards = 2)
+    Wand.topK(old, first, Seq(1L)).collect()
+    Wand.topK(old, kept, Seq(1L)).collect()
+    StreamingOps.deleteRec(first)
+    old.stop()
+    val spark = TestSpark.spark
+    assert(spark.sparkContext ne old.sparkContext)
+    val gold = rows(ExactSearch.topK(spark, TestSpark.Sf0001))
+    // (a) another index, while the dead entries of `first` and `kept`
+    // are still in the map
+    IndexBuilder.build(spark, TestSpark.Sf0001, second, numShards = 2)
+    assert(rows(Wand.topK(spark, second, Seq(1L))) == gold)
+    // (b) the deleted dir rebuilt from the same corpus
+    IndexBuilder.build(spark, TestSpark.Sf0001, first, numShards = 2)
+    assert(rows(Wand.topK(spark, first, Seq(1L))) == gold)
+    // (c) unchanged files: the fingerprint matches a dead entry
+    assert(rows(Wand.topK(spark, kept, Seq(1L))) == gold)
   }
 }
