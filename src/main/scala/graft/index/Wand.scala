@@ -6,11 +6,13 @@ import graft.operators.TopK
 import graft.queries.QuerySet
 import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Block-Max WAND top-k over sealed segments — the fast query path, the
   * analogue of the reference's pruned beam traversal
@@ -25,22 +27,25 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Distribution model (the reference's `ParallelExhaustiveSearch`
   * partial/merge, /root/reference/src/parallel-exhaustive.jl:44-62,
-  * over an index held in memory the way the reference holds its
-  * `StaticAdjList`): the first call on an (index, snapshot set) loads
-  * it into Spark storage as a [[Resident]] entry — one [[ShardSegment]]
-  * per shard (posting lists by term, norms decoded and doc-sorted) and
-  * a term dictionary hash-partitioned by term (df and hint rows) — and
-  * every call then runs in three layers. (1) The driver resolves corpus
-  * stats, idf and θ₀ from the entry; a term the entry's memo lacks
-  * costs one lookup job over the few dictionary partitions holding it.
-  * (2) One single-stage `mapPartitions` job evaluates WAND for all
-  * queries on every resident segment (queries, idf map, avgdl, θ₀ and
-  * snapshot scales broadcast) and emits each (shard, query)'s bounded
-  * top-k heap with its pruning counters. (3) The driver collects those
-  * heaps — at most shards × queries × k hits — and merges them per
-  * query with [[TopK]], the reference's caller-side queue merge. A
-  * warm call reads no parquet, plans no Catalyst query and shuffles
-  * nothing; scaling in docs is scaling in shards.
+  * where each partition keeps its own state and the caller only merges
+  * partial queues): the first call on an (index, snapshot set) loads it
+  * into Spark storage as a [[Resident]] entry — one [[ShardSegment]]
+  * per shard, holding for every term with postings in the shard its
+  * posting lists, its global df and its hint rows, and the shard's
+  * norms decoded and doc-sorted. Every call then runs in three layers.
+  * (1) The driver resolves the corpus stats only (n_docs, avgdl and the
+  * per-snapshot bound scales); it looks no term up. (2) One
+  * single-stage `mapPartitions` job evaluates WAND for all queries on
+  * every resident segment: each task derives idf and the θ₀ warm-start
+  * from its own segment's dictionary and emits each (shard, query)'s
+  * bounded top-k heap with its pruning counters. (3) The driver collects
+  * those heaps — at most shards × queries × k hits — and merges them per
+  * query with [[TopK]], the reference's caller-side queue merge. So
+  * every call is ONE Spark job, whatever terms it names, and a first
+  * call on a fresh entry two (the stats read, then the eval that
+  * computes and stores the segments). A warm call reads no parquet,
+  * plans no Catalyst query and shuffles nothing; scaling in docs is
+  * scaling in shards.
   *
   * Key and lifecycle: an entry is keyed by (index dir, sorted snapshot
   * ids) and stamped with a fingerprint of its snapshots' sidecar files
@@ -56,7 +61,16 @@ import scala.collection.mutable.ArrayBuffer
   * Entries are persisted
   * [[ResidentStorage]]: under memory pressure a segment spills to the
   * executor's disk rather than being recomputed from parquet, and a
-  * lost block is recomputed from the load's lineage.
+  * lost block is recomputed from the load's lineage. An entry's memory
+  * is bounded by the index's (shard, term) posting lists, each term's
+  * df and ≤ H hint rows per snapshot held beside them — not by the
+  * terms queries have named.
+  *
+  * θ₀ is per shard: a shard sums the hint rows of the query terms it
+  * holds. A partial score over a subset of a query's terms is never
+  * above that doc's full score, so θ₀ stays a certified lower bound on
+  * the k-th best score and results stay rank-exact; for a query whose
+  * terms all occur in the shard it equals the bound over all terms.
   *
   * Rounding discipline: heap order and final ranking use ROUNDED
   * scores ((round(s,4) DESC, doc_id ASC) — identical to the exact path
@@ -233,15 +247,24 @@ object Wand {
     }
   }
 
-  /** One shard's resident part of an index: its posting lists by term,
-    * each tagged with the snapshot id it was loaded from, and its norms
+  /** What the termstats and hints sidecars of a snapshot set say about
+    * one term: its global df summed over the snapshots and its distinct
+    * hint rows `(doc_id, tf, dl)` (empty on a pre-hints index).
+    */
+  private[index] final case class TermInfo(df: Long, hints: Array[(Long, Long, Long)])
+
+  /** One shard's resident part of an index: for every term with postings
+    * in the shard, its [[TermInfo]] and its posting lists, each tagged
+    * with the snapshot id it was loaded from; and the shard's norms
     * decoded and sorted by doc id — FULLY sorted, since unmerged
     * snapshots' doc ranges may interleave arbitrarily within a shard
     * (the [[IndexBuilder.mergeSnapshots]] contract). Built once per
-    * resident entry, so no call re-decodes a norm.
+    * resident entry, so no call re-decodes a norm or looks a term up.
+    * Its size is bounded by the shard's (term, posting list) pairs plus
+    * at most H hint rows per snapshot for each of those terms.
     */
   private[index] final class ShardSegment(
-      val byTerm: Map[String, Array[(Long, PostingList)]],
+      val byTerm: Map[String, (TermInfo, Array[(Long, PostingList)])],
       nids: Array[Long], ndls: Array[Long]) extends Serializable {
 
     def dlAt(doc: Long): Long = {
@@ -252,21 +275,28 @@ object Wand {
 
     /** All queries over this shard: one [[ShardHits]] per query that
       * had any cursor here, so hits and counters come out of ONE pass.
-      * The counters travel in the task's result rows, not an
-      * accumulator, so a retried task cannot double-count them.
+      * idf comes from the global df each held term carries, θ₀ from
+      * the hint rows of the query terms the shard holds (see
+      * [[hintTheta]]). The counters travel in the task's result rows,
+      * not an accumulator, so a retried task cannot double-count them.
       */
     def eval(args: EvalArgs): Iterator[ShardHits] =
       args.queries.iterator.flatMap { q =>
-        val cost = new Costs
-        val cursors = q.terms.distinct.flatMap(t =>
-          byTerm.getOrElse(t, Array.empty[(Long, PostingList)]).map { case (snap, pl) =>
-            new Cursor(pl, args.idf(t), cost, args.snapScale.getOrElse(snap, 1.0))
-          }).toArray
-        if (cursors.isEmpty) None
+        val held = q.terms.distinct.flatMap(byTerm.get)
+        if (held.isEmpty) None
         else {
+          val cost = new Costs
+          val idfs = held.map { case (ti, _) => BM25.idf(args.nDocs, ti.df) }
+          val cursors = held.zip(idfs).flatMap { case ((_, lists), idf) =>
+            lists.map { case (snap, pl) =>
+              new Cursor(pl, idf, cost, args.snapScale.getOrElse(snap, 1.0))
+            }
+          }.toArray
+          val theta0 =
+            if (args.useHints) hintTheta(held.map(_._1.hints).zip(idfs), q.k, args.avgdl)
+            else Double.NegativeInfinity
           val heap = TopK.empty(q.k)
-          wandQuery(cursors, heap, dlAt, args.avgdl, cost,
-            args.theta0.getOrElse(q.query_id, Double.NegativeInfinity))
+          wandQuery(cursors, heap, dlAt, args.avgdl, cost, theta0)
           Some(ShardHits(q.query_id, heap.ids.take(heap.size),
             heap.scores.take(heap.size), cost.docsScored, cost.blocksDecoded,
             cost.blocksSkipped))
@@ -275,34 +305,58 @@ object Wand {
   }
 
   private[index] object ShardSegment {
-    /** The segment of whatever (shard, (postings, norms)) groups one
-      * load partition holds (one shard each under the identity
-      * partitioning of small shard ids, but correct for any).
+    /** The segment of whatever (shard, (postings, norms, dictionary
+      * entries)) groups one load partition holds (one shard each under
+      * the identity partitioning of small shard ids, but correct for
+      * any).
       */
-    def apply(groups: Iterator[(Int, (Iterable[(Long, PostingList)], Iterable[DocNorms]))]): ShardSegment = {
-      val byTerm = scala.collection.mutable.HashMap.empty[String, ArrayBuffer[(Long, PostingList)]]
+    def apply(groups: Iterator[(Int, (Iterable[(Long, PostingList)], Iterable[DocNorms],
+        Iterable[(String, TermInfo)]))]): ShardSegment = {
+      val lists = scala.collection.mutable.HashMap.empty[String, ArrayBuffer[(Long, PostingList)]]
+      val infos = scala.collection.mutable.HashMap.empty[String, TermInfo]
       val pairs = ArrayBuffer.empty[(Long, Long)]
-      groups.foreach { case (_, (posts, norms)) =>
-        posts.foreach(sp => byTerm.getOrElseUpdate(sp._2.term, new ArrayBuffer) += sp)
+      groups.foreach { case (_, (posts, norms, terms)) =>
+        posts.foreach(sp => lists.getOrElseUpdate(sp._2.term, new ArrayBuffer) += sp)
+        infos ++= terms
         norms.foreach { n =>
           val (ids, dls) = IndexFormat.decodeNorms(n)
           ids.indices.foreach(i => pairs += ((ids(i), dls(i))))
         }
       }
       val sorted = pairs.toArray.sortBy(_._1)
-      new ShardSegment(byTerm.map { case (t, ps) => t -> ps.toArray }.toMap,
+      new ShardSegment(lists.map { case (t, ps) => t -> (infos(t), ps.toArray) }.toMap,
         sorted.map(_._1), sorted.map(_._2))
     }
   }
 
-  /** What a shard-eval task needs besides its segment (broadcast).
+  /** θ warm-start from the hints sidecar (the reference's hints role,
+    * /root/reference/src/searchgraph/hints.jl:42-264): sum each hint
+    * doc's contributions over the given (hint rows, idf) terms (tfn
+    * under the merged avgdl), round onto the score grid, and take the
+    * k-th largest — a certified lower bound on the k-th best final
+    * score for any subset of a query's terms (see the object doc). −∞
+    * (no warm start) with fewer than k hint docs, always so on a
+    * pre-hints index.
+    */
+  private def hintTheta(terms: Seq[(Array[(Long, Long, Long)], Double)], k: Int,
+      avgdl: Double): Double = {
+    val perDoc = scala.collection.mutable.HashMap.empty[Long, Double]
+    terms.foreach { case (hints, idf) => hints.foreach { case (doc, tf, dl) =>
+      perDoc(doc) = perDoc.getOrElse(doc, 0.0) + idf * BM25.tfNorm(tf, dl, avgdl)
+    } }
+    val lower = perDoc.values.map(BM25.roundScore).toArray.sorted(Ordering[Double].reverse)
+    if (lower.length >= k) lower(k - 1) else Double.NegativeInfinity
+  }
+
+  /** What a shard-eval task needs besides its segment; it rides the
+    * eval closure, so Spark ships it once per call in the stage's task
+    * binary. `nDocs` and `avgdl` are merged over the queried snapshots.
     * `snapScale` is the per-snapshot Block-Max bound scale
     * (max(1, merged avgdl / snapshot avgdl) — see [[Cursor]]), keyed by
     * the snapshot id each posting list was loaded from.
     */
-  private[index] final case class EvalArgs(queries: Seq[TermQuery],
-      idf: Map[String, Double], avgdl: Double, theta0: Map[Int, Double],
-      snapScale: Map[Long, Double])
+  private[index] final case class EvalArgs(queries: Seq[TermQuery], nDocs: Long,
+      avgdl: Double, useHints: Boolean, snapScale: Map[Long, Double])
 
   /** Batch top-k over a built index (possibly several unmerged
     * snapshots — cursors per segment, doc ranges disjoint per term).
@@ -312,43 +366,7 @@ object Wand {
     */
   def topK(spark: SparkSession, indexDir: String, snaps: Seq[Long],
       queries: Seq[TermQuery] = QuerySet.queries): DataFrame =
-    spark.createDataset(merged(spark, indexDir, snaps, queries, useHints = true)._1)(hitEncoder)
-      .toDF()
-
-  /** θ warm-start from the hints sidecar (the reference's hints role,
-    * /root/reference/src/searchgraph/hints.jl:42-264): sum each hint
-    * doc's contributions over the query's terms (tfn under the merged
-    * avgdl), round onto the score grid, and take the k-th largest —
-    * a certified lower bound on the k-th best final score, since every
-    * true score only ADDS non-negative contributions to the partial.
-    * O(H·|terms|) driver work per query; −∞ (no warm start) for a query
-    * with fewer than k hint docs, always so on a pre-hints index.
-    */
-  private def hintThetas(queries: Seq[TermQuery], info: Map[String, TermInfo],
-      idfMap: Map[String, Double], avgdl: Double): Map[Int, Double] =
-    queries.map { q =>
-      val perDoc = scala.collection.mutable.HashMap.empty[Long, Double]
-      q.terms.distinct.foreach { t =>
-        (idfMap.get(t), info.get(t)) match {
-          case (Some(idf), Some(ti)) => ti.hints.foreach { case (doc, tf, dl) =>
-            perDoc(doc) = perDoc.getOrElse(doc, 0.0) + idf * BM25.tfNorm(tf, dl, avgdl)
-          }
-          case _ =>
-        }
-      }
-      val lower = perDoc.values.map(BM25.roundScore).toArray.sorted(Ordering[Double].reverse)
-      val t0 = if (lower.length >= q.k) lower(q.k - 1) else Double.NegativeInfinity
-      q.query_id -> t0
-    }.toMap
-
-  /** What the termstats and hints sidecars of a snapshot set say about
-    * one term: its global df summed over the snapshots (None = the term
-    * occurs nowhere, so it stays out of the idf map) and its distinct
-    * hint rows `(doc_id, tf, dl)` (empty on a pre-hints index).
-    */
-  private final case class TermInfo(df: Option[Long], hints: Array[(Long, Long, Long)])
-
-  private val Absent = TermInfo(None, Array.empty)
+    hitFrame(spark, merged(spark, indexDir, snaps, queries, useHints = true)._1)
 
   /** Storage level of every resident entry: a segment that does not fit
     * in memory spills to local disk instead of being dropped and
@@ -357,27 +375,21 @@ object Wand {
   private val ResidentStorage: StorageLevel = StorageLevel.MEMORY_AND_DISK
 
   /** One (index, snapshot set) held in Spark storage (see the object
-    * doc for its key and lifecycle).
-    *
-    * `termMemo` caches the dictionary answers the driver has fetched: a
-    * term is looked up at most once per entry, and a call whose terms
-    * are all memoized runs no lookup job. Terms absent from the index
-    * memoize too. Memory is bounded by (distinct queried terms) × H,
-    * not by the vocabulary. `noHints` is the θ warm-start latch: some
+    * doc for its key and lifecycle): its snapshots' stats on the driver
+    * and ONE persisted RDD of [[ShardSegment]]s, one per shard. Memory
+    * is bounded by the index's (shard, term) posting lists, not by the
+    * terms queries have named. `noHints` is the θ warm-start latch: some
     * snapshot had no hints sidecar when the entry was loaded (a
-    * pre-hints index), so the dictionary carries no hint rows.
+    * pre-hints index), so the segments carry no hint rows.
     */
   private final class Resident(val fingerprint: Seq[(String, Long)],
       val stats: Seq[IndexBuilder.SnapStats], val noHints: Boolean,
-      val segments: RDD[ShardSegment], val dict: RDD[Map[String, TermInfo]]) {
-    val termMemo = TrieMap.empty[String, TermInfo]
+      val segments: RDD[ShardSegment]) {
     /** Was this entry loaded by `sc`, and is `sc` still running? */
     def liveIn(sc: SparkContext): Boolean = (segments.sparkContext eq sc) && !sc.isStopped
     /** Frees the entry's storage; a stopped context has none left. */
-    def unpersist(): Unit = if (!segments.sparkContext.isStopped) {
-      segments.unpersist(blocking = false)
-      dict.unpersist(blocking = false)
-    }
+    def unpersist(): Unit =
+      if (!segments.sparkContext.isStopped) segments.unpersist(blocking = false)
   }
 
   private type Key = (String, Seq[Long])
@@ -418,32 +430,39 @@ object Wand {
   }
 
   /** The resident load's Catalyst plans, the only ones left on the
-    * query path: every snapshot's postings tagged with its id, the
-    * norms, and the dictionary rows — termstats `(term, df)` and, with
-    * `hints`, hint rows `(term, doc_id, tf, dl)`, in one null-padded
-    * union. All read with the writers' declared schemas.
+    * query path, each a union over the snapshots read with the writers'
+    * declared schemas: the postings tagged with their snapshot id, the
+    * norms, and the dictionary inputs keyed by term — the `(term, shard)`
+    * pairs of the postings (a read of those two columns only), termstats
+    * `(term, df)` and, with `hints`, hint rows `(term, doc_id, tf, dl)`.
     */
-  private[graft] def loadPlans(spark: SparkSession, indexDir: String,
-      snaps: Seq[Long], hints: Boolean): (Dataset[(Long, PostingList)], Dataset[DocNorms], DataFrame) = {
+  private[graft] def loadPlans(spark: SparkSession, indexDir: String, snaps: Seq[Long],
+      hints: Boolean): (Dataset[(Long, PostingList)], Dataset[DocNorms], Dataset[(String, Int)],
+      Dataset[(String, Long)], Dataset[(String, Long, Long, Long)]) = {
     import spark.implicits._
     import IndexBuilder.Schemas
     val paths = IndexBuilder.IndexPaths(indexDir)
+    def read(dir: Long => String, schema: StructType, cols: String*): DataFrame =
+      snaps.map(s => spark.read.schema(schema).parquet(dir(s)).select(cols.map(col): _*))
+        .reduce(_ union _)
     val posts = snaps.map(s => IndexBuilder.loadPostings(spark, indexDir, Seq(s))
       .map(pl => (s, pl))).reduce(_ union _)
-    val none = lit(null).cast("long")
-    val dfRows = snaps.map(s =>
-      spark.read.schema(Schemas.termstats).parquet(paths.termstats(s))
-        .select(col("term"), col("df"), none.as("doc_id"), none.as("tf"), none.as("dl")))
     val hintRows =
-      if (!hints) Nil
-      else snaps.map(s => spark.read.schema(Schemas.hints).parquet(paths.hints(s))
-        .select(col("term"), none.as("df"), col("doc_id"), col("tf"), col("dl")))
-    (posts, IndexBuilder.loadNorms(spark, indexDir, snaps), (dfRows ++ hintRows).reduce(_ union _))
+      if (!hints) spark.emptyDataset[(String, Long, Long, Long)]
+      else read(paths.hints, Schemas.hints, "term", "doc_id", "tf", "dl").as[(String, Long, Long, Long)]
+    (posts, IndexBuilder.loadNorms(spark, indexDir, snaps),
+      read(paths.postings, Schemas.postings, "term", "shard").as[(String, Int)],
+      read(paths.termstats, Schemas.termstats, "term", "df").as[(String, Long)], hintRows)
   }
 
   /** A new resident entry. Only the stats read runs here (one job); the
-    * segments and the dictionary are persisted unmaterialized, and the
-    * first shard eval and the first lookup compute and store them.
+    * segments are persisted unmaterialized, and the first shard eval
+    * computes and stores them. Its job cogroups the dictionary inputs by
+    * term, which sends each term's [[TermInfo]] (df summed over the
+    * snapshots, hint rows de-duplicated) to every shard holding postings
+    * of it, then cogroups postings, norms and those entries by shard:
+    * only the small dictionary rows cross the extra exchange, and the
+    * posting payload crosses one.
     */
   private def load(spark: SparkSession, indexDir: String, snaps: Seq[Long],
       fp: Seq[(String, Long)]): Resident = {
@@ -452,32 +471,22 @@ object Wand {
     if (noHints) System.err.println(s"[graft] no hints sidecar for $indexDir " +
       s"snaps=${snaps.mkString(",")} — θ warm-start disabled")
     val stats = IndexBuilder.loadStats(spark, indexDir, snaps)
-    val (posts, norms, dictRows) = loadPlans(spark, indexDir, snaps, !noHints)
+    val (posts, norms, termShards, dfs, hintRows) = loadPlans(spark, indexDir, snaps, !noHints)
     // shard ids are 0 until num_shards, so hash partitioning by shard
     // puts each shard in its own partition
     val shards = new HashPartitioner(stats.map(_.num_shards).max)
-    val name = s"$indexDir snaps=${snaps.mkString(",")}"
-    val segments = posts.rdd.keyBy(_._2.shard).cogroup(norms.rdd.keyBy(_.shard), shards)
+    val dict = termShards.rdd.cogroup(dfs.rdd,
+        hintRows.rdd.map { case (t, doc, tf, dl) => (t, (doc, tf, dl)) }, shards)
+      .flatMap { case (t, (held, df, hints)) =>
+        require(held.isEmpty || df.nonEmpty, s"term '$t' has postings but no termstats row")
+        val info = TermInfo(df.sum, hints.toArray.distinct)
+        held.toSeq.distinct.map(s => (s, (t, info)))
+      }
+    val segments = posts.rdd.keyBy(_._2.shard).cogroup(norms.rdd.keyBy(_.shard), dict, shards)
       .mapPartitions(groups => Iterator(ShardSegment(groups)))
-      .setName(s"wand segments $name").persist(ResidentStorage)
-    val dict = dictRows.rdd.keyBy(_.getString(0)).partitionBy(shards)
-      .mapPartitions(rows => Iterator(termDict(rows)))
-      .setName(s"wand dictionary $name").persist(ResidentStorage)
-    new Resident(fp, stats, noHints, segments, dict)
-  }
-
-  /** One dictionary partition: df summed over snapshots and hint rows
-    * de-duplicated, per term.
-    */
-  private def termDict(rows: Iterator[(String, Row)]): Map[String, TermInfo] = {
-    val dfs = scala.collection.mutable.HashMap.empty[String, Long]
-    val hints = scala.collection.mutable.HashMap.empty[String, ArrayBuffer[(Long, Long, Long)]]
-    rows.foreach { case (t, r) =>
-      if (!r.isNullAt(1)) dfs(t) = dfs.getOrElse(t, 0L) + r.getLong(1)
-      else hints.getOrElseUpdate(t, new ArrayBuffer) += ((r.getLong(2), r.getLong(3), r.getLong(4)))
-    }
-    (dfs.keySet ++ hints.keySet).iterator.map(t => t ->
-      TermInfo(dfs.get(t), hints.get(t).map(_.distinct.toArray).getOrElse(Array.empty))).toMap
+      .setName(s"wand segments $indexDir snaps=${snaps.mkString(",")}")
+      .persist(ResidentStorage)
+    new Resident(fp, stats, noHints, segments)
   }
 
   /** Unpersist every resident entry of `indexDir`. Only frees memory:
@@ -498,32 +507,23 @@ object Wand {
     resident.get((indexDir, snaps.sorted)).exists(e => e.noHints &&
       e.liveIn(spark.sparkContext) && e.fingerprint == fingerprint(spark, indexDir, snaps.sorted))
 
-  /** [[TermInfo]] for the given terms. The terms the entry's memo lacks
-    * are fetched by ONE lookup job over just the dictionary partitions
-    * they hash to.
-    */
-  private def termInfo(spark: SparkSession, e: Resident,
-      terms: Seq[String]): Map[String, TermInfo] = {
-    val missing = terms.filterNot(e.termMemo.contains)
-    if (missing.nonEmpty) {
-      val byTerm = new HashPartitioner(e.dict.getNumPartitions)
-      val found = spark.sparkContext.runJob(e.dict,
-        (dicts: Iterator[Map[String, TermInfo]]) =>
-          dicts.flatMap(d => missing.flatMap(t => d.get(t).map(t -> _))).toArray,
-        missing.map(byTerm.getPartition).distinct.sorted).flatten.toMap
-      missing.foreach(t => e.termMemo.put(t, found.getOrElse(t, Absent)))
-    }
-    terms.flatMap(t => e.termMemo.get(t).map(t -> _)).toMap
-  }
-
   /** One query's pruning counters summed over shards. */
   final case class QueryCost(query_id: Int, docs_scored: Long,
       blocks_decoded: Long, blocks_skipped: Long)
 
-  // derived once: deriving a product encoder per call costs more than
-  // a warm call's whole shard eval
-  private lazy val hitEncoder = Encoders.product[QueryHit]
-  private lazy val costEncoder = Encoders.product[QueryCost]
+  /** The result frames' declared schemas: the same names, types and
+    * nullability as `Encoders.product[QueryHit]` / `[QueryCost]`, with
+    * no encoder derived per call.
+    */
+  private val HitSchema = StructType.fromDDL(
+    "query_id INT NOT NULL, rnk INT NOT NULL, doc_id BIGINT NOT NULL, score DOUBLE NOT NULL")
+  private val CostSchema = StructType.fromDDL(
+    "query_id INT NOT NULL, docs_scored BIGINT NOT NULL, blocks_decoded BIGINT NOT NULL, " +
+      "blocks_skipped BIGINT NOT NULL")
+
+  private def hitFrame(spark: SparkSession, hits: Seq[QueryHit]): DataFrame =
+    spark.createDataFrame(hits.map(h => Row(h.query_id, h.rnk, h.doc_id, h.score)).asJava,
+      HitSchema)
 
   /** [[topK]] plus the per-query cost metrics
     * `(query_id, docs_scored, blocks_decoded, blocks_skipped)` summed
@@ -538,7 +538,8 @@ object Wand {
       queries: Seq[TermQuery] = QuerySet.queries,
       useHints: Boolean = true): (DataFrame, DataFrame) = {
     val (hits, costs) = merged(spark, indexDir, snaps, queries, useHints)
-    (spark.createDataset(hits)(hitEncoder).toDF(), spark.createDataset(costs)(costEncoder).toDF())
+    (hitFrame(spark, hits), spark.createDataFrame(costs.map(c =>
+      Row(c.query_id, c.docs_scored, c.blocks_decoded, c.blocks_skipped)).asJava, CostSchema))
   }
 
   /** One call's hits in (query_id, rnk) order and its counters in
@@ -562,29 +563,22 @@ object Wand {
     (hits, metrics)
   }
 
-  /** Every (shard, query) heap of one call: the driver resolves stats,
-    * idf and θ₀ from the resident entry, then one single-stage job
-    * evaluates all queries on every resident segment.
+  /** Every (shard, query) heap of one call: the driver resolves the
+    * stats of the resident entry, then one single-stage job evaluates
+    * all queries on every resident segment.
     */
   private def shardHits(spark: SparkSession, indexDir: String,
       snaps: Seq[Long], queries: Seq[TermQuery], useHints: Boolean): Array[ShardHits] = {
     val e = residentEntry(spark, indexDir, snaps)
     val nDocs = e.stats.map(_.n_docs).sum
     val avgdl = e.stats.map(_.sum_dl).sum.toDouble / nDocs
-    val info = termInfo(spark, e, queries.flatMap(_.terms).distinct)
-    val idfMap: Map[String, Double] =
-      info.flatMap { case (t, ti) => ti.df.map(df => t -> BM25.idf(nDocs, df)) }
-    val theta0 =
-      if (useHints) hintThetas(queries, info, idfMap, avgdl)
-      else Map.empty[Int, Double]
     // per-snapshot Block-Max bound scale (see Cursor): sealed maxima
     // are tight under their own avgdl; a merged avgdl above it needs
     // the avgdl-ratio correction to stay an upper bound
     val snapScale: Map[Long, Double] = e.stats
       .map(s => s.snapshot_id -> math.max(1.0, avgdl / s.avgdl)).toMap
-    val bc = spark.sparkContext.broadcast(EvalArgs(queries, idfMap, avgdl, theta0, snapScale))
-    try e.segments.mapPartitions(_.flatMap(_.eval(bc.value))).collect()
-    finally bc.destroy()
+    val args = EvalArgs(queries, nDocs, avgdl, useHints, snapScale)
+    e.segments.mapPartitions(_.flatMap(_.eval(args))).collect()
   }
 
   /** Temp-index scope for the registry entries: `f` returns a local

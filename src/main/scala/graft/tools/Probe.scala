@@ -165,10 +165,12 @@ object Probe {
     val ivfF = Files.createTempDirectory("graft-probe-f64-").toString
     try {
       IndexBuilder.build(spark, sfDir, ix, numShards = spark.sparkContext.defaultParallelism)
-      val (posts, norms, dict) = Wand.loadPlans(spark, ix, Seq(1L), hints = true)
+      val (posts, norms, termShards, dfs, hints) = Wand.loadPlans(spark, ix, Seq(1L), hints = true)
       write("wand_load_postings", posts.toDF())
       write("wand_load_norms", norms.toDF())
-      write("wand_load_dictionary", dict)
+      write("wand_load_term_shards", termShards.toDF())
+      write("wand_load_termstats", dfs.toDF())
+      write("wand_load_hints", hints.toDF())
       AnnIndex.buildLsh(spark, sfDir, lsh)
       write("q44_search_inner", AnnIndex.searchLshAll(spark, lsh, sfDir))
       val mq = AnnIndex.buildIvf(spark, sfDir, ivfQ, nlist = 16, quantLevels = 255)

@@ -28,8 +28,8 @@ class ProbeSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft-probe-out-").toString
     try {
       run("plans", TestSpark.Sf0001, out, "t", "q01_bm25_exact")
-      Seq("q01_bm25_exact", "wand_load_postings", "wand_load_norms", "wand_load_dictionary",
-          "q44_search_inner", "q45_search_inner", "q47_search_inner").foreach { p =>
+      Seq("q01_bm25_exact", "wand_load_postings", "wand_load_norms", "wand_load_term_shards",
+          "wand_load_termstats", "wand_load_hints", "q44_search_inner", "q45_search_inner", "q47_search_inner").foreach { p =>
         assert(nonEmpty(out, s"${p}_t.txt"), s"missing plan $p")
       }
       assert(!Files.readString(Paths.get(out, "q01_bm25_exact_t.txt")).startsWith("EXPLAIN FAILED"))

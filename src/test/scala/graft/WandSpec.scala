@@ -1,8 +1,9 @@
 package graft
 
-import graft.core.Types.TermQuery
+import graft.core.Types.{QueryHit, TermQuery}
 import graft.index.{IndexBuilder, Wand}
 import graft.operators.{ExactSearch, StreamingOps}
+import org.apache.spark.sql.Encoders
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -53,9 +54,12 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("WAND ≡ exact on the fixed query set (sf0.001)") {
     val spark = TestSpark.spark
     val exact = rows(ExactSearch.topK(spark, TestSpark.Sf0001))
-    val wand = rows(Wand.topK(spark, indexDir, Seq(1L)))
+    val wandDf = Wand.topK(spark, indexDir, Seq(1L))
+    val wand = rows(wandDf)
     assert(exact.nonEmpty)
     assert(wand == exact)
+    // names, types and nullability of the declared result schema
+    assert(wandDf.schema == Encoders.product[QueryHit].schema, wandDf.schema.treeString)
   }
 
   test("WAND ≡ exact on 40 random queries incl. rare/absent terms and k sweep") {
@@ -123,6 +127,8 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hitRows.length == 3)
     assert(hitRows.map(_.getLong(2)).toSet == Set(100L, 200L, 300L),
       "tie rule keeps the three smallest needle ids")
+    assert(hits.schema == Encoders.product[QueryHit].schema, hits.schema.treeString)
+    assert(metrics.schema == Encoders.product[Wand.QueryCost].schema, metrics.schema.treeString)
     val m = metrics.collect()
     assert(m.length == 1 && m.head.getInt(0) == 900, "one metrics row per query")
     val (scored, decoded, skipped) = (m.head.getLong(1), m.head.getLong(2), m.head.getLong(3))
@@ -146,7 +152,9 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     info(s"docs scored: hints=$scoredOn no-hints=$scoredOff")
     assert(scoredOn <= scoredOff)
     // selective corpus (one rare + one universal term): the hint bound
-    // is ≈ the needle score, so the hay prefix is never scored at all
+    // is ≈ the needle score, so the hay prefix is never scored at all.
+    // At 2 shards each shard's θ₀ sums the hints of the query terms it
+    // holds; it must stay sound, and never cost more than no hints
     import spark.implicits._
     val corpusDir = tmp("graft-hints-corpus-")
     val needles = Set(100L, 200L, 300L, 4900L)
@@ -154,16 +162,22 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0L until 5000L).map(i => (i, if (needles(i)) s"needle $base" else base))
       .toDF("doc_id", "text")
       .repartition(4).write.parquet(s"$corpusDir/documents.parquet")
-    val d = tmp("graft-hints-ix-")
-    IndexBuilder.build(spark, corpusDir, d, numShards = 1)
     val qs = Seq(TermQuery(901, Seq("needle", "hay"), 3))
-    val (selOn, selMOn) = Wand.topKWithMetrics(spark, d, Seq(1L), qs, useHints = true)
-    val (selOff, selMOff) = Wand.topKWithMetrics(spark, d, Seq(1L), qs, useHints = false)
-    assert(rows(selOn) == rows(selOff))
-    val on = totals(selMOn)
-    val off = totals(selMOff)
-    info(s"selective: hints=(scored ${on._1}, skipped ${on._2}) no-hints=(scored ${off._1}, skipped ${off._2})")
-    assert(on._1 < off._1, "warm-start must strictly reduce scored docs on a selective query")
+    Seq(1, 2).foreach { numShards =>
+      val d = tmp("graft-hints-ix-")
+      IndexBuilder.build(spark, corpusDir, d, numShards = numShards)
+      val (selOn, selMOn) = Wand.topKWithMetrics(spark, d, Seq(1L), qs, useHints = true)
+      val (selOff, selMOff) = Wand.topKWithMetrics(spark, d, Seq(1L), qs, useHints = false)
+      assert(rows(selOn) == rows(selOff), s"$numShards shards: warm-start changed results")
+      assert(rows(selOn) == exactRows(corpusDir, qs))
+      val on = totals(selMOn)
+      val off = totals(selMOff)
+      info(s"selective, $numShards shards: hints=(scored ${on._1}, skipped ${on._2}) " +
+        s"no-hints=(scored ${off._1}, skipped ${off._2})")
+      assert(on._1 <= off._1, s"$numShards shards: warm-start scored more docs")
+      if (numShards == 1)
+        assert(on._1 < off._1, "warm-start must strictly reduce scored docs on a selective query")
+    }
   }
 
   test("EpsilonNetHints: net+pad golden model, warm-start stays sound, pruning parity with top-H") {
@@ -315,29 +329,42 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(wand == exact, "skewed-avgdl multi-snapshot WAND diverged from exact")
   }
 
-  test("Spark jobs per call: 3 on a fresh index, 1 warm, 2 on never-seen terms; rank-exact") {
+  test("Spark jobs per call: 2 fresh, 1 warm, 1 on never-seen terms or a 100-query batch") {
     val spark = TestSpark.spark
-    // a fresh entry: the first call reads the stats, looks its terms up
-    // (materializing the dictionary partitions they hash to) and runs
-    // the shard eval (materializing the segments)
+    // vocabulary for the batch, read before any job is counted
+    val vocab = spark.read.parquet(IndexBuilder.IndexPaths(indexDir).termstats(1L))
+      .select("term").collect().map(_.getString(0)).sorted.toSeq
+    // a fresh entry: the first call reads the stats, then runs the
+    // shard eval (materializing the segments and their dictionaries)
     Wand.release(indexDir)
     val warm = TermQuery(800, Seq("spark", "join", "the"), 10)
     val (firstRows, firstJobs) =
       TestSpark.withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(warm))))
     val (warmRows, warmJobs) =
       TestSpark.withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(warm))))
-    // memo miss: one lookup job over the resident dictionary, then the
-    // shard eval
+    // terms no earlier call named: each shard-eval task resolves idf
+    // and θ₀ from its own segment, so there is no lookup job
     val cold = TermQuery(801, Seq("window", "vector", "zzz_never_seen"), 25)
     val (coldRows, coldJobs) =
       TestSpark.withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(cold))))
-    info(s"Spark jobs per call: first=$firstJobs warm=$warmJobs never-seen terms=$coldJobs")
-    assert(firstJobs == 3, s"first call on a fresh entry ran $firstJobs jobs")
+    val named = Set("spark", "join", "the", "window", "vector")
+    val rnd = new Random(808)
+    val fresh = vocab.filterNot(named) :+ "zzz_never_seen_either"
+    val batch = (0 until 100).map(i =>
+      TermQuery(2000 + i, rnd.shuffle(fresh).take(1 + rnd.nextInt(3)), 1 + rnd.nextInt(20)))
+    val (batchRows, batchJobs) =
+      TestSpark.withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), batch)))
+    info(s"Spark jobs per call: first=$firstJobs warm=$warmJobs never-seen terms=$coldJobs " +
+      s"100-query batch=$batchJobs")
+    assert(firstJobs == 2, s"first call on a fresh entry ran $firstJobs jobs")
     assert(warmJobs == 1, s"warm single query ran $warmJobs jobs")
-    assert(coldJobs == 2, s"never-seen-terms query ran $coldJobs jobs")
+    assert(coldJobs == 1, s"never-seen-terms query ran $coldJobs jobs")
+    assert(batchJobs == 1, s"100-query batch of never-seen terms ran $batchJobs jobs")
     val gold = exactRows(TestSpark.Sf0001, Seq(warm))
     assert(gold.nonEmpty && firstRows == gold && warmRows == gold)
     assert(coldRows.nonEmpty && coldRows == exactRows(TestSpark.Sf0001, Seq(cold)))
+    assert(batchRows.map(_._1).distinct.size > 90 &&
+      batchRows == exactRows(TestSpark.Sf0001, batch))
   }
 
   test("nothing stays resident after release or a registry call") {
@@ -349,7 +376,7 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     IndexBuilder.build(spark, TestSpark.Sf0001, d, numShards = 2)
     assert(persisted == before, "the build itself must leave nothing persisted")
     Wand.topK(spark, d, Seq(1L)).collect()
-    assert(persisted.size == before.size + 2, "one entry = segments + dictionary")
+    assert(persisted.size == before.size + 1, "one entry = one persisted RDD of segments")
     Wand.release(d)
     assert(persisted == before)
     // a registry call builds, queries and deletes a throwaway index
