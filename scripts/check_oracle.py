@@ -9,9 +9,12 @@ hash-identity semantics. Round 1 shipped 5 hash failures because this
 script rounded to 9 decimals and used pandas value-equality, which masks
 negative zero.
 
+Each result line ends with the seconds DuckDB took to run that oracle,
+so a slow oracle shows in every run.
+
 Usage: check_oracle.py <sfDir> <verifyOutDir>
 """
-import sys, os, json, glob
+import sys, os, json, glob, time
 import duckdb
 import numpy as np
 import pyarrow.parquet as pq
@@ -46,23 +49,26 @@ for name, sql in sorted(oracles.items()):
     if not os.path.isdir(spark_path):
         print(f"[MISS] {name}: no spark output dir"); fail += 1; continue
     got = canon(pq.read_table(spark_path).to_pandas())
+    t0 = time.perf_counter()
     try:
         want = canon(con.execute(sql).fetchdf())
     except Exception as e:
         print(f"[SQLERR] {name}: {e}"); fail += 1; continue
+    took = f"(duckdb {time.perf_counter() - t0:.2f} s)"
     if list(got.columns) != list(want.columns):
-        print(f"[SCHEMA] {name}: spark={list(got.columns)} duckdb={list(want.columns)}")
+        print(f"[SCHEMA] {name}: spark={list(got.columns)} duckdb={list(want.columns)} {took}")
         fail += 1; continue
     if len(got) != len(want):
-        print(f"[ROWS] {name}: spark={len(got)} duckdb={len(want)}"); fail += 1; continue
+        print(f"[ROWS] {name}: spark={len(got)} duckdb={len(want)} {took}")
+        fail += 1; continue
     eq = got.equals(want)
     if not eq:
         diff = (got != want) & ~(got.isna() & want.isna())
         bad = diff.any(axis=1)
-        print(f"[VALS] {name}: {bad.sum()} bit-mismatched rows; first:")
+        print(f"[VALS] {name}: {bad.sum()} bit-mismatched rows {took}; first:")
         print(pd.concat([got[bad].head(3).add_prefix("spark_"),
                          want[bad].head(3).add_prefix("duck_")], axis=1))
         fail += 1
     else:
-        print(f"[OK] {name}: {len(got)} rows bit-identical")
+        print(f"[OK] {name}: {len(got)} rows bit-identical {took}")
 sys.exit(1 if fail else 0)

@@ -796,8 +796,4 @@ object AnnIndex {
     }
     finally gold.unpersist()
   }
-
-  def optimizeQuant(spark: SparkSession, sfDir: String, goal: AnnOps.OptGoal,
-      k: Int = 5, nlist: Int = 16): AnnOps.QuantConfig =
-    AnnOps.chooseQuant(evalQuantLadder(spark, sfDir, k, nlist), goal)
 }

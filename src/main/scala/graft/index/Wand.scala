@@ -4,7 +4,7 @@ import graft.core.Types._
 import graft.functions.BM25
 import graft.operators.TopK
 import graft.queries.QuerySet
-import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.{HashPartitioner, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,15 +35,20 @@ import scala.jdk.CollectionConverters._
   * norms decoded and doc-sorted. Every call then runs in three layers.
   * (1) The driver resolves the corpus stats only (n_docs, avgdl and the
   * per-snapshot bound scales); it looks no term up. (2) One
-  * single-stage `mapPartitions` job evaluates WAND for all queries on
-  * every resident segment: each task derives idf and the θ₀ warm-start
-  * from its own segment's dictionary and emits each (shard, query)'s
-  * bounded top-k heap with its pruning counters. (3) The driver collects
-  * those heaps — at most shards × queries × k hits — and merges them per
-  * query with [[TopK]], the reference's caller-side queue merge. So
-  * every call is ONE Spark job, whatever terms it names, and a first
-  * call on a fresh entry two (the stats read, then the eval that
-  * computes and stores the segments). A warm call reads no parquet,
+  * single-stage job evaluates WAND for all queries on every resident
+  * segment: each task derives idf and the θ₀ warm-start from its own
+  * segment's dictionary and returns each (shard, query)'s bounded top-k
+  * heap with its pruning counters. The job is submitted with
+  * `SparkContext.runJob` straight on the resident RDD, its task
+  * function a [[ShardEval]] instance, not a lambda: Spark's
+  * `ClosureCleaner` reads the capturing class's bytecode with ASM for
+  * every lambda on every call, and returns at once on a class that is
+  * not a closure. So a call builds no RDD and cleans no closure. (3)
+  * The driver flattens those heaps — at most shards × queries × k hits —
+  * and merges them per query with [[TopK]], the reference's caller-side
+  * queue merge. So every call is ONE Spark job, whatever terms it names,
+  * and a first call on a fresh entry two (the stats read, then the eval
+  * that computes and stores the segments). A warm call reads no parquet,
   * plans no Catalyst query and shuffles nothing; scaling in docs is
   * scaling in shards.
   *
@@ -349,7 +354,7 @@ object Wand {
   }
 
   /** What a shard-eval task needs besides its segment; it rides the
-    * eval closure, so Spark ships it once per call in the stage's task
+    * [[ShardEval]], so Spark ships it once per call in the stage's task
     * binary. `nDocs` and `avgdl` are merged over the queried snapshots.
     * `snapScale` is the per-snapshot Block-Max bound scale
     * (max(1, merged avgdl / snapshot avgdl) — see [[Cursor]]), keyed by
@@ -357,6 +362,16 @@ object Wand {
     */
   private[index] final case class EvalArgs(queries: Seq[TermQuery], nDocs: Long,
       avgdl: Double, useHints: Boolean, snapScale: Map[Long, Double])
+
+  /** The shard-eval task function: every query of `args` on each
+    * segment of the task's partition. A named class, not a lambda, so
+    * Spark has no closure to clean (see the object doc).
+    */
+  private[index] final class ShardEval(args: EvalArgs)
+      extends ((TaskContext, Iterator[ShardSegment]) => Array[ShardHits]) with Serializable {
+    def apply(ctx: TaskContext, segments: Iterator[ShardSegment]): Array[ShardHits] =
+      segments.flatMap(_.eval(args)).toArray
+  }
 
   /** Batch top-k over a built index (possibly several unmerged
     * snapshots — cursors per segment, doc ranges disjoint per term).
@@ -565,7 +580,8 @@ object Wand {
 
   /** Every (shard, query) heap of one call: the driver resolves the
     * stats of the resident entry, then one single-stage job evaluates
-    * all queries on every resident segment.
+    * all queries on every resident segment: one `runJob` of a
+    * [[ShardEval]] on the resident RDD itself, so the call builds no RDD.
     */
   private def shardHits(spark: SparkSession, indexDir: String,
       snaps: Seq[Long], queries: Seq[TermQuery], useHints: Boolean): Array[ShardHits] = {
@@ -578,7 +594,7 @@ object Wand {
     val snapScale: Map[Long, Double] = e.stats
       .map(s => s.snapshot_id -> math.max(1.0, avgdl / s.avgdl)).toMap
     val args = EvalArgs(queries, nDocs, avgdl, useHints, snapScale)
-    e.segments.mapPartitions(_.flatMap(_.eval(args))).collect()
+    spark.sparkContext.runJob(e.segments, new ShardEval(args)).flatten
   }
 
   /** Temp-index scope for the registry entries: `f` returns a local

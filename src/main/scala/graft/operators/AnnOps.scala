@@ -733,9 +733,10 @@ object AnnOps {
     out
   }
 
-  /** Q17 `optimize_index!` (/root/reference/src/opt.jl:139-235) with
-    * the full goal set — cost functions transcribed from
-    * /root/reference/src/opt.jl:189-206 (`_kfun(x) = 1 − 1/(1+x)`,
+  /** The goal loss shared by every knob family (IVF nprobe, WAND prune
+    * floor, LSH multiprobe, quantization) — the selection half of Q17
+    * `optimize_index!` (the reference's opt.jl:139-235), cost functions
+    * transcribed once from opt.jl:189-206 (`_kfun(x) = 1 − 1/(1+x)`,
     * opt.jl:94):
     *  - MinRecall: cheapest config with recall ≥ target (configs below
     *    target get loss 1 + (target − recall) — always worse than any
@@ -744,14 +745,7 @@ object AnnOps {
     *  - ParetoRadius: argmin kfun(cost) + kfun(radius/maxRadius);
     *  - OptRadius: argmin round(radius/maxRadius/tol), cost tie-break
     *    (the reference's sort_by_best secondary sort, opt.jl:210-218).
-    * Ties always break toward the cheaper config.
-    */
-  def optimizeIvf(spark: SparkSession, sfDir: String, goal: OptGoal,
-      k: Int = 5, nlist: Int = 16): IvfConfig =
-    chooseConfig(evalIvfLadder(spark, sfDir, k, nlist), goal)
-
-  /** The goal loss shared by every knob family (IVF nprobe, WAND prune
-    * floor) — transcribed once from /root/reference/src/opt.jl:189-206.
+    * Ties always break toward the cheaper config ([[chooseBy]]).
     */
   private def goalLoss(goal: OptGoal, recall: Double, cost: Double,
       radius: Double, maxRadius: Double): Double = {

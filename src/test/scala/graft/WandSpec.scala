@@ -331,35 +331,49 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("Spark jobs per call: 2 fresh, 1 warm, 1 on never-seen terms or a 100-query batch") {
     val spark = TestSpark.spark
+    val sc = spark.sparkContext
     // vocabulary for the batch, read before any job is counted
     val vocab = spark.read.parquet(IndexBuilder.IndexPaths(indexDir).termstats(1L))
       .select("term").collect().map(_.getString(0)).sorted.toSeq
+    // one call's rows, the Spark jobs of the call and its collect, and
+    // the RDDs the call itself created: the RDD id counter's advance,
+    // less the probe RDD that reads it
+    def call(qs: Seq[TermQuery]): (Seq[(Int, Int, Long, Double)], Int, Int) = {
+      val ((got, rdds), jobs) = TestSpark.withJobCount {
+        val before = sc.emptyRDD[Int].id
+        val df = Wand.topK(spark, indexDir, Seq(1L), qs)
+        val rdds = sc.emptyRDD[Int].id - before - 1
+        (rows(df), rdds)
+      }
+      (got, jobs, rdds)
+    }
     // a fresh entry: the first call reads the stats, then runs the
     // shard eval (materializing the segments and their dictionaries)
     Wand.release(indexDir)
     val warm = TermQuery(800, Seq("spark", "join", "the"), 10)
-    val (firstRows, firstJobs) =
-      TestSpark.withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(warm))))
-    val (warmRows, warmJobs) =
-      TestSpark.withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(warm))))
+    val (firstRows, firstJobs, _) = call(Seq(warm))
+    val (warmRows, warmJobs, warmRdds) = call(Seq(warm))
     // terms no earlier call named: each shard-eval task resolves idf
     // and θ₀ from its own segment, so there is no lookup job
     val cold = TermQuery(801, Seq("window", "vector", "zzz_never_seen"), 25)
-    val (coldRows, coldJobs) =
-      TestSpark.withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), Seq(cold))))
+    val (coldRows, coldJobs, coldRdds) = call(Seq(cold))
     val named = Set("spark", "join", "the", "window", "vector")
     val rnd = new Random(808)
     val fresh = vocab.filterNot(named) :+ "zzz_never_seen_either"
     val batch = (0 until 100).map(i =>
       TermQuery(2000 + i, rnd.shuffle(fresh).take(1 + rnd.nextInt(3)), 1 + rnd.nextInt(20)))
-    val (batchRows, batchJobs) =
-      TestSpark.withJobCount(rows(Wand.topK(spark, indexDir, Seq(1L), batch)))
+    val (batchRows, batchJobs, batchRdds) = call(batch)
     info(s"Spark jobs per call: first=$firstJobs warm=$warmJobs never-seen terms=$coldJobs " +
-      s"100-query batch=$batchJobs")
+      s"100-query batch=$batchJobs; RDDs created: warm=$warmRdds never-seen terms=$coldRdds " +
+      s"100-query batch=$batchRdds")
     assert(firstJobs == 2, s"first call on a fresh entry ran $firstJobs jobs")
     assert(warmJobs == 1, s"warm single query ran $warmJobs jobs")
     assert(coldJobs == 1, s"never-seen-terms query ran $coldJobs jobs")
     assert(batchJobs == 1, s"100-query batch of never-seen terms ran $batchJobs jobs")
+    // the eval runs on the resident RDD itself: no per-call RDD
+    assert(warmRdds == 0, s"warm single query created $warmRdds RDDs")
+    assert(coldRdds == 0, s"never-seen-terms query created $coldRdds RDDs")
+    assert(batchRdds == 0, s"100-query batch created $batchRdds RDDs")
     val gold = exactRows(TestSpark.Sf0001, Seq(warm))
     assert(gold.nonEmpty && firstRows == gold && warmRows == gold)
     assert(coldRows.nonEmpty && coldRows == exactRows(TestSpark.Sf0001, Seq(cold)))
