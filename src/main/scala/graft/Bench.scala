@@ -32,6 +32,12 @@ object Bench {
   val Inflate = sys.env.getOrElse("SPARK_GRAFT_INFLATE", "100").toInt
   val QueryReps = 3
 
+  /** Cores for the bench and the tool sessions: `SPARK_GRAFT_CPUS`, else
+    * every available processor.
+    */
+  private[graft] val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   private[graft] def mkSession(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
@@ -219,7 +225,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val coresLo = math.max(1, cores / 4)
 
     // ---- representative operator timings at fixture scale — FIRST, in
@@ -239,10 +244,16 @@ object Bench {
       "q65_clean_pipeline", "q66_domain_stats", "q67_wand_asof",
       "q68_linkgraph", "q69_pagerank")
     val queries = scala.collection.mutable.LinkedHashMap[String, Double]()
+    // an op that throws in any rep is reported in failed_ops and kept
+    // out of `queries` and the total: its rep time is not a timing
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     def opOnce(name: String): Unit =
       SparkEntry.queries.get(name).foreach { fn =>
         try fn(spark, sfDir).collect()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name: $e")
+          failed += name
+        }
       }
     opNames.filter(SparkEntry.queries.contains).foreach { name =>
       opOnce(name) // warmup
@@ -261,6 +272,7 @@ object Bench {
     opNames.filter(SparkEntry.queries.contains).foreach { name =>
       rerunIfXRoundSlow(name)(opOnce(name)).foreach(queries(name) = _)
     }
+    failed.foreach(queries.remove)
     // q03 split: the registry q03 builds a fresh index AND queries it in
     // one call — timed together it conflates build throughput with query
     // latency. Here: warmup cycle, then min-of-2 builds and min-of-2
@@ -338,6 +350,8 @@ object Bench {
     val p99 = pq(math.min(pq.length - 1, (pq.length * 99) / 100))
     // N → 4N at the bottom of the ladder (e.g. 2 → 8 cores)
     var (buildL16, wandL16, _, _) = results(levels.head)
+    // below 8 cores the base and lo rungs are one cycle, so their ratio
+    // is 1 by construction and is reported as null
     var buildEffLow = buildL16 / (buildLo * (coresLo.toDouble / levels.head))
     // the gate is a RATIO of two rungs measured minutes apart under
     // drifting VM noise — noise only ever ADDS time, so when the ratio
@@ -421,15 +435,18 @@ object Bench {
     val opsDetail = repLog.map { case (nm, rs) =>
       "\"" + nm + "\":{\"reps\":[" + rs.map(r => f"$r%.3f").mkString(",") + "]" +
         (if (noisyOps(nm)) ",\"noisy\":true" else "") +
-        (if (isXRoundSlow(nm, rs.min)) ",\"xround\":true" else "") + "}"
+        (if (isXRoundSlow(nm, rs.min)) ",\"xround\":true" else "") +
+        (if (failed(nm)) ",\"failed\":true" else "") + "}"
     }.mkString("{", ",", "}")
+    val failedOps = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val effBaseToLo = if (levels.head == coresLo) "null" else f"$buildEffLow%.3f"
     val extra =
       f""""build_docs_per_sec":${nDocs / buildHi}%.1f,"wand_queries_per_sec":${20.0 * 1 / wandHi}%.2f,""" +
         f""""query_p50_sec":$p50%.3f,"query_p99_sec":$p99%.3f,""" +
         f""""scaling":{"cores_lo":$coresLo,"cores_hi":$cores,"build_lo_sec":$buildLo%.3f,"build_hi_sec":$buildHi%.3f,""" +
         f""""wand_lo_sec":$wandLo%.3f,"wand_hi_sec":$wandHi%.3f,"build_efficiency":$buildEff%.3f,"query_efficiency":$queryEff%.3f,""" +
         f""""cores_base":${levels.head},"build_base_sec":$buildL16%.3f,"wand_base_sec":$wandL16%.3f,""" +
-        f""""build_efficiency_base_to_lo":$buildEffLow%.3f},""" +
+        s""""build_efficiency_base_to_lo":$effBaseToLo},""" +
         s""""wand_cost":{"docs_scored":${wandCost._1},"blocks_decoded":${wandCost._2},""" +
         s""""blocks_skipped":${wandCost._3}},""" +
         f""""selective":{"build_sec":${selective._1}%.3f,"query_sec":${selective._2}%.3f,""" +
@@ -445,7 +462,8 @@ object Bench {
     // line; the bulky per-rep evidence goes on its own EARLIER stdout
     // line and, durably, into a sidecar file next to the repo.
     val headline =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,$extra,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
+        s""""failed_ops":$failedOps,$extra,"sf":"$sfDir"}"""
     val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_SIDECAR", "bench_full.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(sidecar),
       s"""{"headline":$headline,"ops_detail":$opsDetail}""" + "\n")

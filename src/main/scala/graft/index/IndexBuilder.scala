@@ -605,26 +605,8 @@ object IndexBuilder {
   private def rawManifest(spark: SparkSession, paths: IndexPaths): Seq[ManifestRow] = {
     import spark.implicits._
     if (!pathExists(spark, paths.manifest)) Seq.empty
-    else try {
-      // manifests persisted before the append-only commit protocol lack
-      // commit_seq/full_commit; under the old Overwrite protocol the
-      // manifest WAS the current view, so uniform (seq 0, full commit)
-      // reproduces it exactly under readManifest's supersede rules (and
-      // the next commit correctly draws seq 1). After that next commit
-      // the dir holds MIXED schemas and the legacy files read as NULL
-      // in these two columns — coalesce covers both shapes. Any OTHER
-      // schema mismatch still propagates as corruption below.
-      // mergeSchema: on a mixed dir the default single-footer schema
-      // pick could LOSE the new columns (zeroing a real commit_seq);
-      // the manifest is numShards-rows tiny, the merge costs nothing.
-      val raw0 = spark.read.option("mergeSchema", "true").parquet(paths.manifest)
-      val raw = Seq("commit_seq" -> lit(0L), "full_commit" -> lit(true))
-        .foldLeft(raw0) { case (df, (c, d)) =>
-          if (df.columns.contains(c)) df.withColumn(c, coalesce(col(c), d))
-          else df.withColumn(c, d)
-        }
-      raw.as[ManifestRow].collect().toSeq
-    } catch {
+    else try spark.read.parquet(paths.manifest).as[ManifestRow].collect().toSeq
+    catch {
       case e: org.apache.spark.sql.AnalysisException
           if Option(e.getCondition).exists(c =>
             c.startsWith("PATH_NOT_FOUND") || c.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
@@ -846,6 +828,13 @@ object IndexBuilder {
 
     val posts = loadPostings(spark, indexDir, inSnaps)
     val norms = loadNorms(spark, indexDir, inSnaps)
+    // merged hints: union the inputs' H-per-term rows, re-top under the
+    // merged avgdl (any subset of docs is a sound θ0 witness set — the
+    // union just keeps the strongest H). Every input's sidecar is
+    // required, and defining the frame checks that it exists, so an
+    // input without one fails here, before anything is written.
+    val hintInputs = inSnaps.map(s => spark.read.schema(Schemas.hints).parquet(paths.hints(s)))
+      .reduce(_ union _)
     val summaries = spark.sparkContext.collectionAccumulator[ShardSummary]("merge summaries")
 
     // decode → dl lookup per shard via SORTED cogroup: Spark sorts each
@@ -926,27 +915,8 @@ object IndexBuilder {
     Seq(SnapStats(outSnap, nDocs, sumDl, avgdl, numShards, maxDoc)).toDS()
       .write.mode(SaveMode.Overwrite).parquet(paths.stats(outSnap))
 
-    // merged hints: union the inputs' H-per-term rows, re-top under the
-    // merged avgdl (any subset of docs is a sound θ0 witness set — the
-    // union just keeps the strongest H). Pre-hints input snapshots have
-    // no sidecar dir (the query path treats that as "no warm start");
-    // merge whatever subset exists rather than failing after the
-    // postings were already written. A sidecar dir that exists is
-    // read, so a corrupt one fails the merge instead of passing as absent.
-    val hintInputs = inSnaps.map(paths.hints).filter(pathExists(spark, _))
-      .map(spark.read.schema(Schemas.hints).parquet(_))
-    if (hintInputs.nonEmpty)
-      topHintsPerTerm(hintInputs.reduce(_ union _), avgdl, hintStrategy)
-        .write.mode(SaveMode.Overwrite).parquet(paths.hints(outSnap))
-    else {
-      // no input has a sidecar: DELETE any stale sidecar a prior merge
-      // left at this outSnap path — hintThetas over witness docs absent
-      // from the new index could exceed the true k-th best score and
-      // unsoundly prune true hits; absent sidecar = "no warm start"
-      val hp = new org.apache.hadoop.fs.Path(paths.hints(outSnap))
-      val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(hp)) fs.delete(hp, true)
-    }
+    topHintsPerTerm(hintInputs, avgdl, hintStrategy)
+      .write.mode(SaveMode.Overwrite).parquet(paths.hints(outSnap))
 
     commitManifest(spark, paths, outSnap, inSnaps.max, None, shardSummaries(summaries))
   }

@@ -254,7 +254,7 @@ object Wand {
 
   /** What the termstats and hints sidecars of a snapshot set say about
     * one term: its global df summed over the snapshots and its distinct
-    * hint rows `(doc_id, tf, dl)` (empty on a pre-hints index).
+    * hint rows `(doc_id, tf, dl)`.
     */
   private[index] final case class TermInfo(df: Long, hints: Array[(Long, Long, Long)])
 
@@ -340,8 +340,7 @@ object Wand {
     * under the merged avgdl), round onto the score grid, and take the
     * k-th largest — a certified lower bound on the k-th best final
     * score for any subset of a query's terms (see the object doc). −∞
-    * (no warm start) with fewer than k hint docs, always so on a
-    * pre-hints index.
+    * (no warm start) with fewer than k hint docs.
     */
   private def hintTheta(terms: Seq[(Array[(Long, Long, Long)], Double)], k: Int,
       avgdl: Double): Double = {
@@ -393,13 +392,10 @@ object Wand {
     * doc for its key and lifecycle): its snapshots' stats on the driver
     * and ONE persisted RDD of [[ShardSegment]]s, one per shard. Memory
     * is bounded by the index's (shard, term) posting lists, not by the
-    * terms queries have named. `noHints` is the θ warm-start latch: some
-    * snapshot had no hints sidecar when the entry was loaded (a
-    * pre-hints index), so the segments carry no hint rows.
+    * terms queries have named.
     */
   private final class Resident(val fingerprint: Seq[(String, Long)],
-      val stats: Seq[IndexBuilder.SnapStats], val noHints: Boolean,
-      val segments: RDD[ShardSegment]) {
+      val stats: Seq[IndexBuilder.SnapStats], val segments: RDD[ShardSegment]) {
     /** Was this entry loaded by `sc`, and is `sc` still running? */
     def liveIn(sc: SparkContext): Boolean = (segments.sparkContext eq sc) && !sc.isStopped
     /** Frees the entry's storage; a stopped context has none left. */
@@ -449,10 +445,11 @@ object Wand {
     * declared schemas: the postings tagged with their snapshot id, the
     * norms, and the dictionary inputs keyed by term — the `(term, shard)`
     * pairs of the postings (a read of those two columns only), termstats
-    * `(term, df)` and, with `hints`, hint rows `(term, doc_id, tf, dl)`.
+    * `(term, df)` and hint rows `(term, doc_id, tf, dl)`. Every sidecar is
+    * required: a missing dir fails here with `PATH_NOT_FOUND`.
     */
-  private[graft] def loadPlans(spark: SparkSession, indexDir: String, snaps: Seq[Long],
-      hints: Boolean): (Dataset[(Long, PostingList)], Dataset[DocNorms], Dataset[(String, Int)],
+  private[graft] def loadPlans(spark: SparkSession, indexDir: String, snaps: Seq[Long])
+      : (Dataset[(Long, PostingList)], Dataset[DocNorms], Dataset[(String, Int)],
       Dataset[(String, Long)], Dataset[(String, Long, Long, Long)]) = {
     import spark.implicits._
     import IndexBuilder.Schemas
@@ -462,12 +459,10 @@ object Wand {
         .reduce(_ union _)
     val posts = snaps.map(s => IndexBuilder.loadPostings(spark, indexDir, Seq(s))
       .map(pl => (s, pl))).reduce(_ union _)
-    val hintRows =
-      if (!hints) spark.emptyDataset[(String, Long, Long, Long)]
-      else read(paths.hints, Schemas.hints, "term", "doc_id", "tf", "dl").as[(String, Long, Long, Long)]
     (posts, IndexBuilder.loadNorms(spark, indexDir, snaps),
       read(paths.postings, Schemas.postings, "term", "shard").as[(String, Int)],
-      read(paths.termstats, Schemas.termstats, "term", "df").as[(String, Long)], hintRows)
+      read(paths.termstats, Schemas.termstats, "term", "df").as[(String, Long)],
+      read(paths.hints, Schemas.hints, "term", "doc_id", "tf", "dl").as[(String, Long, Long, Long)])
   }
 
   /** A new resident entry. Only the stats read runs here (one job); the
@@ -481,12 +476,8 @@ object Wand {
     */
   private def load(spark: SparkSession, indexDir: String, snaps: Seq[Long],
       fp: Seq[(String, Long)]): Resident = {
-    val paths = IndexBuilder.IndexPaths(indexDir)
-    val noHints = !snaps.forall(s => IndexBuilder.pathExists(spark, paths.hints(s)))
-    if (noHints) System.err.println(s"[graft] no hints sidecar for $indexDir " +
-      s"snaps=${snaps.mkString(",")} — θ warm-start disabled")
     val stats = IndexBuilder.loadStats(spark, indexDir, snaps)
-    val (posts, norms, termShards, dfs, hintRows) = loadPlans(spark, indexDir, snaps, !noHints)
+    val (posts, norms, termShards, dfs, hintRows) = loadPlans(spark, indexDir, snaps)
     // shard ids are 0 until num_shards, so hash partitioning by shard
     // puts each shard in its own partition
     val shards = new HashPartitioner(stats.map(_.num_shards).max)
@@ -501,7 +492,7 @@ object Wand {
       .mapPartitions(groups => Iterator(ShardSegment(groups)))
       .setName(s"wand segments $indexDir snaps=${snaps.mkString(",")}")
       .persist(ResidentStorage)
-    new Resident(fp, stats, noHints, segments)
+    new Resident(fp, stats, segments)
   }
 
   /** Unpersist every resident entry of `indexDir`. Only frees memory:
@@ -513,14 +504,6 @@ object Wand {
       resident.remove(k).foreach(_.unpersist())
       loadLocks.remove(k)
     }
-
-  /** Has the θ warm-start been latched off for this snapshot set as
-    * its files are now?
-    */
-  private[graft] def hintsDisabled(spark: SparkSession, indexDir: String,
-      snaps: Seq[Long]): Boolean =
-    resident.get((indexDir, snaps.sorted)).exists(e => e.noHints &&
-      e.liveIn(spark.sparkContext) && e.fingerprint == fingerprint(spark, indexDir, snaps.sorted))
 
   /** One query's pruning counters summed over shards. */
   final case class QueryCost(query_id: Int, docs_scored: Long,
@@ -648,6 +631,23 @@ object Wand {
       topK(spark, idx, Seq(1L))
     }
 
+  /** The q37/q67 ingest: snapshot 1 over the lower half of the corpus'
+    * doc ids (split at the midpoint of 0..max doc_id), then snapshot 2,
+    * parented on 1, over the upper half — commits 1 and 2 of the
+    * manifest.
+    */
+  private def buildHalves(spark: SparkSession, sfDir: String, idx: String,
+      numShards: Int): Unit = {
+    import org.apache.spark.sql.functions.max
+    val maxDoc = graft.corpus.Corpus.documents(spark, sfDir)
+      .agg(max("doc_id")).head().getLong(0)
+    val mid = (maxDoc + 1) / 2
+    IndexBuilder.build(spark, sfDir, idx, numShards, snapshotId = 1L,
+      docIdRange = Some((0L, mid)))
+    IndexBuilder.build(spark, sfDir, idx, numShards, snapshotId = 2L,
+      parentSnapshot = 1L, docIdRange = Some((mid, maxDoc + 1)))
+  }
+
   /** Registry entry for the LOG-STRUCTURED MERGE (the reference's
     * `rebuild` compaction, /root/reference/src/searchgraph/rebuild.jl:17-53):
     * build TWO snapshots over the doc-id halves of the corpus, compact
@@ -658,14 +658,7 @@ object Wand {
     */
   def topKOnMergedCorpus(spark: SparkSession, sfDir: String, numShards: Int = 4): DataFrame =
     withTempIndex("graft-index-merge-") { idx =>
-      import org.apache.spark.sql.functions.max
-      val maxDoc = graft.corpus.Corpus.documents(spark, sfDir)
-        .agg(max("doc_id")).head().getLong(0)
-      val mid = (maxDoc + 1) / 2
-      IndexBuilder.build(spark, sfDir, idx, numShards, snapshotId = 1L,
-        docIdRange = Some((0L, mid)))
-      IndexBuilder.build(spark, sfDir, idx, numShards, snapshotId = 2L,
-        parentSnapshot = 1L, docIdRange = Some((mid, maxDoc + 1)))
+      buildHalves(spark, sfDir, idx, numShards)
       IndexBuilder.mergeSnapshots(spark, idx, Seq(1L, 2L), outSnap = 3L, numShards)
       topK(spark, idx, Seq(3L))
     }
@@ -685,16 +678,6 @@ object Wand {
       topK(spark, idx, Seq(1L))
     }
 
-  /** Registry entry for the log-growth callbacks scheduler
-    * ([[IndexBuilder.maybeCompact]], the reference's
-    * `execute_callbacks!` at callbacks.jl:8-13): an ingest loop of four
-    * doc-range batches where the SCHEDULER decides after each append
-    * whether to compact the live snapshot set (starting=100 so the
-    * fixture sizes cross real log1.5 boundaries — several do at every
-    * SF). Whatever mix of merged and unmerged snapshots the scheduler
-    * leaves live must answer exactly like one full build — the same
-    * exhaustive-BM25 oracle as q03/q37.
-    */
   /** Registry entry for manifest time travel
     * ([[IndexBuilder.snapshotsAsOf]] — the north rule's Iceberg-style
     * snapshot lineage made queryable): ingest two half-corpus
@@ -709,19 +692,22 @@ object Wand {
   def topKAsOfCommit(spark: SparkSession, sfDir: String,
       numShards: Int = 4): DataFrame =
     withTempIndex("graft-index-asof-") { idx =>
-      import org.apache.spark.sql.functions.max
-      val maxDoc = graft.corpus.Corpus.documents(spark, sfDir)
-        .agg(max("doc_id")).head().getLong(0)
-      val mid = (maxDoc + 1) / 2
-      IndexBuilder.build(spark, sfDir, idx, numShards, snapshotId = 1L,
-        docIdRange = Some((0L, mid)))
-      IndexBuilder.build(spark, sfDir, idx, numShards, snapshotId = 2L,
-        parentSnapshot = 1L, docIdRange = Some((mid, maxDoc + 1)))
+      buildHalves(spark, sfDir, idx, numShards)
       val snaps = IndexBuilder.snapshotsAsOf(spark, idx, commitSeq = 1L)
       require(snaps == Seq(1L), s"as-of commit 1 must see snapshot 1 only: $snaps")
       topK(spark, idx, snaps)
     }
 
+  /** Registry entry for the log-growth callbacks scheduler
+    * ([[IndexBuilder.maybeCompact]], the reference's
+    * `execute_callbacks!` at callbacks.jl:8-13): an ingest loop of four
+    * doc-range batches where the SCHEDULER decides after each append
+    * whether to compact the live snapshot set (starting=100 so the
+    * fixture sizes cross real log1.5 boundaries — several do at every
+    * SF). Whatever mix of merged and unmerged snapshots the scheduler
+    * leaves live must answer exactly like one full build — the same
+    * exhaustive-BM25 oracle as q03/q37.
+    */
   def topKOnScheduledIngest(spark: SparkSession, sfDir: String,
       numShards: Int = 4): DataFrame =
     withTempIndex("graft-index-sched-") { idx =>

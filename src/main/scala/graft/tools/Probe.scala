@@ -9,8 +9,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The dev-tool entry point: `runMain graft.tools.Probe <cmd> …`, one
-  * session for the whole command. Cores come from `SPARK_GRAFT_CPUS`,
-  * else every available processor.
+  * session for the whole command, at [[graft.Bench.cores]].
   *
   *  - `time <sfDir> <q1,q2,…> [reps] [factors]`: each registry query
   *    `reps` times (default 2) on each ×factor replicated corpus
@@ -37,14 +36,8 @@ object Probe {
   private val usage: String = "usage: Probe time <sfDir> <q1,q2,...> [reps] [factors] | " +
     "profile <sfDir> <q> | plans <sfDir> <outDir> <suffix> [q...] | dump <sfDir> <q> <outDir>"
 
-  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-    .getOrElse(Runtime.getRuntime.availableProcessors())
-
-  /** The session every tool main runs on: Bench's builder at [[cores]]. */
-  def session(): SparkSession = graft.Bench.mkSession(cores)
-
   def main(args: Array[String]): Unit = {
-    val spark = session()
+    val spark = graft.Bench.mkSession(graft.Bench.cores)
     try run(spark, args) finally spark.stop()
   }
 
@@ -165,7 +158,7 @@ object Probe {
     val ivfF = Files.createTempDirectory("graft-probe-f64-").toString
     try {
       IndexBuilder.build(spark, sfDir, ix, numShards = spark.sparkContext.defaultParallelism)
-      val (posts, norms, termShards, dfs, hints) = Wand.loadPlans(spark, ix, Seq(1L), hints = true)
+      val (posts, norms, termShards, dfs, hints) = Wand.loadPlans(spark, ix, Seq(1L))
       write("wand_load_postings", posts.toDF())
       write("wand_load_norms", norms.toDF())
       write("wand_load_term_shards", termShards.toDF())

@@ -308,49 +308,28 @@ class IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("undecodable manifest PROPAGATES; missing manifest reads empty") {
     val spark = TestSpark.spark
     import spark.implicits._
-    // a manifest dir that EXISTS but doesn't decode to ManifestRow
-    // (here: missing lineage columns — genuinely foreign/corrupt) must
+    // a manifest dir that EXISTS but doesn't decode to ManifestRow must
     // throw, not read as "nothing committed" — the silent-empty reading
     // made resume() full-rebuild a committed index and appended
-    // mixed-schema rows beside the old. (The ONE tolerated schema gap
-    // is the commit_seq/full_commit pair — the legacy-manifest test
-    // below.)
+    // mixed-schema rows beside the old. Two shapes: most lineage
+    // columns missing, and a real build's manifest without only its
+    // commit_seq/full_commit pair
     val dir = tmp()
     Seq((1L, "snap-1-shard-0", 0)).toDF("snapshot_id", "segment_id", "shard")
       .write.parquet(s"$dir/manifest")
-    intercept[org.apache.spark.sql.AnalysisException] {
-      IndexBuilder.readManifest(spark, dir)
-    }
+    val noLineage = tmp()
+    IndexBuilder.build(spark, TestSpark.Sf0001, noLineage, numShards = 2)
+    val stripped = s"${tmp()}/manifest"
+    spark.read.parquet(s"$noLineage/manifest").drop("commit_seq", "full_commit")
+      .write.parquet(stripped)
+    graft.operators.StreamingOps.deleteRec(s"$noLineage/manifest")
+    Files.move(java.nio.file.Paths.get(stripped), java.nio.file.Paths.get(s"$noLineage/manifest"))
+    for (d <- Seq(dir, noLineage))
+      intercept[org.apache.spark.sql.AnalysisException] {
+        IndexBuilder.readManifest(spark, d)
+      }
     // a MISSING manifest is still the clean "nothing committed" state
     assert(IndexBuilder.readManifest(spark, tmp()).isEmpty)
-  }
-
-  test("legacy manifest (no commit_seq/full_commit) stays readable; next commit appends at seq 1") {
-    // manifests written before the append-only commit protocol carried
-    // every lineage column except commit_seq/full_commit, and under the
-    // old Overwrite protocol the file WAS the current view — so uniform
-    // (seq 0, full commit) defaults reproduce it exactly
-    val spark = TestSpark.spark
-    val dir = tmp()
-    IndexBuilder.build(spark, TestSpark.Sf0001, dir, numShards = 2)
-    val legacyPath = s"$dir/manifest_legacy"
-    spark.read.parquet(s"$dir/manifest")
-      .drop("commit_seq", "full_commit").write.parquet(legacyPath)
-    graft.operators.StreamingOps.deleteRec(s"$dir/manifest")
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(legacyPath),
-      new org.apache.hadoop.fs.Path(s"$dir/manifest")))
-    val view = IndexBuilder.readManifest(spark, dir)
-    assert(view.map(_.shard).sorted == Seq(0, 1))
-    assert(view.forall(r => r.commit_seq == 0L && r.full_commit))
-    // resume sees the legacy index as complete — no spurious rebuild
-    assert(IndexBuilder.resume(spark, TestSpark.Sf0001, dir, 2, 1L).isEmpty)
-    // and a fresh in-place rebuild draws seq 1 and supersedes cleanly
-    IndexBuilder.build(spark, TestSpark.Sf0001, dir, numShards = 2)
-    val after = IndexBuilder.readManifest(spark, dir)
-    assert(after.map(_.shard).sorted == Seq(0, 1))
-    assert(after.forall(_.commit_seq == 1L), s"expected seq 1 rows, got $after")
   }
 
   test("log-growth callbacks scheduler: fires exactly at ceil-log boundaries; compaction ≡ full build") {
@@ -423,6 +402,16 @@ class IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     IndexBuilder.mergeSnapshots(spark, dir, Seq(10L), 13L, 4)
     assert(postingsKey(dir, 13L) == postingsKey(dir, 10L), "re-merge is a no-op")
+
+    // every input's hints sidecar is required: a missing one fails the
+    // merge before it writes anything
+    val paths = IndexBuilder.IndexPaths(dir)
+    graft.operators.StreamingOps.deleteRec(paths.hints(3L))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      IndexBuilder.mergeSnapshots(spark, dir, Seq(1L, 3L), 14L, 4)
+    }
+    assert(!Files.exists(java.nio.file.Paths.get(paths.postings(14L))),
+      "a failed merge must not write postings")
   }
 
   test("merge streams many terms per shard (sf0.01, 1 shard ⇒ full vocab in one task)") {

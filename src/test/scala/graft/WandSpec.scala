@@ -435,22 +435,21 @@ class WandSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("pre-hints index (no hints dir): exact results, warm-start latched off until a rebuild") {
+  test("an index missing its hints sidecar fails the load, and a rebuild in place serves exact results again") {
     val spark = TestSpark.spark
-    val d = tmp("graft-wand-prehints-")
+    val d = tmp("graft-wand-nohints-")
     IndexBuilder.build(spark, TestSpark.Sf0001, d, numShards = 4)
-    StreamingOps.deleteRec(IndexBuilder.IndexPaths(d).hints(1L))
-    val (hits, mOn) = Wand.topKWithMetrics(spark, d, Seq(1L), useHints = true)
-    assert(rows(hits) == rows(ExactSearch.topK(spark, TestSpark.Sf0001)))
-    assert(Wand.hintsDisabled(spark, d, Seq(1L)), "a missing hints dir must latch the warm-start off")
-    // latched: asking for the warm-start does exactly the no-hints work
-    val mOff = Wand.topKWithMetrics(spark, d, Seq(1L), useHints = false)._2
-    assert(mOn.collect().toSeq == mOff.collect().toSeq)
-    // a rebuild in place writes the sidecar again and drops the latch
+    val exact = rows(ExactSearch.topK(spark, TestSpark.Sf0001))
+    assert(rows(Wand.topK(spark, d, Seq(1L))) == exact)
+    val hints = IndexBuilder.IndexPaths(d).hints(1L)
+    StreamingOps.deleteRec(hints)
+    // the deletion changes the fingerprint, so the entry loaded above is
+    // not served: the reload finds no sidecar and fails
+    val e = intercept[org.apache.spark.sql.AnalysisException](Wand.topK(spark, d, Seq(1L)))
+    assert(e.getCondition.startsWith("PATH_NOT_FOUND") && e.getMessage.contains(hints),
+      e.getMessage)
     IndexBuilder.build(spark, TestSpark.Sf0001, d, numShards = 4)
-    assert(!Wand.hintsDisabled(spark, d, Seq(1L)))
-    assert(rows(Wand.topK(spark, d, Seq(1L))) == rows(ExactSearch.topK(spark, TestSpark.Sf0001)))
-    assert(!Wand.hintsDisabled(spark, d, Seq(1L)))
+    assert(rows(Wand.topK(spark, d, Seq(1L))) == exact)
   }
 
   test("rebuild in place with different content: the next query is fresh and exact") {
