@@ -17,8 +17,19 @@ comes from the change checkout's BENCHMARK.json. A run that exits
 non-zero, prints no summary or reports incorrect answers is listed, and
 its pair is left out of the statistics. `--out` also writes every run's
 summary as JSON.
+
+Each metric also gets the no-regression verdict against its `bound` in
+BENCHMARK.json: "within bound" when the change's median is no worse than
+the parent's by more than `bound` (a fraction of the parent's median),
+"unresolved" when the parent's quartile spread is wider than `bound`
+(unless every change run beats every parent run), else "regression".
+For `dedup`, it prints each op's median time, parent -> change, from
+the `dedup.op_ms` of each run's record: the newest file in
+<checkout>/perfbench/results named for the run's workload, seed and
+trace.
 """
 import argparse
+import glob
 import json
 import os
 import statistics
@@ -49,6 +60,33 @@ def run(checkout, a, seed):
         return None
 
 
+def op_ms(checkout, a, seed):
+    """Per-op ms of the run's record in `checkout`, or None."""
+    pat = os.path.join(checkout, "perfbench", "results",
+                       f"*-{a.workload}-s{seed}-t{a.trace}-*.json")
+    files = sorted(glob.glob(pat), key=os.path.getmtime)
+    if not files:
+        return None
+    with open(files[-1]) as f:
+        return json.load(f).get(a.workload, {}).get("op_ms")
+
+
+def verdict(ps, sign, bound):
+    """The no-regression verdict for (parent, change) value pairs."""
+    par, chg = [p for p, _ in ps], [c for _, c in ps]
+    pq, cq = quartiles(par), quartiles(chg)
+    worse = -sign * (cq[1] - pq[1]) / pq[1] if pq[1] else float("nan")
+    if min(sign * c for c in chg) > max(sign * p for p in par):
+        return "within bound (every change run beats every parent run)"
+    spread = (pq[2] - pq[0]) / pq[1] if pq[1] else float("inf")
+    if spread > bound:
+        return f"unresolved (parent quartile spread {spread:.1%} > bound {bound:.0%})"
+    if worse > bound:
+        return f"regression (median {worse:.1%} worse > bound {bound:.0%})"
+    return (f"within bound (median {abs(worse):.1%} {'worse' if worse > 0 else 'better'}, "
+            f"bound {bound:.0%})")
+
+
 def quartiles(vals):
     if len(vals) < 2:
         return vals[0], vals[0], vals[0]
@@ -66,12 +104,15 @@ def main():
     ap.add_argument("--out", help="write every run's summary here as JSON")
     a = ap.parse_args()
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
-        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        e2e = json.load(f)["end_to_end"]
+    better = {m["name"]: m["better"] for m in e2e}
+    bound = {m["name"]: m["bound"] for m in e2e}
 
-    pairs, failed = [], []
+    pairs, failed, ops = [], [], []
     for i, seed in enumerate(seeds(a.seeds)):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-        res = {side: run(a.parent if side == "parent" else a.change, a, seed) for side in order}
+        dirs = {"parent": a.parent, "change": a.change}
+        res = {side: run(dirs[side], a, seed) for side in order}
         bad = [s for s in order if res[s] is None or not res[s].get("correct")]
         vals = {s: {m: v["value"] for m, v in res[s]["metrics"].items()}
                 for s in order if res[s] is not None}
@@ -83,6 +124,8 @@ def main():
             failed.append(seed)
         else:
             pairs.append((seed, vals))
+            if a.workload == "dedup":
+                ops.append({side: op_ms(dirs[side], a, seed) or {} for side in order})
     if a.out:
         with open(a.out, "w") as f:
             json.dump({"workload": a.workload, "seconds": a.seconds, "trace": a.trace,
@@ -106,7 +149,17 @@ def main():
               f"change {cq[1]:.4g} ({cq[0]:.4g}-{cq[2]:.4g}), "
               f"change {pct:+.1f}%; change won {wins}/{len(ps)}, "
               f"lost {losses}; gain {'holds' if holds else 'not shown'} "
-              f"(median gap {gain:.4g} vs parent quartile spread {pq[2] - pq[0]:.4g})")
+              f"(median gap {gain:.4g} vs parent quartile spread {pq[2] - pq[0]:.4g}); "
+              f"{verdict(ps, sign, bound[m])}")
+    names = sorted({op for o in ops for side in o.values() for op in side})
+    if names:
+        print(f"\n{a.workload} per-op median ms, parent -> change ({len(ops)} pairs):")
+    for op in names:
+        par = [o["parent"][op] for o in ops if op in o["parent"]]
+        chg = [o["change"][op] for o in ops if op in o["change"]]
+        if par and chg:
+            pm, cm = statistics.median(par), statistics.median(chg)
+            print(f"  {op}: {pm:.0f} -> {cm:.0f} ({100 * (cm - pm) / pm:+.1f}%)")
 
 
 if __name__ == "__main__":

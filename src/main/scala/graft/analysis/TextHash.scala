@@ -1,10 +1,11 @@
 package graft.analysis
 
-/** Deterministic 64-bit hashing for text dedup (minhash permutations,
-  * simhash bit-vectors, rolling fingerprints). Pure JVM arithmetic —
-  * identical on every run and partitioning; never crosses an engine
-  * boundary (LSH/simhash outputs are verified against EXACT similarity
-  * oracles, not against re-hashed values).
+/** Deterministic 64-bit hashing for text dedup and seeded draws:
+  * FNV-1a, the splitmix64 permutation family and MinHash signatures
+  * (q15's SimHash is relational, in `TextOps.simhashSigs`). Pure JVM
+  * arithmetic — identical on every run and partitioning; never crosses
+  * an engine boundary (LSH outputs are verified against EXACT
+  * similarity oracles, not against re-hashed values).
   */
 object TextHash {
 
@@ -42,36 +43,5 @@ object TextHash {
       }
     }
     sig
-  }
-
-  /** SimHash over (token, tf) pairs: bit b is set iff the tf-weighted
-    * sum of ±1 votes from each token-hash bit b is positive.
-    */
-  def simhash64(termFreqs: Iterable[(String, Long)]): Long = {
-    val acc = new Array[Long](64)
-    termFreqs.foreach { case (t, tf) =>
-      val h = fnv1a64(t)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) acc(b) += tf else acc(b) -= tf
-        b += 1
-      }
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) {
-      if (acc(b) > 0) sig |= (1L << b)
-      b += 1
-    }
-    sig
-  }
-
-  /** Polynomial rolling hash of the full token sequence (order
-    * sensitive — a document FINGERPRINT, not a set hash).
-    */
-  def rollingHash(tokens: Iterable[String]): Long = {
-    var h = 0L
-    tokens.foreach { t => h = h * 0x100000001b3L + fnv1a64(t) }
-    h
   }
 }

@@ -19,7 +19,19 @@ object Tokenizer {
 
   /** Token array column from a text column. */
   def tokensCol(text: Column): Column =
-    filter(split(lower(text), " "), t => t =!= lit(""))
+    filter(split(lowerCase(text), " "), t => t =!= lit(""))
+
+  /** `lower`, with valid all-ASCII rows mapped by a plain A–Z
+    * `translate`. Spark's `lower` goes through ICU case mapping, whose
+    * first use in a JVM costs about a second of class and data
+    * loading; ASCII needs none of it. Every other row keeps `lower`:
+    * an invalid byte counts as one byte and one char, so the length
+    * test alone would let `lower` miss replacing it.
+    */
+  private def lowerCase(text: Column): Column =
+    when(is_valid_utf8(text) && octet_length(text) === length(text),
+      translate(text, "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"))
+      .otherwise(lower(text))
 
   /** One document's distinct terms in ascending order with their
     * counts, and its length `dl` (tokens, repeats included).

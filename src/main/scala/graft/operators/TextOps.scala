@@ -552,8 +552,7 @@ object TextOps {
       |FROM t ORDER BY doc_id""".stripMargin
 
   /** Document fingerprint: md5 of the sorted distinct token set (the
-    * cross-engine form) + a rolling order-sensitive 64-bit hash
-    * (JVM-only; excluded from the oracle columns).
+    * cross-engine form, order and repeat blind).
     */
   def fingerprint(spark: SparkSession, sfDir: String): DataFrame =
     docs(spark, sfDir)
@@ -570,16 +569,12 @@ object TextOps {
 
   // ---------------------------------------------------------------- dup clusters
 
-  /** Edge-count ceiling for broadcasting the pair graph. The honest
-    * budget is the broadcast HASH RELATION, not raw field bytes: two
-    * longs become ~24 B of UnsafeRow plus BytesToBytesMap overhead and
-    * a driver-side collect, so 2M edges land near ~100 MB resident on
-    * the driver and every executor — safe even at default driver
-    * sizing. Past the cap the propagation join falls back to a shuffle
-    * join on an edge set hash-partitioned ONCE (see below) — the
-    * duplicate-pair set of a 10^12-doc corpus is corpus-relatively
-    * tiny but absolutely large, the same reasoning as
-    * [[NearDupSeq.BroadcastCapRows]].
+  /** Driver bound on the pair graph, in directed edges (two per
+    * verified pair). The collected pairs, the union-find's map and the
+    * broadcast (doc_id, root) frame all grow with it on the driver. A
+    * duplicate-pair set is corpus-relatively tiny, the same reasoning
+    * as [[NearDupSeq.BroadcastCapRows]]; past the bound
+    * [[dupClustersFrom]] fails rather than exhaust the driver.
     */
   val EdgeBroadcastCap = 2000000L
 
@@ -588,51 +583,51 @@ object TextOps {
     * map to themselves) — the cluster assignment a fuzzy-dedup
     * pipeline groups by to pick one representative per duplicate set.
     *
-    * Iterative min-label propagation: each round joins the edge set
-    * (the VERIFIED near-dup pairs — only the duplicate pairs, never
-    * the corpus) against the current labels and takes the per-doc min
-    * over {own label} ∪ {neighbor labels}. Under [[EdgeBroadcastCap]]
-    * the edge side is broadcast; past it, it is hash-partitioned on
-    * the join key ONCE and checkpointed, so every round's join reuses
-    * that partitioning instead of re-shuffling the multi-GB edge
-    * table per iteration. Converges in O(component diameter) rounds —
-    * web duplicate clusters are shallow (most are 2–3 docs; the
-    * alternating large-star/small-star contraction is the documented
-    * upgrade if diameters ever grow). `localCheckpoint` cuts the
-    * per-round lineage so the plan does not deepen with the iteration
-    * count; each round's checkpoint is released once the next round
-    * has compared against it, and the edge checkpoints once the loop
-    * ends, so a call leaves only the returned labels resident. Round 0
-    * reads `allDocs` as given: checkpointing it would save one doc-id
-    * scan at the price of one eager job per call.
+    * The VERIFIED pairs (only the duplicate pairs, never the corpus)
+    * are collected once and closed by [[componentRoots]] on the
+    * driver; `allDocs`' distinct doc_ids then left-join the broadcast
+    * (doc_id, root) frame, a doc in no pair being its own cluster. A
+    * call persists nothing. More than [[EdgeBroadcastCap]] directed
+    * edges fails loudly with the pair count.
     */
   private[graft] def dupClustersFrom(allDocs: DataFrame, pairs: DataFrame): DataFrame = {
-    val edgesRaw =
-      pairs.select(col("a").cast("long").as("src"), col("b").cast("long").as("dst"))
-        .union(pairs.select(col("b").cast("long").as("src"), col("a").cast("long").as("dst")))
-        .localCheckpoint()
-    val edges =
-      if (edgesRaw.count() <= EdgeBroadcastCap) broadcast(edgesRaw)
-      // checkpoint AFTER the repartition: LogicalRDD keeps the output
-      // partitioning, so the per-round join sees edges pre-clustered
-      // on dst and only ever exchanges the labels side
-      else edgesRaw.repartition(col("dst")).localCheckpoint()
-    val seed = allDocs.select(col("doc_id").cast("long"), col("doc_id").cast("long").as("lbl"))
-    var labels = seed
-    var changed = 1L
-    while (changed > 0) {
-      val prop = edges.join(labels, edges("dst") === labels("doc_id"))
-        .select(col("src").as("doc_id"), col("lbl"))
-      val next = labels.union(prop)
-        .groupBy("doc_id").agg(min("lbl").as("lbl"))
-        .localCheckpoint()
-      changed = next.as("n").join(labels.as("o"), "doc_id")
-        .filter(col("n.lbl") =!= col("o.lbl")).count()
-      if (labels ne seed) unpersistCheckpoint(labels)
-      labels = next
+    val spark = allDocs.sparkSession
+    import spark.implicits._
+    val maxPairs = EdgeBroadcastCap / 2
+    val verified = pairs.select(col("a").cast("long"), col("b").cast("long")).as[(Long, Long)]
+    val local = verified.limit((maxPairs + 1).toInt).collect()
+    if (local.length > maxPairs) {
+      val n = verified.count()
+      throw new IllegalArgumentException(
+        s"dupClusters: $n verified pairs (${2 * n} directed edges) exceed " +
+          s"EdgeBroadcastCap = $EdgeBroadcastCap directed edges")
     }
-    Seq(edgesRaw, edges).foreach(unpersistCheckpoint)
-    labels.select(col("doc_id"), col("lbl").as("cluster_id")).orderBy("doc_id")
+    val roots = componentRoots(local).toSeq.toDF("doc_id", "root")
+    allDocs.select(col("doc_id").cast("long")).distinct()
+      .join(broadcast(roots), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("cluster_id"))
+      .orderBy("doc_id")
+  }
+
+  /** Union-find with path compression over `pairs`: each node that
+    * appears in a pair with the min id of its component. The smaller
+    * root always wins a union, so a root is its component's minimum —
+    * the fixpoint min-label propagation reaches, in one pass.
+    */
+  private[graft] def componentRoots(pairs: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.map(n => (n, find(n)))
   }
 
   /** Registry form: components over the [[minhashLsh]] verified pairs
@@ -1234,9 +1229,8 @@ object TextOps {
     * corpus-relatively tiny (each member is by definition shared by
     * ≥ [[BoilerplateDf]] docs, so it has ≤ lines/df members) but can be
     * absolutely large at 10^12 docs, so it is NOT force-broadcast —
-    * AQE decides, exactly the [[EdgeBroadcastCap]] reasoning. A single
-    * mega-hot line (a site-wide footer) skews only the count aggregate,
-    * which the map-side partials absorb.
+    * AQE decides. A single mega-hot line (a site-wide footer) skews
+    * only the count aggregate, which the map-side partials absorb.
     */
   def lineDedup(spark: SparkSession, sfDir: String): DataFrame =
     lineDedupFrom(Corpus.documents(spark, sfDir)

@@ -78,7 +78,7 @@ object Registry {
     // decisions, checkpoint-resumed across two AvailableNow runs
     "q52_stream_dedup" -> ((s, dir) => graft.operators.StreamingOps.streamDedup(s, dir)),
     // fuzzy-dedup cluster assignment: connected components over the
-    // verified MinHash-LSH pairs via min-label propagation
+    // verified MinHash-LSH pairs via a driver-side union-find
     "q53_dup_clusters" -> ((s, dir) => graft.operators.TextOps.dupClusters(s, dir)),
     // benchmark decontamination: distinct-shingle overlap against the
     // deterministic held-out stride split (broadcast benchmark side)

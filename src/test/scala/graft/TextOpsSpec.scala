@@ -1,6 +1,6 @@
 package graft
 
-import graft.analysis.TextHash
+import graft.analysis.{TextHash, Tokenizer}
 import graft.operators.TextOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -63,10 +63,6 @@ class TextOpsSpec extends AnyFunSuite {
     val sig1 = TextHash.minhashSignature(Seq("a b c", "b c d"), 16).toSeq
     val sig2 = TextHash.minhashSignature(Seq("b c d", "a b c"), 16).toSeq
     assert(sig1 == sig2, "minhash is set-order independent")
-    assert(TextHash.simhash64(Seq("x" -> 3L, "y" -> 1L)) ==
-      TextHash.simhash64(Seq("y" -> 1L, "x" -> 3L)))
-    assert(TextHash.rollingHash(Seq("a", "b")) != TextHash.rollingHash(Seq("b", "a")),
-      "rolling fingerprint is order sensitive")
   }
 
   test("exact dedup: canonical ids are minimal and idempotent") {
@@ -91,9 +87,70 @@ class TextOpsSpec extends AnyFunSuite {
     assert(li.except(again).count() == 0 && again.except(li).count() == 0)
   }
 
-  /** Min-label propagation must close chains transitively (diameter >
-    * 1 forces a second iteration), leave isolated docs as singleton
-    * clusters, and be insensitive to pair orientation.
+  test("tokenizer: ASCII fast path ≡ lower on ASCII, non-ASCII, invalid UTF-8, empty, null") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val bytes = Seq[Array[Byte]](
+      "Hello  WORLD Foo-BAR 42 zZ".getBytes("UTF-8"),
+      "İSTANBUL Straße ΣΑΣ ok".getBytes("UTF-8"),
+      Array(0x41, 0xC3, 0x20, 0x42, 0xFF, 0x43).map(_.toByte), // invalid, mixed widths
+      Array(0x61, 0x80, 0x43, 0x44).map(_.toByte), // lone continuation byte: 1 byte, 1 char
+      Array.emptyByteArray,
+      null)
+    val texts = bytes.zipWithIndex.toDF("b", "i").select(col("i"), col("b").cast("string").as("text"))
+    val got = texts.select(col("i"), Tokenizer.tokensCol(col("text")).as("t"),
+        filter(split(lower(col("text")), " "), t => t =!= lit("")).as("want"))
+      .orderBy("i").collect()
+    assert(got.length == bytes.length)
+    got.foreach(r => assert(r.get(1) == r.get(2), s"row ${r.getInt(0)}: ${r.get(1)} vs ${r.get(2)}"))
+    assert(got(0).getSeq[String](1) == Seq("hello", "world", "foo-bar", "42", "zz"))
+    assert(got(4).getSeq[String](1).isEmpty && got(5).isNullAt(1))
+  }
+
+  /** The cluster kernel: union-find roots against a BFS golden — each
+    * node of a pair maps to the min id of its connected component.
+    */
+  test("components kernel ≡ BFS golden: random graphs, chains, cycles, stars, dup/reversed pairs") {
+    def golden(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+      val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+        .groupMap(_._1)(_._2)
+      var out = Map.empty[Long, Long]
+      for (s <- adj.keys if !out.contains(s)) {
+        var seen = Set(s)
+        var frontier = List(s)
+        while (frontier.nonEmpty) {
+          frontier = frontier.flatMap(adj(_)).filterNot(seen)
+          seen ++= frontier
+        }
+        out ++= seen.map(_ -> seen.min)
+      }
+      out
+    }
+    def check(name: String, pairs: Seq[(Long, Long)]): Unit = {
+      val got = TextOps.componentRoots(pairs.toArray)
+      assert(got.length == got.map(_._1).distinct.length, s"$name: a node listed twice")
+      assert(got.toMap == golden(pairs), name)
+    }
+    val rnd = new scala.util.Random(14)
+    for (seed <- 1 to 20) {
+      val n = 2 + rnd.nextInt(60)
+      val m = rnd.nextInt(2 * n)
+      check(s"random graph $seed ($n nodes, $m pairs)",
+        Seq.fill(m)((rnd.nextInt(n).toLong * 7 + 3, rnd.nextInt(n).toLong * 7 + 3)))
+    }
+    // a chain of diameter 9, ids descending along it and shuffled in order
+    check("chain", rnd.shuffle((1L to 9L).map(i => (100L - i, 99L - i))))
+    check("long chain, ascending", (1L until 5000L).map(i => (i, i + 1)))
+    check("cycle", (0L until 8L).map(i => (10L + i, 10L + (i + 1) % 8)))
+    check("star", (1L to 12L).map(i => (50L, 50L + 3 * i)) ++ Seq((60L, 7L)))
+    check("duplicate and reversed pairs",
+      Seq((5L, 3L), (3L, 5L), (5L, 3L), (8L, 5L), (5L, 8L), (2L, 2L)))
+    assert(TextOps.componentRoots(Array.empty).isEmpty)
+  }
+
+  /** The operator must close chains transitively (5 reaches 1 over two
+    * hops), leave isolated docs as singleton clusters, and be
+    * insensitive to pair orientation.
     */
   private def chainClusters(): org.apache.spark.sql.DataFrame = {
     val spark = TestSpark.spark
@@ -113,17 +170,24 @@ class TextOpsSpec extends AnyFunSuite {
     assert(got == chainWant, s"got $got")
   }
 
-  /** The propagation checkpoints every round and the edge set; only
-    * the last round's labels may stay resident, and the returned plan
-    * must still run after the rest are released.
-    */
-  test("dup clusters release every checkpoint but the returned labels") {
+  test("dup clusters: a call leaves no persistent RDD") {
     val sc = TestSpark.spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val clusters = chainClusters()
     val grown = sc.getPersistentRDDs.keySet -- before
-    assert(grown.size <= 1, s"${grown.size} RDDs left resident by one call")
+    assert(grown.isEmpty, s"${grown.size} RDDs left resident by one call")
     assert(clusters.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == chainWant)
+  }
+
+  test("dup clusters: more than EdgeBroadcastCap directed edges fail loudly") {
+    val spark = TestSpark.spark
+    val pairs = spark.range(TextOps.EdgeBroadcastCap / 2 + 1)
+      .select(col("id").as("a"), (col("id") + 1).as("b"))
+    val e = intercept[IllegalArgumentException] {
+      TextOps.dupClustersFrom(spark.range(3).toDF("doc_id"), pairs)
+    }
+    assert(e.getMessage.contains(s"${TextOps.EdgeBroadcastCap / 2 + 1} verified pairs") &&
+      e.getMessage.contains(s"EdgeBroadcastCap = ${TextOps.EdgeBroadcastCap}"), e.getMessage)
   }
 
   /** Decontamination against the stride-derived benchmark split: the
